@@ -136,8 +136,10 @@ def main(argv=None):
     ps.add_argument("--host", default="127.0.0.1")
     ps.add_argument("--port", type=int, default=8080)
     ps.add_argument("--big", action="store_true",
-                    help="10^12-doc regime: search_big + distributed "
-                         "phrase + k-row display joins, no driver maps")
+                    help="10^12-doc regime: the index served as a "
+                         "federation of one segment (distributed "
+                         "kernels + phrase, k-row display joins, no "
+                         "driver maps)")
     ps.add_argument("--work", default=None,
                     help="streaming work dir: serve the NRT federated "
                          "view (current generation + fresh uncompacted "

@@ -594,13 +594,14 @@ def q_bm25f_topk(spark, sf_dir):
 
 def q_bm25f_big_topk(spark, sf_dir):
     """Field-boosted ranking on the ZERO-DRIVER-ARRAY path
-    (fields.search_big_fielded — VERDICT r4 #1) vs the same two-field
+    (fields.search_big_fielded_federated over the one index — VERDICT r4
+    #1) vs the same two-field
     DuckDB mirror as bm25f_topk; bitwise driver-vs-big equality is
     separately pytest-asserted (tests/test_fields.py)."""
-    from .fields import search_big_fielded
+    from .fields import search_big_fielded_federated
     out = _built_engine_dir(spark, sf_dir)
-    rows = search_big_fielded(spark, out, FIELD_QUERY, k=TOPK,
-                              w_path=FIELD_W, rounded=True)
+    rows = search_big_fielded_federated(spark, [out], FIELD_QUERY, k=TOPK,
+                                        w_path=FIELD_W, rounded=True)
     pdf = [(int(d), r, float(s)) for r, d, s in rows]
     return spark.createDataFrame(pdf, "doc_id long, rank long, score_r double")
 

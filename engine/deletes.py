@@ -156,22 +156,22 @@ def filter_dead(docs_union: DataFrame, aliases: DataFrame | None,
     return live, dead
 
 
-def member_exclusions(spark: SparkSession, services: list,
+def member_exclusions(spark: SparkSession, members: list,
                       tomb: DataFrame | None) -> list | None:
     """Per-segment sorted dead-ORDINAL arrays for the logical (NRT)
     serving path: tombstoned ids resolve to content classes ACROSS the
     federation (the same content may live in several members before the
     merge collapses it), then each member reports the ordinals of its own
     dead docs. Runs at refresh time, never per query; each array ships to
-    that member's queries as a broadcast. services are big-regime
-    SearchService members (persisted _docs_df/_aliases_df). Returns None
+    that member's queries as a broadcast. members are the big regime's
+    member records (server._Member: persisted _docs_df/_aliases_df). Returns None
     when nothing is excluded."""
     if tomb is None:
         return None
     tomb = F.broadcast(tomb)
     sha_parts = []
     id_parts = []
-    for s in services:
+    for s in members:
         if "content_sha256" in s._docs_cols:
             sha_parts.append(
                 dead_sha_frame(s._docs_df, s._aliases_df, tomb))
@@ -197,7 +197,7 @@ def member_exclusions(spark: SparkSession, services: list,
 
     out = []
     any_dead = False
-    for s in services:
+    for s in members:
         conds = []
         docs = s._docs_df
         if shas is not None and "content_sha256" in s._docs_cols:

@@ -43,9 +43,8 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from . import B, K1
 from .checkpoint import BuildManifest
-from .query import SearchEngine
+from .query import SearchEngine, bm25_tfw
 from .tokenizer import query_terms, tokenize_series
 
 #: default path-field weight (a path hit outranks ~2 body hits)
@@ -177,10 +176,8 @@ class FieldedEngine:
                 continue
             tf = tfs[pos_c[mask]].astype(np.float64)
             idf = eng._idf(int(ords.size))
-            # _tfw with the PATH field's length stats
-            tfw = (tf * (K1 + 1.0)) / (
-                tf + K1 * ((1.0 - B) + B * (pl[mask] / self.avg_pl)))
-            out[mask] += idf * tfw
+            # the tf-weight with the PATH field's length stats
+            out[mask] += idf * bm25_tfw(tf, pl[mask], self.avg_pl)
         return out
 
     def search(self, query: str, k: int = 10, rounded: bool = False,
@@ -227,16 +224,13 @@ def load_path_stats(index_dir: str) -> int:
 last_fielded_prune_stats: dict[str, int] = {}
 
 
-def search_big_fielded(spark: SparkSession, index_dir: str, query: str,
+def search_big_fielded(spark: SparkSession, index_df, docs_df, path_df,
+                       path_lens_df, terms: list[str],
+                       bmeta: dict[str, tuple[int, int]],
+                       pmeta: dict[str, tuple[int, int]], weights,
+                       avg_pl: float, pdf_global: dict[str, int],
                        k: int = 10, w_path: float = PATH_WEIGHT,
                        rounded: bool = False, prune: bool = True,
-                       index_df=None, docs_df=None,
-                       path_df=None, path_lens_df=None,
-                       global_stats: tuple[int, float] | None = None,
-                       df_global: dict[str, int] | None = None,
-                       avg_pl_global: float | None = None,
-                       pdf_global: dict[str, int] | None = None,
-                       pmeta_local: dict[str, tuple[int, int]] | None = None,
                        exclude=None,
                        filters: dict[str, str] | None = None,
                        not_terms: list[str] | None = None
@@ -282,19 +276,20 @@ def search_big_fielded(spark: SparkSession, index_dir: str, query: str,
     pruned (dictionary-scale). Bitwise tests assert pruned == unpruned
     == driver engine, and a skew test asserts real skipping.
 
-    global_stats/df_global/avg_pl_global/pdf_global: the federation's
-    corpus-wide weights (search_big_fielded_federated) — same exactness
-    argument as search_big_terms' federated mode, field statistics
+    This is the per-segment kernel of search_big_fielded_federated.
+    weights/avg_pl/pdf_global: the federation's corpus-wide weights —
+    same exactness argument as search_big_terms, field statistics
     included (path dfs and total_plen sum across doc-disjoint segments).
-    exclude: sorted dead-ordinal array/Broadcast (logical deletes) —
-    masked at body decode and anti-joined off the path rows; statistics
-    stay as built (Lucene stats-until-merge)."""
-    import math
-
+    bmeta/pmeta: this segment's own body and path dictionary rows,
+    term -> (df, max_tf), probed once by the caller; segment-local rows
+    drive which terms emit contributions and the pruning geometry
+    (rarest-term choice, candidate-ship gating). exclude: sorted
+    dead-ordinal array/Broadcast (logical deletes) — masked at body
+    decode and anti-joined off the path rows; statistics stay as built
+    (Lucene stats-until-merge)."""
     import pandas as pd
     from pyspark.sql import Observation
 
-    from .index_build import load_stats
     from .query import (
         CANDIDATE_SHIP_LIMIT,
         _big_theta,
@@ -310,58 +305,22 @@ def search_big_fielded(spark: SparkSession, index_dir: str, query: str,
         _plain_topk,
         _rounded_pairs,
         _tfw_zero_dl,
+        bm25_idf,
     )
 
-    terms = query_terms(query)
-    if not terms or k <= 0:
+    if not terms or k <= 0 or weights.n_docs == 0 or (
+            not bmeta and not pmeta):
         return []
-    n_docs, avgdl = (global_stats if global_stats is not None
-                     else load_stats(spark, index_dir))
-    if n_docs == 0:
-        return []
-    if index_df is None:
-        index_df = spark.read.parquet(
-            os.path.join(index_dir, "index"))
-    if docs_df is None:
-        docs_df = spark.read.parquet(os.path.join(index_dir, "docs"))
-    if path_df is None:
-        path_df = spark.read.parquet(ensure_path_index(spark, index_dir))
-    else:
-        ensure_path_index(spark, index_dir)  # path_lens/metrics must exist
-    man = BuildManifest(index_dir)
-    avg_pl = (avg_pl_global if avg_pl_global is not None
-              else load_path_stats(index_dir) / n_docs)
-
-    # ---- per-term statistics (pushdown dictionary probes, k rows each).
-    # df for RANKING comes from the federation overrides when given;
-    # segment-local rows still drive which terms emit contributions and
-    # the pruning geometry (rarest-term choice, candidate-ship gating).
-    bmeta = (index_df.where(F.col("term").isin(terms))
-             .select("term", "df", "max_tf").collect())
-    dfs_b_local = {r["term"]: int(r["df"]) for r in bmeta}
-    max_tf_b = {r["term"]: int(r["max_tf"]) for r in bmeta}
-    dfs_b = dict(dfs_b_local)
-    if df_global is not None:
-        dfs_b = {t: int(df_global.get(t, dfs_b[t])) for t in dfs_b}
-    if pmeta_local is None:
-        # the federated wrapper passes each segment's (df, max_tf) down
-        # (it already probed them for the global path-df sums) so the
-        # serving hot path runs ONE path-dictionary job per segment
-        pmeta_local = {r["term"]: (int(r["df"]), int(r["max_tf"])) for r in
-                       (path_df.where(F.col("term").isin(terms))
-                        .groupBy("term")
-                        .agg(F.count(F.lit(1)).alias("df"),
-                             F.max("tf").alias("max_tf")).collect())}
-    dfs_p_local = {t: dm[0] for t, dm in pmeta_local.items()}
-    max_tf_p = {t: dm[1] for t, dm in pmeta_local.items()}
-    dfs_p = dict(dfs_p_local)
-    if pdf_global is not None:
-        dfs_p = {t: int(pdf_global.get(t, dfs_p[t])) for t in dfs_p}
-    if not dfs_b and not dfs_p:
-        return []
+    avgdl = weights.avgdl
+    dfs_b_local = {t: df for t, (df, _mt) in bmeta.items()}
+    max_tf_b = {t: mt for t, (_df, mt) in bmeta.items()}
+    dfs_b = {t: weights.df[t] for t in bmeta}
+    dfs_p_local = {t: df for t, (df, _mt) in pmeta.items()}
+    max_tf_p = {t: mt for t, (_df, mt) in pmeta.items()}
+    dfs_p = {t: pdf_global[t] for t in pmeta}
 
     def _idf(df: int) -> float:
-        return math.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
+        return bm25_idf(weights.n_docs, df)
 
     ordered = sorted(set(terms))
     tidx = {t: i for i, t in enumerate(ordered)}
@@ -458,8 +417,6 @@ def search_big_fielded(spark: SparkSession, index_dir: str, query: str,
     # ---- path contributions (field 1): plain rows, pure JVM ----
     # (the serving paths pass path_lens_df persisted warm — the per-doc
     # plen table is O(n_docs) rows and must not re-scan per query)
-    if path_lens_df is None:
-        path_lens_df = spark.read.parquet(man.stage_path("path_lens"))
     pl = path_lens_df.select(
         "ordinal", F.col("plen").cast("double").alias("dl"))
     pidf = F.broadcast(spark.createDataFrame(
@@ -548,37 +505,44 @@ def search_big_fielded_federated(spark: SparkSession,
                                  filters: dict[str, str] | None = None,
                                  not_terms: list[str] | None = None
                                  ) -> list[tuple[int, int, float]]:
-    """BM25F over a doc-disjoint federation — rank-identical to
-    search_big_fielded on the merged index (tests assert it): every doc's
-    full fielded score is computable inside its own segment (its body AND
-    path postings live there) provided the WEIGHTS are the federation's:
-    global n_docs/avgdl/df from _federation_weights, global path df =
-    Σ per-segment path dfs, global avg_pl = Σ total_plen / Σ n_docs —
+    """BM25F over a doc-disjoint federation — rank-identical to the
+    fielded ranking of the merged index (tests assert it; a single index
+    is the federation of one): every doc's full fielded score is
+    computable inside its own segment (its body AND path postings live
+    there) provided the WEIGHTS are the federation's: global
+    n_docs/avgdl/df from _federation_weights, global path df = Σ
+    per-segment path dfs, global avg_pl = Σ total_plen / Σ n_docs —
     integer sums over as-built stats, exactly search_big_federated's
     argument extended to the second field. Per-segment top-k under global
-    weights then merges by (score DESC, doc_id ASC)."""
-    from .query import _federation_weights, _merge_federated, query_terms
+    weights then merges by (score DESC, doc_id ASC). path_dfs/
+    path_lens_dfs: per-segment warm frames (else read, the path_index
+    stage ensured first)."""
+    from .query import (
+        _federation_weights,
+        _member_frames,
+        _merge_federated,
+        query_terms,
+    )
 
     terms = query_terms(query)
     if not terms or k <= 0 or not index_dirs:
         return []
-    n_total, avgdl, df_map, idx_dfs = _federation_weights(
-        spark, index_dirs, terms, idx_dfs)
-    if n_total == 0:
+    idx_dfs, docs_dfs = _member_frames(spark, index_dirs, idx_dfs, docs_dfs)
+    w = _federation_weights(index_dirs, terms, idx_dfs)
+    if w.n_docs == 0:
         return []
+    paths = [ensure_path_index(spark, d) for d in index_dirs]
     if path_dfs is None:
-        path_dfs = [spark.read.parquet(ensure_path_index(spark, d))
-                    for d in index_dirs]
-    else:
-        for d in index_dirs:
-            ensure_path_index(spark, d)
-    avg_pl = sum(load_path_stats(d) for d in index_dirs) / n_total
+        path_dfs = [spark.read.parquet(p) for p in paths]
+    if path_lens_dfs is None:
+        path_lens_dfs = [spark.read.parquet(path_lens_parquet(d))
+                         for d in index_dirs]
+    avg_pl = sum(load_path_stats(d) for d in index_dirs) / w.n_docs
     pdf_map: dict[str, int] = {}
     pmetas: list[dict[str, tuple[int, int]]] = []
     for pdf_seg in path_dfs:
         # one path-dictionary probe per segment: (df, max_tf) feeds both
-        # the federation-global df sums AND the per-segment call below
-        # (pmeta_local), instead of each segment re-probing
+        # the federation-global df sums AND the segment's kernel call
         m = {r["term"]: (int(r["df"]), int(r["max_tf"])) for r in
              (pdf_seg.where(F.col("term").isin(terms))
               .groupBy("term").agg(F.count(F.lit(1)).alias("df"),
@@ -588,16 +552,11 @@ def search_big_fielded_federated(spark: SparkSession,
         for t, (df_, _mt) in m.items():
             pdf_map[t] = pdf_map.get(t, 0) + df_
     merged: list[tuple[int, float]] = []
-    for i, d in enumerate(index_dirs):
+    for i, idx in enumerate(idx_dfs):
         for _, doc_id, score in search_big_fielded(
-                spark, d, query, k=k, w_path=w_path, rounded=rounded,
-                prune=prune, index_df=idx_dfs[i],
-                docs_df=docs_dfs[i] if docs_dfs else None,
-                path_df=path_dfs[i],
-                path_lens_df=path_lens_dfs[i] if path_lens_dfs else None,
-                global_stats=(n_total, avgdl), df_global=df_map,
-                avg_pl_global=avg_pl, pdf_global=pdf_map,
-                pmeta_local=pmetas[i],
+                spark, idx, docs_dfs[i], path_dfs[i], path_lens_dfs[i],
+                terms, w.rows[i], pmetas[i], w, avg_pl, pdf_map, k=k,
+                w_path=w_path, rounded=rounded, prune=prune,
                 exclude=excludes[i] if excludes else None,
                 filters=filters, not_terms=not_terms):
             merged.append((doc_id, score))

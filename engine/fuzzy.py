@@ -23,7 +23,9 @@ ONCE from the dictionary and probed with equi-lookups:
 Indexes without the artifact fall back to one length-banded dictionary
 scan with the same verify + rank rule (``expand_fuzzy`` is semantically
 identical either way — test-enforced); ``ensure_fuzzy`` materializes the
-stage for any existing index.
+stage for any existing index. Over a federation (every big-regime query;
+one index is a federation of one) each member answers from its own
+stage or scan, and the bounded candidate sets df-sum on the driver.
 """
 
 from __future__ import annotations
@@ -76,150 +78,120 @@ def ensure_fuzzy(spark: SparkSession, index_dir: str) -> str:
     return man.stage_path("fuzzy")
 
 
-def _rank_cap(df, cap: int) -> list[str]:
-    rows = (df.orderBy(F.col("df").desc(), F.col("term"))
-            .select("term").limit(cap).collect())
-    return sorted(r["term"] for r in rows)
+def _member_candidates(idx, index_dir: str | None, qterms: list[str]):
+    """(qterm, term, df) rows of ONE segment's dictionary terms within edit
+    distance 1 of each query term. With the segment's fuzzy stage built:
+    a pushdown IN over the query terms' deletion keys, broadcast-joined
+    back to their query terms, JVM levenshtein verify on that slice (a
+    term may arrive once per shared key — callers dedupe). Otherwise one
+    length-banded dictionary scan (|len| difference <= 1 is necessary for
+    ED <= 1) broadcast-joined to the query terms."""
+    spark = idx.sparkSession
+    man = BuildManifest(index_dir) if index_dir is not None else None
+    if man is not None and man.is_complete("fuzzy"):
+        keys = [(t, kk) for t in qterms for kk in deletion_keys(t)]
+        qdf = spark.createDataFrame(keys, "qterm string, del_key string")
+        return (spark.read.parquet(man.stage_path("fuzzy"))
+                .where(F.col("del_key").isin(sorted({k for _, k in keys})))
+                .join(F.broadcast(qdf), "del_key")
+                .where(F.levenshtein(F.col("term"), F.col("qterm")) <= 1)
+                .select("qterm", "term", "df"))
+    qdf = spark.createDataFrame([(t,) for t in qterms], "qterm string")
+    lo = min(len(t) for t in qterms) - 1
+    hi = max(len(t) for t in qterms) + 1
+    return (idx.where(F.length("term").between(lo, hi))
+            .select("term", "df")
+            .join(F.broadcast(qdf),
+                  F.levenshtein(F.col("term"), F.col("qterm")) <= 1)
+            .select("qterm", "term", "df"))
+
+
+def _fuzzy_candidates(idx_dfs: list, index_dirs: list | None,
+                      qterms: list[str]) -> dict[str, dict[str, int]]:
+    """qterm -> {candidate term: federation-wide df}: each member's ED<=1
+    candidates (_member_candidates, one job per member), collected and
+    df-summed on the driver — the edit neighbourhood bounds every set,
+    so the union needs no shuffle."""
+    out: dict[str, dict[str, int]] = {}
+    for i, idx in enumerate(idx_dfs):
+        rows = {(r["qterm"], r["term"], int(r["df"])) for r in
+                _member_candidates(
+                    idx, index_dirs[i] if index_dirs else None,
+                    qterms).collect()}
+        for q, t, df in rows:
+            c = out.setdefault(q, {})
+            c[t] = c.get(t, 0) + df
+    return out
+
+
+def _ranked(cands: dict[str, int]) -> list[str]:
+    """The fuzzy/wildcard rank rule: df DESC, term ASC."""
+    return sorted(cands, key=lambda t: (-cands[t], t))
 
 
 def expand_fuzzy(spark: SparkSession, index_dir: str, term: str,
                  index_df=None, cap: int = FUZZY_EXPANSION_CAP
                  ) -> list[str]:
     """Dictionary terms within edit distance 1 of ``term`` (itself
-    included when present), df-ranked and capped like wildcard expansion.
-    Uses the fuzzy stage when built (pushdown IN over |term|+1 deletion
-    keys + JVM levenshtein verify on the candidate slice); otherwise one
-    length-banded dictionary scan with the identical verify + rank rule."""
-    if not term:
-        raise ValueError("empty fuzzy term")
-    man = BuildManifest(index_dir)
-    if man.is_complete("fuzzy"):
-        cand = (spark.read.parquet(man.stage_path("fuzzy"))
-                .where(F.col("del_key").isin(deletion_keys(term)))
-                .where(F.levenshtein(F.col("term"), F.lit(term)) <= 1)
-                .select("term", "df").distinct())
-        return _rank_cap(cand, cap)
+    included when present), df-ranked and capped like wildcard expansion
+    — expand_fuzzy_federated over the one index (fuzzy stage when built,
+    length-banded scan otherwise)."""
     if index_df is None:
         index_df = spark.read.parquet(os.path.join(index_dir, "index"))
-    return expand_fuzzy_scan(index_df, term, cap=cap)
-
-
-def expand_fuzzy_scan(index_df, term: str,
-                      cap: int = FUZZY_EXPANSION_CAP) -> list[str]:
-    """The artifact-free expansion: one dictionary scan, length-banded
-    (|len(t) - len(q)| <= 1 is necessary for ED <= 1) then JVM
-    levenshtein — correct for any index, linear in dictionary size
-    (the fuzzy stage is the scale path; this is the fallback and the
-    federation default, where segments are ephemeral)."""
-    if not term:
-        raise ValueError("empty fuzzy term")
-    n = len(term)
-    cand = (index_df
-            .where(F.length("term").between(n - 1, n + 1))
-            .where(F.levenshtein(F.col("term"), F.lit(term)) <= 1)
-            .select("term", "df"))
-    return _rank_cap(cand, cap)
+    return expand_fuzzy_federated([index_df], term, cap=cap,
+                                  index_dirs=[index_dir])
 
 
 def expand_fuzzy_federated(idx_dfs: list, term: str,
-                           cap: int = FUZZY_EXPANSION_CAP) -> list[str]:
+                           cap: int = FUZZY_EXPANSION_CAP,
+                           index_dirs: list[str] | None = None
+                           ) -> list[str]:
     """Fuzzy expansion over a federation's UNION dictionary — per-segment
     dfs integer-sum to the federation-wide df before the shared rank+cap
-    rule (same summation as wildcard/suggest federation)."""
+    rule (same summation as wildcard/suggest federation). index_dirs lets
+    each member use its fuzzy stage when its manifest marks it complete;
+    without them every member is scanned."""
     if not term:
         raise ValueError("empty fuzzy term")
-    from functools import reduce
-    n = len(term)
-    u = reduce(lambda a, b: a.unionByName(b),
-               [idx.where(F.length("term").between(n - 1, n + 1))
-                .where(F.levenshtein(F.col("term"), F.lit(term)) <= 1)
-                .select("term", "df") for idx in idx_dfs])
-    return _rank_cap(u.groupBy("term").agg(F.sum("df").alias("df")), cap)
+    cands = _fuzzy_candidates(idx_dfs, index_dirs, [term]).get(term, {})
+    return sorted(_ranked(cands)[:cap])
 
 
 # ------------------------------------------------------------- did-you-mean
 
-def _best_per_qterm(cand) -> dict[str, str]:
-    """Deterministic best suggestion per query term: df DESC, term ASC —
-    the same overflow/rank rule as wildcard and fuzzy expansion. The
-    window partitions a tiny post-join candidate frame (<= a few dozen
-    rows per typo), never corpus data."""
-    from pyspark.sql import Window
-    w = (Window.partitionBy("qterm")
-         .orderBy(F.col("df").desc(), F.col("term").asc()))
-    rows = (cand.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1).select("qterm", "term").collect())
-    return {r["qterm"]: r["term"] for r in rows}
-
-
-def _correct_scan(dic_df, missing: list[str]) -> dict[str, str]:
-    """Artifact-free correction: one length-banded dictionary scan
-    broadcast-joined to ALL missing terms at once (|len| difference <= 1
-    is necessary for ED <= 1, so the band prunes the scan)."""
-    spark = dic_df.sparkSession
-    qdf = spark.createDataFrame([(t,) for t in missing], "qterm string")
-    lo = min(len(t) for t in missing) - 1
-    hi = max(len(t) for t in missing) + 1
-    cand = (dic_df.where(F.length("term").between(lo, hi))
-            .select("term", "df")
-            .join(F.broadcast(qdf),
-                  F.levenshtein(F.col("term"), F.col("qterm")) <= 1)
-            .select("qterm", "term", "df"))
-    return _best_per_qterm(cand)
-
-
 def correct_terms(spark: SparkSession, index_dir: str, terms: list[str],
                   index_df=None) -> dict[str, str]:
-    """Spell correction for a query's term list: every term MISSING from
-    the dictionary maps to its best ED<=1 dictionary replacement
-    (df DESC, term ASC); terms the index knows are never second-guessed
-    (the conservative missing-terms-only mode, like Lucene's spellchecker
-    default). One batched job for the whole query: with the fuzzy stage,
-    a pushdown IN over the union of all missing terms' deletion keys +
-    one broadcast join; without it, one length-banded dictionary scan
-    (_correct_scan). Terms with no candidate are absent from the map."""
-    uniq = sorted(set(terms))
-    if not uniq:
-        return {}
+    """Spell correction for a query's term list over one index —
+    correct_terms_federated over ``[index_dir]``."""
     if index_df is None:
         index_df = spark.read.parquet(os.path.join(index_dir, "index"))
-    present = {r["term"] for r in (index_df.where(F.col("term").isin(uniq))
-                                   .select("term").collect())}
-    missing = sorted(set(uniq) - present)
-    if not missing:
-        return {}
-    man = BuildManifest(index_dir)
-    if man.is_complete("fuzzy"):
-        keys = [(t, kk) for t in missing for kk in deletion_keys(t)]
-        qdf = spark.createDataFrame(keys, "qterm string, del_key string")
-        cand = (spark.read.parquet(man.stage_path("fuzzy"))
-                .where(F.col("del_key").isin(sorted({k for _, k in keys})))
-                .join(F.broadcast(qdf), "del_key")
-                .where(F.levenshtein(F.col("term"), F.col("qterm")) <= 1)
-                .select("qterm", "term", "df").distinct())
-        return _best_per_qterm(cand)
-    return _correct_scan(index_df, missing)
+    return correct_terms_federated([index_df], terms,
+                                   index_dirs=[index_dir])
 
 
-def correct_terms_federated(idx_dfs: list, terms: list[str]
+def correct_terms_federated(idx_dfs: list, terms: list[str],
+                            index_dirs: list[str] | None = None
                             ) -> dict[str, str]:
-    """correct_terms over a federation's union dictionary: per-segment
-    dfs integer-sum to federation-wide dfs BEFORE the rank rule, and a
-    term is 'present' if ANY segment knows it (exactly the federated
-    suggest/fuzzy df semantics)."""
-    from functools import reduce
+    """Spell correction: every term MISSING from the (union) dictionary
+    maps to its best ED<=1 dictionary replacement (df DESC, term ASC,
+    federation-wide dfs); a term ANY member knows is never second-guessed
+    (the conservative missing-terms-only mode, like Lucene's
+    spellchecker default). One presence probe and one batched candidate
+    job per member for the whole query (_fuzzy_candidates: fuzzy-stage
+    pushdown when built, length-banded scan otherwise). Terms with no
+    candidate are absent from the map."""
     uniq = sorted(set(terms))
     if not uniq:
         return {}
-    dic = (reduce(lambda a, b: a.unionByName(b),
-                  [idx.select("term", "df") for idx in idx_dfs])
-           .groupBy("term").agg(F.sum("df").alias("df")))
-    present = {r["term"] for r in (dic.where(F.col("term").isin(uniq))
-                                   .select("term").collect())}
+    present: set[str] = set()
+    for idx in idx_dfs:
+        present |= {r["term"] for r in (idx.where(F.col("term").isin(uniq))
+                                        .select("term").collect())}
     missing = sorted(set(uniq) - present)
     if not missing:
         return {}
-    return _correct_scan(dic, missing)
+    return {q: _ranked(c)[0] for q, c in
+            _fuzzy_candidates(idx_dfs, index_dirs, missing).items() if c}
 
 
 def apply_corrections(query_text: str, corrections: dict[str, str]

@@ -23,12 +23,12 @@ Query time is two bounded lookups + one ranked-OR search:
    the true top-(k+1) are the true top-k of the excluded set.
 
 Both serving regimes share steps 1-2 verbatim; step 3 is the engine's
-existing ranked tail (driver-map or zero-driver-array search_big_terms),
+existing ranked tail (driver-map, or search_big_terms_federated in the big
+regime — a single index there is the federation of one),
 so MLT inherits pruning, filters/NOT restriction and rank determinism."""
 
 from __future__ import annotations
 
-import math
 import os
 
 from pyspark.sql import SparkSession
@@ -99,46 +99,16 @@ def _resolve_alias(spark: SparkSession, index_dir: str, doc_id: int) -> int:
 
 
 def mlt_terms(spark: SparkSession, index_dir: str, doc_id: int,
-              index_df=None, m: int = MLT_QUERY_TERMS,
-              n_docs: int | None = None) -> tuple[int, list[str]]:
-    """Steps 1-2 (shared by both regimes): (resolved_doc_id, the top-m
+              index_df=None, m: int = MLT_QUERY_TERMS
+              ) -> tuple[int, list[str]]:
+    """Steps 1-2 over one index (mlt_terms_federated over ``[index_dir]``,
+    the doc_terms stage required): (resolved_doc_id, the top-m
     interesting terms of the doc's stored vector by tf * bm25_idf DESC,
     term ASC). Raises on an unknown doc_id or a missing doc_terms stage."""
-    man = BuildManifest(index_dir)
-    if not man.is_complete("doc_terms"):
-        raise ValueError(
-            "this index has no doc_terms stage — run "
-            "mlt.ensure_doc_terms(spark, index_dir) (one postings-decode "
-            "job) to enable more-like-this")
-    dt = spark.read.parquet(man.stage_path("doc_terms"))
-    vec = dt.where(F.col("doc_id") == doc_id).collect()
-    if not vec:
-        canon = _resolve_alias(spark, index_dir, doc_id)
-        if canon != doc_id:
-            doc_id = canon
-            vec = dt.where(F.col("doc_id") == doc_id).collect()
-    if not vec:
-        raise ValueError(f"unknown doc_id {doc_id}")
-    if index_df is None:
-        index_df = spark.read.parquet(os.path.join(index_dir, "index"))
-    if n_docs is None:
-        from .index_build import load_stats
-        n_docs, _avgdl = load_stats(spark, index_dir)
-    tfs = {r["term"]: int(r["tf"]) for r in vec}
-    dfs = {r["term"]: int(r["df"]) for r in
-           index_df.where(F.col("term").isin(list(tfs)))
-           .select("term", "df").collect()}
-
-    def weight(t: str) -> float:
-        df = dfs.get(t, 0)
-        return tfs[t] * math.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
-
-    ranked = sorted(tfs, key=lambda t: (-weight(t), t))
-    # SELECTION is interestingness-ranked; the returned list is then
-    # term-sorted because scoring must sum contributions in sorted term
-    # order on every path (the engine's bitwise rank-identity discipline —
-    # float addition is not associative)
-    return doc_id, sorted(ranked[:m])
+    return mlt_terms_federated(
+        spark, [index_dir], doc_id,
+        idx_dfs=None if index_df is None else [index_df], m=m,
+        ensure=False)
 
 
 def _drop_source(rows: list[tuple[int, int, float]], doc_id: int, k: int
@@ -170,7 +140,7 @@ def more_like_this(engine, doc_id: int, k: int = 10,
 
 def mlt_terms_federated(spark: SparkSession, index_dirs: list[str],
                         doc_id: int, idx_dfs: list | None = None,
-                        m: int = MLT_QUERY_TERMS
+                        m: int = MLT_QUERY_TERMS, ensure: bool = True
                         ) -> tuple[int, list[str]]:
     """Steps 1-2 over a doc-disjoint federation: the doc's stored vector
     comes from its OWNING segment (doc_terms probes segment by segment,
@@ -179,16 +149,26 @@ def mlt_terms_federated(spark: SparkSession, index_dirs: list[str],
     the same integer sums every federated scorer uses), so the selected
     terms equal mlt_terms on the merged index (the vector is doc-local
     and identical in both; tests assert the end-to-end payload parity).
-    doc_terms stages ensure lazily per segment — NRT segments churn with
-    every compaction, so requiring a manual staging step per segment
-    would make the endpoint unusable; the ensure is one postings-decode
-    job per fresh segment, manifest-cached after that."""
+    ensure=True builds a missing doc_terms stage lazily per segment — NRT
+    segments churn with every compaction, so requiring a manual staging
+    step per segment would make the endpoint unusable; the ensure is one
+    postings-decode job per fresh segment, manifest-cached after that.
+    ensure=False (a static index) raises with the one-liner instead."""
+    from .query import _federation_weights, bm25_idf
     if idx_dfs is None:
         idx_dfs = [spark.read.parquet(os.path.join(d, "index"))
                    for d in index_dirs]
     vec = None
     for d in index_dirs:
-        dt = spark.read.parquet(ensure_doc_terms(spark, d))
+        man = BuildManifest(d)
+        if ensure:
+            ensure_doc_terms(spark, d)
+        elif not man.is_complete("doc_terms"):
+            raise ValueError(
+                "this index has no doc_terms stage — run "
+                "mlt.ensure_doc_terms(spark, index_dir) (one "
+                "postings-decode job) to enable more-like-this")
+        dt = spark.read.parquet(man.stage_path("doc_terms"))
         rows = dt.where(F.col("doc_id") == doc_id).collect()
         if not rows:
             canon = _resolve_alias(spark, d, doc_id)
@@ -204,15 +184,16 @@ def mlt_terms_federated(spark: SparkSession, index_dirs: list[str],
     tfs = {r["term"]: int(r["tf"]) for r in vec}
     # federation-global stats from the ONE summing contract every other
     # federated scorer uses (query._federation_weights) — avgdl unused
-    from .query import _federation_weights
-    n_total, _avgdl, dfs, idx_dfs = _federation_weights(
-        spark, index_dirs, list(tfs), idx_dfs)
+    w = _federation_weights(index_dirs, list(tfs), idx_dfs)
 
     def weight(t: str) -> float:
-        df = dfs.get(t, 0)
-        return tfs[t] * math.log((n_total - df + 0.5) / (df + 0.5) + 1.0)
+        return tfs[t] * bm25_idf(w.n_docs, w.df.get(t, 0))
 
     ranked = sorted(tfs, key=lambda t: (-weight(t), t))
+    # SELECTION is interestingness-ranked; the returned list is then
+    # term-sorted because scoring must sum contributions in sorted term
+    # order on every path (the engine's bitwise rank-identity discipline —
+    # float addition is not associative)
     return doc_id, sorted(ranked[:m])
 
 
@@ -224,40 +205,24 @@ def more_like_this_federated(spark: SparkSession, index_dirs: list[str],
                              docs_dfs: list | None = None,
                              excludes: list | None = None,
                              filters: dict[str, str] | None = None,
-                             not_terms: list[str] | None = None
+                             not_terms: list[str] | None = None,
+                             ensure: bool = True
                              ) -> list[tuple[int, int, float]]:
-    """More-like-this over the NRT federation: federation-weighted
-    interesting-term expansion (mlt_terms_federated), then the shared
+    """More-like-this over a federation (the big regime's only MLT; one
+    index is the federation of one): federation-weighted interesting-term
+    expansion (mlt_terms_federated; ``ensure`` as there), then the shared
     federated ranked tail with k+1 fetch and source-doc drop — equal to
-    more_like_this_big on the merged index (tests assert it)."""
+    the driver regime's more_like_this on the merged index (tests assert
+    it)."""
     from .query import search_big_terms_federated
     if idx_dfs is None:
         idx_dfs = [spark.read.parquet(os.path.join(d, "index"))
                    for d in index_dirs]
     doc_id, terms = mlt_terms_federated(spark, index_dirs, doc_id,
-                                        idx_dfs=idx_dfs, m=m)
+                                        idx_dfs=idx_dfs, m=m, ensure=ensure)
     rows = search_big_terms_federated(spark, index_dirs, terms, k=k + 1,
                                       mode="ranked", rounded=rounded,
                                       idx_dfs=idx_dfs, docs_dfs=docs_dfs,
                                       excludes=excludes, filters=filters,
                                       not_terms=not_terms)
-    return _drop_source(rows, doc_id, k)
-
-
-def more_like_this_big(spark: SparkSession, index_dir: str, doc_id: int,
-                       k: int = 10, m: int = MLT_QUERY_TERMS,
-                       rounded: bool = False, index_df=None, docs_df=None,
-                       filters: dict[str, str] | None = None,
-                       not_terms: list[str] | None = None
-                       ) -> list[tuple[int, int, float]]:
-    """Zero-driver-array MLT: same expansion (bounded lookups), then the
-    shared search_big ranked tail. Bitwise identical to the driver regime
-    (tests assert it)."""
-    from .query import search_big_terms
-    doc_id, terms = mlt_terms(spark, index_dir, doc_id,
-                              index_df=index_df, m=m)
-    rows = search_big_terms(spark, index_dir, terms, k=k + 1, mode="ranked",
-                            rounded=rounded, index_df=index_df,
-                            docs_df=docs_df, filters=filters,
-                            not_terms=not_terms)
     return _drop_source(rows, doc_id, k)

@@ -31,6 +31,7 @@ from __future__ import annotations
 import math
 import os
 from dataclasses import dataclass
+from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import SparkSession
@@ -40,6 +41,18 @@ from . import B, K1
 from .codec import decode_postings
 from .index_build import load_stats
 from .tokenizer import query_terms
+
+
+def bm25_idf(n_docs: int, df: int) -> float:
+    """BM25 idf with the oracle's scalar libm op order (every driver-side
+    scorer calls this one; the JVM column form is _bm25_contrib_col)."""
+    return math.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
+
+
+def bm25_tfw(tf, dl, avgdl: float):
+    """BM25 tf-weight, mirror of Bm25Oracle._tf_weight — elementwise
+    float64 on NumPy arrays, same op order on scalars."""
+    return (tf * (K1 + 1.0)) / (tf + K1 * ((1.0 - B) + B * (dl / avgdl)))
 
 
 @dataclass
@@ -181,14 +194,13 @@ class SearchEngine:
     # ------------------------------------------------------------ BM25 scoring
 
     def _idf(self, df: int) -> float:
-        return math.log((self.n_docs - df + 0.5) / (df + 0.5) + 1.0)
+        return bm25_idf(self.n_docs, df)
 
     def _doc_len_of(self, ordinals: np.ndarray) -> np.ndarray:
         return self._doc_lens[ordinals]
 
     def _tfw(self, tf, dl):
-        # mirror of Bm25Oracle._tf_weight, elementwise float64
-        return (tf * (K1 + 1.0)) / (tf + K1 * ((1.0 - B) + B * (dl / self.avgdl)))
+        return bm25_tfw(tf, dl, self.avgdl)
 
     def _score(self, terms: list[str], postings: dict[str, TermPostings],
                candidates: np.ndarray) -> np.ndarray:
@@ -434,20 +446,9 @@ class SearchEngine:
         cap: the high-df terms are the ones that dominate recall for a
         wildcard; rare long-tail variants are the ones dropped), computed
         as a distributed sort+limit so only cap rows reach the driver.
-        The big path (expand_prefix_big) and the contract oracle apply the
-        identical rule."""
-        if not prefix:
-            raise ValueError("empty wildcard prefix")
-        cap = self.PREFIX_EXPANSION_CAP
-        rows = (self.index_df
-                .where(F.col("term").startswith(prefix))
-                .select("term").limit(cap + 1).collect())
-        if len(rows) > cap:
-            rows = (self.index_df
-                    .where(F.col("term").startswith(prefix))
-                    .orderBy(F.col("df").desc(), F.col("term"))
-                    .select("term").limit(cap).collect())
-        return sorted(r["term"] for r in rows)
+        The rule is expand_prefix_big's, shared with the big path and
+        the contract oracle."""
+        return expand_prefix_big(self.index_df, prefix)
 
     def search_prefix(self, prefix: str, k: int = 10, rounded: bool = False,
                       filters: dict[str, str] | None = None,
@@ -528,70 +529,6 @@ class SearchEngine:
             out[f] = [(str(vals[i]), int(cnts[i])) for i in order]
         return out
 
-    # --------------------------------------------------- distributed scoring
-
-    def search_distributed(self, query: str, k: int = 10,
-                           mode: str = "ranked") -> list[tuple[int, int, float]]:
-        """Same result as ``search`` (bitwise — tests assert it), computed as
-        a Spark job instead of on the driver. This is the path for when a
-        query's candidate set exceeds driver memory (hot single-term queries
-        over 10^12 docs): postings stay partitioned, per-term contributions
-        are computed in Arrow batches, and the per-doc sum runs inside
-        F.aggregate over a sort_array'd (term_idx, contrib) list — i.e. the
-        SAME sorted-term float64 accumulation order as the oracle, which a
-        plain distributed SUM() would not guarantee.
-        """
-        import pandas as pd
-        from pyspark.sql import types as T
-
-        terms = query_terms(query)
-        if not terms:
-            return []
-        postings = self._fetch(terms)  # df/idf come from the driver cache
-        if mode == "conjunctive" and len(postings) < len(terms):
-            return []
-        if not postings:
-            return []
-        term_meta = {t: (i, self._idf(tp.df))
-                     for i, (t, tp) in enumerate(sorted(postings.items()))}
-        n_required = len(postings) if mode == "conjunctive" else 1
-        avgdl, k1, b = self.avgdl, K1, B
-        doc_lens = self._doc_lens  # closure-captured (broadcast by Spark)
-
-        idx = (self.index_df
-               .where(F.col("term").isin(list(postings)))
-               .select("term", "postings"))
-
-        def contribs(batches):
-            for pdf in batches:
-                outs = []
-                for term, blob in zip(pdf["term"], pdf["postings"]):
-                    ti, idf = term_meta[term]
-                    ids, tfs = decode_postings(bytes(blob))
-                    tf = tfs.astype(np.float64)
-                    dl = doc_lens[ids].astype(np.float64)
-                    w = idf * ((tf * (k1 + 1.0))
-                               / (tf + k1 * ((1.0 - b) + b * (dl / avgdl))))
-                    outs.append(pd.DataFrame(
-                        {"ordinal": ids, "term_idx": ti, "contrib": w}))
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-
-        cdf = idx.mapInPandas(
-            contribs, schema="ordinal long, term_idx int, contrib double")
-        scored = (cdf.groupBy("ordinal")
-                  .agg(F.count("*").alias("nt"),
-                       F.aggregate(
-                           F.sort_array(F.collect_list(
-                               F.struct("term_idx", "contrib"))),
-                           F.lit(0.0),
-                           lambda acc, x: acc + x["contrib"]).alias("score"))
-                  .where(F.col("nt") >= n_required))
-        rows = (scored.orderBy(F.col("score").desc(), F.col("ordinal"))
-                .limit(k).collect())
-        return [(i + 1, int(self._ext_ids[r["ordinal"]]), float(r["score"]))
-                for i, r in enumerate(rows)]
-
     # ------------------------------------------- reference TF-IDF (secondary)
 
     def search_tfidf_reference(self, query: str, k: int = 300,
@@ -652,13 +589,14 @@ def search_big(spark: SparkSession, index_dir: str, query: str, k: int = 10,
                not_terms: list[str] | None = None
                ) -> list[tuple[int, int, float]]:
     """Query WITHOUT any driver-side doc arrays — the 10^12-doc serving
-    path. ``SearchEngine`` keeps doc_len/doc_id as driver arrays (the
-    "broadcast lookup tables" — fine up to ~10^8 docs); past that they
-    cannot exist on one machine, so here:
+    path, as the federation of one segment (search_big_federated over
+    ``[index_dir]``). ``SearchEngine`` keeps doc_len/doc_id as driver
+    arrays (the "broadcast lookup tables" — fine up to ~10^8 docs); past
+    that they cannot exist on one machine, so here:
 
     - corpus stats come from the manifest (two scalars);
-    - per-term df/idf from a pushdown scan of just the queried terms' index
-      rows (len(terms) rows collected);
+    - per-term df/max_tf from one pushdown probe of just the queried
+      terms' dictionary rows (len(terms) rows collected);
     - posting blobs decode to (ordinal, term_idx, tf) in Arrow batches and
       JOIN doc_len from the docs table (at scale: co-partitioned on
       ordinal);
@@ -670,11 +608,11 @@ def search_big(spark: SparkSession, index_dir: str, query: str, k: int = 10,
     - the final top-k maps ordinal -> external doc_id via a broadcast join
       of just k rows, not a driver array.
     """
-    terms = query_terms(query)
-    return search_big_terms(spark, index_dir, terms, k=k, mode=mode,
-                            rounded=rounded, prune=prune,
-                            index_df=index_df, docs_df=docs_df,
-                            filters=filters, not_terms=not_terms)
+    return search_big_federated(
+        spark, [index_dir], query, k=k, mode=mode, rounded=rounded,
+        prune=prune, idx_dfs=None if index_df is None else [index_df],
+        docs_dfs=None if docs_df is None else [docs_df],
+        filters=filters, not_terms=not_terms)
 
 
 def _bm25_contrib_col(avgdl: float):
@@ -928,20 +866,28 @@ def _big_theta(index_df, dl, rare_term: str, rare_idf: float, k: int,
     return float(rows[-1]["c"])
 
 
-def search_big_terms(spark: SparkSession, index_dir: str, terms: list[str],
-                     k: int = 10, mode: str = "ranked",
-                     rounded: bool = False, prune: bool = True,
-                     index_df=None, docs_df=None,
-                     global_stats: tuple[int, float] | None = None,
-                     df_global: dict[str, int] | None = None,
-                     exclude=None,
+def search_big_terms(spark: SparkSession, index_df, docs_df,
+                     terms: list[str], meta: dict[str, tuple[int, int]],
+                     weights: FedWeights, k: int = 10,
+                     mode: str = "ranked", rounded: bool = False,
+                     prune: bool = True, exclude=None,
                      filters: dict[str, str] | None = None,
                      not_terms: list[str] | None = None
                      ) -> list[tuple[int, int, float]]:
-    """search_big over an explicit (already-normalized) term list — the
-    shared tail for plain queries and wildcard expansion. Callers serving
-    many queries pass pre-loaded (persisted) index_df/docs_df to skip the
-    per-query parquet re-read (SearchService big regime).
+    """One segment's BM25 top-k over an explicit (already-normalized)
+    term list — the per-segment kernel of search_big_terms_federated,
+    which every big-regime query (plain, wildcard, fuzzy, more-like-this)
+    goes through. index_df/docs_df are the segment's frames (the serving
+    path passes them persisted).
+
+    meta: the segment's own dictionary rows of the query terms,
+    term -> (df, max_tf), and weights: the federation's (n_docs, avgdl,
+    df) — both from _federation_weights' one probe per segment, so the
+    kernel re-probes no query term. Each segment scores its docs with
+    the FEDERATION's BM25 weights so per-segment top-ks merge exactly;
+    segment-local df/max_tf drive the pruning geometry (rarest-term
+    choice, candidate-ship gating) — θ stays a valid lower bound because
+    it is an exact k-th best single-term score under the global weights.
 
     exclude: sorted dead-ordinal array (or its Broadcast — the serving
     path creates ONE per refresh) of LOGICALLY deleted docs
@@ -950,14 +896,6 @@ def search_big_terms(spark: SparkSession, index_dir: str, terms: list[str],
     docs while N/avgdl/df stay as built (Lucene stats-until-merge).
     Block bounds computed from as-built max_tf stay valid upper bounds —
     a dead doc holding the block max only makes pruning conservative.
-
-    global_stats=(n_docs, avgdl) and df_global (term -> corpus-wide df)
-    override this index's own statistics — the federated multi-segment
-    path (search_big_federated): each segment scores its docs with the
-    FEDERATION's BM25 weights so per-segment top-ks merge exactly.
-    Segment-local df/max_tf still drive the pruning geometry (rarest-term
-    choice, candidate-ship gating) — θ stays a valid lower bound because
-    it is an exact k-th best single-term score under the global weights.
 
     Block-max pruning (VERDICT r3 #3) on the ranked path: without it a
     hot-term query moves the term's ENTIRE posting list through the
@@ -1003,25 +941,13 @@ def search_big_terms(spark: SparkSession, index_dir: str, terms: list[str],
     from pyspark.sql import Observation
 
     global last_big_prune_stats
-    n_docs, avgdl = (global_stats if global_stats is not None
-                     else load_stats(spark, index_dir))
-    if not terms or k <= 0:
+    avgdl = weights.avgdl
+    if not terms or k <= 0 or not meta or (
+            mode == "conjunctive" and len(meta) < len(set(terms))):
         return []
-    if index_df is None:
-        index_df = spark.read.parquet(os.path.join(index_dir, "index"))
-    if docs_df is None:
-        docs_df = spark.read.parquet(os.path.join(index_dir, "docs"))
-    meta = (index_df.where(F.col("term").isin(terms))
-            .select("term", "df", "max_tf").collect())
-    if not meta or (mode == "conjunctive" and len(meta) < len(terms)):
-        return []
-    ordered = sorted(r["term"] for r in meta)
-    dfs = {r["term"]: int(r["df"]) for r in meta}  # segment-local (pruning)
-    dfs_rank = ({t: int(df_global.get(t, dfs[t])) for t in dfs}
-                if df_global is not None else dfs)
-    term_meta = {t: (i, math.log((n_docs - dfs_rank[t] + 0.5)
-                                 / (dfs_rank[t] + 0.5) + 1.0))
-                 for i, t in enumerate(ordered)}
+    dfs = {t: df for t, (df, _mt) in meta.items()}  # segment-local
+    term_meta = {t: (i, bm25_idf(weights.n_docs, weights.df[t]))
+                 for i, t in enumerate(sorted(meta))}
     n_required = len(meta) if mode == "conjunctive" else 1
     docs = docs_df
 
@@ -1067,13 +993,12 @@ def search_big_terms(spark: SparkSession, index_dir: str, terms: list[str],
     noness: frozenset[str] = frozenset()    # candidate-gated hot terms
     cand_sorted = None                      # sorted essential ordinals
     if prune and mode == "ranked" and len(meta) >= 2:
-        rare = min(meta, key=lambda r: (int(r["df"]), r["term"]))
-        theta = _big_theta(index_df, dl, rare["term"],
-                           term_meta[rare["term"]][1], k, avgdl,
+        rare = min(meta, key=lambda t: (dfs[t], t))
+        theta = _big_theta(index_df, dl, rare, term_meta[rare][1], k, avgdl,
                            exclude=exclude)
         if theta is not None:
-            ubmax = {r["term"]: term_meta[r["term"]][1]
-                     * _tfw_zero_dl(float(r["max_tf"])) for r in meta}
+            ubmax = {t: term_meta[t][1] * _tfw_zero_dl(float(mt))
+                     for t, (_df, mt) in meta.items()}
             skip_target, noness, cand_sorted = _maxscore_state(
                 spark, index_df, theta, rounded, ubmax, dfs)
 
@@ -1215,88 +1140,69 @@ def _plain_topk(spark, scored, docs, k: int) -> list[tuple[int, int, float]]:
             for i, r in enumerate(rows)]
 
 
-def explain_big(spark: SparkSession, index_dir: str, query: str,
-                doc_id: int, index_df=None, docs_df=None,
-                global_stats: tuple[int, float] | None = None,
-                df_global: dict[str, int] | None = None) -> dict:
-    """SearchEngine.explain WITHOUT driver doc arrays (r5 — the big
-    regime used to refuse /explain): the doc's (ordinal, doc_len) comes
-    from one pushdown doc_id lookup, per-term (df, tf-at-doc) from an
-    Arrow probe over just the queried terms' posting rows (blobs decode
-    on the EXECUTOR, only a (term, df, tf) triple per term reaches the
-    driver), and the breakdown is computed with the driver engine's
-    exact float64 op order — ``total`` is bitwise the score the big path
-    ranks by (tests assert dict equality vs SearchEngine.explain).
-    global_stats/df_global: federation weights (explain over the NRT
-    view must show the score the federation ranks by)."""
+def _doc_term_stats(index_df, terms: list[str], ordinal: int
+                    ) -> dict[str, tuple[int, int, int]]:
+    """term -> (df, max_tf, tf at ``ordinal``) for the query terms one
+    segment knows: an Arrow probe over just their posting rows — blobs
+    decode on the EXECUTOR, one (term, df, max_tf, tf) row per term
+    reaches the driver. The (df, max_tf) part doubles as the segment's
+    dictionary rows for _federation_weights."""
     import pandas as pd
-
-    n_docs, avgdl = (global_stats if global_stats is not None
-                     else load_stats(spark, index_dir))
-    terms = query_terms(query)
-    if index_df is None:
-        index_df = spark.read.parquet(os.path.join(index_dir, "index"))
-    if docs_df is None:
-        docs_df = spark.read.parquet(os.path.join(index_dir, "docs"))
-    drow = (docs_df.where(F.col("doc_id") == int(doc_id))
-            .select("ordinal", "doc_len").collect())
-    if not drow:
-        raise ValueError(f"unknown doc_id {doc_id}")
-    ordinal, dl = int(drow[0]["ordinal"]), float(drow[0]["doc_len"])
 
     def probe(batches):
         for pdf in batches:
             outs = []
-            for term, df_, blob in zip(pdf["term"], pdf["df"],
-                                       pdf["postings"]):
+            for term, df_, mt, blob in zip(pdf["term"], pdf["df"],
+                                           pdf["max_tf"], pdf["postings"]):
                 ids, tfs = decode_postings(bytes(blob))
                 p = int(np.searchsorted(ids, ordinal))
                 tf = (int(tfs[p])
                       if p < ids.size and ids[p] == ordinal else 0)
-                outs.append({"term": term, "df": int(df_), "tf": tf})
+                outs.append({"term": term, "df": int(df_),
+                             "max_tf": int(mt), "tf": tf})
             if outs:
                 yield pd.DataFrame(outs)
 
-    got = {r["term"]: (int(r["df"]), int(r["tf"])) for r in
-           (index_df.where(F.col("term").isin(terms))
-            .select("term", "df", "postings")
-            .mapInPandas(probe,  # df is LongType in the index — at the
-                         # 10^12-doc scale this path serves, a stopword
-                         # df overflows int32
-                         schema="term string, df long, tf int")
-            .collect())} if terms else {}
+    return {r["term"]: (int(r["df"]), int(r["max_tf"]), int(r["tf"]))
+            for r in (index_df.where(F.col("term").isin(terms))
+                      .select("term", "df", "max_tf", "postings")
+                      .mapInPandas(probe,  # df is LongType in the index —
+                                   # at the 10^12-doc scale a stopword df
+                                   # overflows int32
+                                   schema="term string, df long, "
+                                          "max_tf long, tf int")
+                      .collect())}
 
-    def _idf(df: int) -> float:
-        return math.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
 
-    def _tfw(tf, dlv):
-        return (tf * (K1 + 1.0)) / (
-            tf + K1 * ((1.0 - B) + B * (dlv / avgdl)))
-
+def explain_big(query: str, doc_id: int, dl: int,
+                tf_at: dict[str, int], weights: FedWeights) -> dict:
+    """SearchEngine.explain WITHOUT driver doc arrays: the per-term BM25
+    breakdown of one doc (doc_len ``dl``, tf per term ``tf_at`` — from its
+    owning segment's _doc_term_stats probe) under the federation's
+    ``weights``, computed with the driver engine's exact float64 op order
+    — ``score`` is bitwise the score the big path ranks by (tests assert
+    dict equality vs SearchEngine.explain)."""
     total = np.float64(0.0)
     parts = []
-    for t in terms:  # sorted — the engines' accumulation order
-        df_tf = got.get(t)
-        df_rank = (int(df_global.get(t, df_tf[0] if df_tf else 0))
-                   if df_global is not None
-                   else (df_tf[0] if df_tf else 0))
-        # idf keys off the RANKING df (federation-global when federated):
-        # a term the owning segment lacks but another segment knows has
-        # df_rank > 0 and must show its idf exactly like the merged index
-        # would (merged parity is the payload contract); df_rank == 0
-        # (term nowhere in the corpus) -> None, as the driver engine
-        ent = {"term": t, "df": df_rank,
-               "idf": _idf(df_rank) if df_rank > 0 else None,
+    for t in query_terms(query):  # sorted — the engines' accumulation order
+        df = weights.df.get(t, 0)
+        # idf keys off the federation-wide df: a term the owning segment
+        # lacks but another segment knows shows its idf exactly like the
+        # merged index would (merged parity is the payload contract);
+        # df == 0 (term nowhere in the corpus) -> None, as the driver engine
+        ent = {"term": t, "df": df,
+               "idf": bm25_idf(weights.n_docs, df) if df > 0 else None,
                "tf": 0, "contribution": 0.0}
-        if df_tf and df_tf[1] > 0:
-            tf = np.float64(df_tf[1])
-            c = _idf(df_rank) * _tfw(tf, np.float64(dl))
+        tf = tf_at.get(t, 0)
+        if tf > 0:
+            c = bm25_idf(weights.n_docs, df) * bm25_tfw(
+                np.float64(tf), np.float64(dl), weights.avgdl)
             total = total + c
-            ent["tf"] = df_tf[1]
+            ent["tf"] = tf
             ent["contribution"] = float(c)
         parts.append(ent)
     return {"query": query, "doc_id": int(doc_id), "doc_len": int(dl),
-            "n_docs": int(n_docs), "avgdl": float(avgdl),
+            "n_docs": int(weights.n_docs), "avgdl": float(weights.avgdl),
             "k1": K1, "b": B, "score": float(total), "terms": parts}
 
 
@@ -1304,42 +1210,48 @@ def explain_big_federated(spark: SparkSession, index_dirs: list[str],
                           query: str, doc_id: int,
                           idx_dfs: list | None = None,
                           docs_dfs: list | None = None) -> dict:
-    """explain over the NRT federation: the doc's tf/doc_len from its
-    OWNING segment, df/n_docs/avgdl the federation's integer sums — so
-    ``score`` is bitwise the score search_big_terms_federated ranks this
-    doc by."""
+    """explain over a federation: the doc's tf/doc_len from its OWNING
+    segment (one pushdown doc_id lookup per segment until found), df/
+    n_docs/avgdl the federation's integer sums — so ``score`` is bitwise
+    the score search_big_terms_federated ranks this doc by. The owner's
+    tf probe also yields its dictionary rows, so only the other segments
+    run a weights probe (a federation of one runs none)."""
     terms = query_terms(query)
-    n_total, avgdl, df_map, idx_dfs = _federation_weights(
-        spark, index_dirs, terms, idx_dfs)
-    for i, d in enumerate(index_dirs):
-        docs = (docs_dfs[i] if docs_dfs is not None
-                else spark.read.parquet(os.path.join(d, "docs")))
-        if (docs.where(F.col("doc_id") == int(doc_id))
-                .limit(1).count()):
-            return explain_big(spark, d, query, doc_id,
-                               index_df=idx_dfs[i], docs_df=docs,
-                               global_stats=(n_total, avgdl),
-                               df_global=df_map)
-    raise ValueError(f"unknown doc_id {doc_id}")
+    idx_dfs, docs_dfs = _member_frames(spark, index_dirs, idx_dfs, docs_dfs)
+    for i, docs in enumerate(docs_dfs):
+        drow = (docs.where(F.col("doc_id") == int(doc_id))
+                .select("ordinal", "doc_len").collect())
+        if drow:
+            break
+    else:
+        raise ValueError(f"unknown doc_id {doc_id}")
+    got = (_doc_term_stats(idx_dfs[i], terms, int(drow[0]["ordinal"]))
+           if terms else {})
+    weights = _federation_weights(
+        index_dirs, terms, idx_dfs,
+        known={i: {t: (df, mt) for t, (df, mt, _tf) in got.items()}})
+    return explain_big(query, doc_id, int(drow[0]["doc_len"]),
+                       {t: tf for t, (_df, _mt, tf) in got.items()}, weights)
 
 
 def search_big_federated(spark: SparkSession, index_dirs: list[str],
                          query: str, k: int = 10, mode: str = "ranked",
-                         rounded: bool = False, prune: bool = True
+                         rounded: bool = False, prune: bool = True, **kw
                          ) -> list[tuple[int, int, float]]:
     """BM25 top-k over a FEDERATION of doc-disjoint index segments —
     rank-identical to searching the physically merged index, without the
     merge (the Lucene NRT shape: streaming.serving_view hands this the
     [current generation, fresh uncompacted segment] pair so queries see
-    newly ingested docs immediately).
+    newly ingested docs immediately; a single index is the federation of
+    one — search_big).
 
     Exactness: every doc lives in exactly ONE segment (serving_view /
     compact_incremental enforce doc-disjointness), so a doc's full BM25
     score is computable inside its own segment — provided the WEIGHTS are
     the federation's, not the segment's. So: global n_docs = Σ n_docs_i,
     global avgdl = Σ total_len_i / Σ n_docs_i, global df(t) = Σ df_i(t)
-    (disjoint doc sets ⇒ dfs add), each shipped into search_big_terms via
-    global_stats/df_global. Per-segment top-k under those global weights
+    (disjoint doc sets ⇒ dfs add), each shipped into the per-segment
+    search_big_terms. Per-segment top-k under those global weights
     then contains the global top-k's members from that segment, and the
     k×S driver-side merge sorts by (score DESC, doc_id ASC) — identical
     to the merged index's (score DESC, ordinal ASC) because ordinals are
@@ -1348,34 +1260,64 @@ def search_big_federated(spark: SparkSession, index_dirs: list[str],
 
     A term absent from one segment simply contributes nothing there (its
     docs don't contain it); conjunctive mode short-circuits per segment
-    when any query term is missing from that segment's dictionary."""
-    terms = query_terms(query)
-    return search_big_terms_federated(spark, index_dirs, terms, k=k,
-                                      mode=mode, rounded=rounded,
-                                      prune=prune)
+    when any query term is missing from that segment's dictionary.
+    kw: search_big_terms_federated's frame/exclusion/restriction
+    keywords."""
+    return search_big_terms_federated(spark, index_dirs, query_terms(query),
+                                      k=k, mode=mode, rounded=rounded,
+                                      prune=prune, **kw)
 
 
-def _federation_weights(spark, index_dirs: list[str], terms: list[str],
-                        idx_dfs: list | None = None):
-    """Corpus-wide BM25/TF-IDF weights of a doc-disjoint federation:
-    (n_total, avgdl, df_map, idx_dfs). n_docs/total_len are INTEGER sums
-    with one division (bit-identical to the merged index's avgdl); df(t)
-    sums per-segment dfs via one pushdown dictionary probe per segment
-    (O(|terms|) rows each — the same tiny job search_big_terms itself
-    runs for meta)."""
+class FedWeights(NamedTuple):
+    """A doc-disjoint federation's BM25/TF-IDF weights for one query's
+    terms, plus each member's own dictionary rows."""
+    n_docs: int
+    avgdl: float
+    df: dict[str, int]                      # federation-wide df per term
+    rows: list[dict[str, tuple[int, int]]]  # per member: term -> (df, max_tf)
+
+
+def _member_frames(spark, index_dirs: list[str], idx_dfs: list | None,
+                   docs_dfs: list | None) -> tuple[list, list]:
+    """Per-member (index, docs) frames: the caller's warm (persisted)
+    ones, else fresh parquet reads."""
+    if idx_dfs is None:
+        idx_dfs = [spark.read.parquet(os.path.join(d, "index"))
+                   for d in index_dirs]
+    if docs_dfs is None:
+        docs_dfs = [spark.read.parquet(os.path.join(d, "docs"))
+                    for d in index_dirs]
+    return idx_dfs, docs_dfs
+
+
+def _federation_weights(index_dirs: list[str], terms: list[str],
+                        idx_dfs: list, known: dict | None = None
+                        ) -> FedWeights:
+    """Corpus-wide BM25/TF-IDF weights of a doc-disjoint federation.
+    n_docs/total_len are INTEGER sums with one division (bit-identical to
+    the merged index's avgdl); df(t) sums the members' dictionary rows,
+    probed ONCE per member as (term, df, max_tf) — the rows the
+    per-segment kernels prune with, so no kernel probes again. known:
+    {member position: rows} a caller already holds (explain's tf probe
+    yields them), skipping that member's probe."""
     from .index_build import load_stats_totals
     totals = [load_stats_totals(d) for d in index_dirs]
     n_total = sum(n for n, _ in totals)
     avgdl = (sum(t for _, t in totals) / n_total) if n_total else 0.0
-    if idx_dfs is None:
-        idx_dfs = [spark.read.parquet(os.path.join(d, "index"))
-                   for d in index_dirs]
+    known = known or {}
+    rows: list[dict[str, tuple[int, int]]] = []
     df_map: dict[str, int] = {}
-    for idx in idx_dfs:
-        for r in (idx.where(F.col("term").isin(terms))
-                  .select("term", "df").collect()):
-            df_map[r["term"]] = df_map.get(r["term"], 0) + int(r["df"])
-    return n_total, avgdl, df_map, idx_dfs
+    for i, idx in enumerate(idx_dfs):
+        m = known.get(i)
+        if m is None:
+            m = {r["term"]: (int(r["df"]), int(r["max_tf"])) for r in
+                 (idx.where(F.col("term").isin(terms))
+                  .select("term", "df", "max_tf").collect())} \
+                if terms else {}
+        rows.append(m)
+        for t, (df, _mt) in m.items():
+            df_map[t] = df_map.get(t, 0) + df
+    return FedWeights(n_total, avgdl, df_map, rows)
 
 
 def _merge_federated(per: list[tuple[int, float]], k: int
@@ -1400,7 +1342,7 @@ def search_big_terms_federated(spark: SparkSession, index_dirs: list[str],
                                ) -> list[tuple[int, int, float]]:
     """search_big_federated over an explicit term list (see there).
     idx_dfs/docs_dfs: per-segment pre-loaded (persisted) frames — the
-    federated serving warm path. excludes: per-segment dead-ordinal
+    serving warm path. excludes: per-segment dead-ordinal
     arrays/Broadcasts (logical deletes, deletes.member_exclusions) —
     exclusion inside each segment's top-k keeps the k×S merge exact over
     the surviving docs; the federation weights stay as built (Lucene
@@ -1410,19 +1352,17 @@ def search_big_terms_federated(spark: SparkSession, index_dirs: list[str],
     because every doc lives in exactly one segment."""
     if not terms or k <= 0 or not index_dirs:
         return []
-    n_total, avgdl, df_map, idx_dfs = _federation_weights(
-        spark, index_dirs, terms, idx_dfs)
-    if n_total == 0:
+    idx_dfs, docs_dfs = _member_frames(spark, index_dirs, idx_dfs, docs_dfs)
+    w = _federation_weights(index_dirs, terms, idx_dfs)
+    if w.n_docs == 0:
         return []
-    if mode == "conjunctive" and len(df_map) < len(set(terms)):
+    if mode == "conjunctive" and len(w.df) < len(set(terms)):
         return []
     merged: list[tuple[int, float]] = []
-    for i, (d, idx) in enumerate(zip(index_dirs, idx_dfs)):
+    for i, idx in enumerate(idx_dfs):
         for _, doc_id, score in search_big_terms(
-                spark, d, terms, k=k, mode=mode, rounded=rounded,
-                prune=prune, index_df=idx,
-                docs_df=docs_dfs[i] if docs_dfs else None,
-                global_stats=(n_total, avgdl), df_global=df_map,
+                spark, idx, docs_dfs[i], terms, w.rows[i], w, k=k,
+                mode=mode, rounded=rounded, prune=prune,
                 exclude=excludes[i] if excludes else None,
                 filters=filters, not_terms=not_terms):
             merged.append((doc_id, score))
@@ -1447,40 +1387,32 @@ def search_big_tfidf_federated(spark: SparkSession, index_dirs: list[str],
     terms = query_terms(query)
     if not terms or k <= 0 or not index_dirs:
         return []
-    n_total, avgdl, df_map, idx_dfs = _federation_weights(
-        spark, index_dirs, terms, idx_dfs)
-    if n_total == 0 or not df_map:
+    idx_dfs, docs_dfs = _member_frames(spark, index_dirs, idx_dfs, docs_dfs)
+    w = _federation_weights(index_dirs, terms, idx_dfs)
+    if w.n_docs == 0 or not w.df:
         return []
     merged: list[tuple[int, float]] = []
-    for i, (d, idx) in enumerate(zip(index_dirs, idx_dfs)):
+    for i, idx in enumerate(idx_dfs):
         for _, doc_id, score in search_big_tfidf(
-                spark, d, query, k=k, threshold=threshold, index_df=idx,
-                docs_df=docs_dfs[i] if docs_dfs else None,
-                global_stats=(n_total, avgdl), df_global=df_map,
+                spark, idx, docs_dfs[i], terms, w.rows[i], w, k=k,
+                threshold=threshold,
                 exclude=excludes[i] if excludes else None,
                 filters=filters, not_terms=not_terms):
             merged.append((doc_id, score))
     return _merge_federated(merged, k)
 
 
-def expand_prefix_federated(idx_dfs: list, prefix: str) -> list[str]:
-    """Wildcard expansion over a federation's UNION dictionary — same
-    semantics as the single-index rule (shared cap; past it, the cap
-    highest-df terms where df is the CORPUS-WIDE sum), so the expansion
-    equals expand_prefix on the merged index."""
-    if not prefix:
-        raise ValueError("empty wildcard prefix")
+def union_dictionary(idx_dfs: list):
+    """(term, df) over a federation's UNION dictionary: per-segment dfs
+    integer-sum to the federation-wide df (doc-disjoint segments, stats
+    as built — the summation every federated scorer weights by). One
+    segment is its own dictionary, read without a shuffle."""
+    if len(idx_dfs) == 1:
+        return idx_dfs[0].select("term", "df")
     from functools import reduce
-    cap = SearchEngine.PREFIX_EXPANSION_CAP
-    u = reduce(lambda a, b: a.unionByName(b),
-               [idx.where(F.col("term").startswith(prefix))
-                .select("term", "df") for idx in idx_dfs])
-    rows = u.select("term").distinct().limit(cap + 1).collect()
-    if len(rows) > cap:
-        rows = (u.groupBy("term").agg(F.sum("df").alias("df"))
-                .orderBy(F.col("df").desc(), F.col("term"))
-                .select("term").limit(cap).collect())
-    return sorted(r["term"] for r in rows)
+    return (reduce(lambda a, b: a.unionByName(b),
+                   [idx.select("term", "df") for idx in idx_dfs])
+            .groupBy("term").agg(F.sum("df").alias("df")))
 
 
 def search_big_prefix_federated(spark: SparkSession, index_dirs: list[str],
@@ -1492,57 +1424,16 @@ def search_big_prefix_federated(spark: SparkSession, index_dirs: list[str],
                                 filters: dict[str, str] | None = None,
                                 not_terms: list[str] | None = None
                                 ) -> list[tuple[int, int, float]]:
-    """Wildcard `prefix*` over a federation (see expand_prefix_federated /
-    search_big_terms_federated)."""
-    if idx_dfs is None:
-        idx_dfs = [spark.read.parquet(os.path.join(d, "index"))
-                   for d in index_dirs]
-    terms = expand_prefix_federated(idx_dfs, prefix)
+    """Wildcard `prefix*` over a federation: the expansion rule of
+    expand_prefix_big over the union dictionary (so it equals the merged
+    index's expansion — past the cap, the highest CORPUS-WIDE dfs win),
+    then the shared federated ranked-OR tail."""
+    idx_dfs, docs_dfs = _member_frames(spark, index_dirs, idx_dfs, docs_dfs)
+    terms = expand_prefix_big(union_dictionary(idx_dfs), prefix)
     return search_big_terms_federated(spark, index_dirs, terms, k=k,
                                       rounded=rounded, idx_dfs=idx_dfs,
                                       docs_dfs=docs_dfs, excludes=excludes,
                                       filters=filters, not_terms=not_terms)
-
-
-def search_big_prefix(spark: SparkSession, index_dir: str, prefix: str,
-                      k: int = 10, rounded: bool = False,
-                      index_df=None, docs_df=None,
-                      filters: dict[str, str] | None = None,
-                      not_terms: list[str] | None = None
-                      ) -> list[tuple[int, int, float]]:
-    """Wildcard `prefix*` on the zero-driver-array path: the expansion is
-    a pushdown StringStartsWith scan of the term dictionary capped at
-    PREFIX_EXPANSION_CAP rows (<= 65 strings to the driver — not a doc
-    array), then the shared search_big ranked-OR tail. Same semantics and
-    errors as SearchEngine.search_prefix (tests assert equality)."""
-    if not prefix:
-        raise ValueError("empty wildcard prefix")
-    if index_df is None:
-        index_df = spark.read.parquet(os.path.join(index_dir, "index"))
-    terms = expand_prefix_big(index_df, prefix)
-    return search_big_terms(spark, index_dir, terms, k=k, mode="ranked",
-                            rounded=rounded, index_df=index_df,
-                            docs_df=docs_df, filters=filters,
-                            not_terms=not_terms)
-
-
-def search_big_fuzzy(spark: SparkSession, index_dir: str, term: str,
-                     k: int = 10, rounded: bool = False,
-                     index_df=None, docs_df=None,
-                     filters: dict[str, str] | None = None,
-                     not_terms: list[str] | None = None
-                     ) -> list[tuple[int, int, float]]:
-    """Fuzzy `term~` on the zero-driver-array path: the ED<=1 expansion is
-    a pushdown deletion-key lookup (or dictionary scan fallback) capped at
-    FUZZY_EXPANSION_CAP terms to the driver, then the shared search_big
-    ranked-OR tail. Semantics identical to SearchEngine.search_fuzzy
-    (tests assert bitwise equality)."""
-    from .fuzzy import expand_fuzzy
-    terms = expand_fuzzy(spark, index_dir, term, index_df=index_df)
-    return search_big_terms(spark, index_dir, terms, k=k, mode="ranked",
-                            rounded=rounded, index_df=index_df,
-                            docs_df=docs_df, filters=filters,
-                            not_terms=not_terms)
 
 
 def search_big_fuzzy_federated(spark: SparkSession, index_dirs: list[str],
@@ -1555,12 +1446,11 @@ def search_big_fuzzy_federated(spark: SparkSession, index_dirs: list[str],
                                not_terms: list[str] | None = None
                                ) -> list[tuple[int, int, float]]:
     """Fuzzy `term~` over a federation: ED<=1 expansion on the union
-    dictionary (df sums), then the shared federated ranked-OR tail."""
+    dictionary (df sums; each member's candidates from its fuzzy stage
+    when built), then the shared federated ranked-OR tail."""
     from .fuzzy import expand_fuzzy_federated
-    if idx_dfs is None:
-        idx_dfs = [spark.read.parquet(os.path.join(d, "index"))
-                   for d in index_dirs]
-    terms = expand_fuzzy_federated(idx_dfs, term)
+    idx_dfs, docs_dfs = _member_frames(spark, index_dirs, idx_dfs, docs_dfs)
+    terms = expand_fuzzy_federated(idx_dfs, term, index_dirs=index_dirs)
     return search_big_terms_federated(spark, index_dirs, terms, k=k,
                                       rounded=rounded, idx_dfs=idx_dfs,
                                       docs_dfs=docs_dfs, excludes=excludes,
@@ -1568,8 +1458,12 @@ def search_big_fuzzy_federated(spark: SparkSession, index_dirs: list[str],
 
 
 def expand_prefix_big(index_df, prefix: str) -> list[str]:
-    """Wildcard expansion on the big path — same semantics as
-    SearchEngine.expand_prefix (shared cap + df-ranked overflow rule)."""
+    """Wildcard expansion over a (term, df) dictionary frame — the one
+    rule (SearchEngine.expand_prefix's docstring) every regime applies:
+    up to PREFIX_EXPANSION_CAP matching terms, past it the cap
+    highest-df ones (df DESC, term ASC)."""
+    if not prefix:
+        raise ValueError("empty wildcard prefix")
     cap = SearchEngine.PREFIX_EXPANSION_CAP
     rows = (index_df.where(F.col("term").startswith(prefix))
             .select("term").limit(cap + 1).collect())
@@ -1696,39 +1590,26 @@ def suggest_terms(index_df, prefix: str, k: int = 8
 
 def suggest_terms_federated(idx_dfs: list, prefix: str, k: int = 8
                             ) -> list[tuple[str, int]]:
-    """Autocomplete over a federation's UNION dictionary: per-segment dfs
-    integer-sum to the federation-wide df (doc-disjoint segments, stats
-    as built — the same summation search_big_federated weights by), then
-    the same (df DESC, term ASC) top-k as the single-index rule."""
-    if not prefix:
-        raise ValueError("empty suggest prefix")
-    if k <= 0:
-        return []
-    from functools import reduce
-    u = reduce(lambda a, b: a.unionByName(b),
-               [idx.where(F.col("term").startswith(prefix))
-                .select("term", "df") for idx in idx_dfs])
-    rows = (u.groupBy("term").agg(F.sum("df").alias("df"))
-            .orderBy(F.col("df").desc(), F.col("term"))
-            .limit(k).collect())
-    return [(r["term"], int(r["df"])) for r in rows]
+    """Autocomplete over a federation's union dictionary
+    (union_dictionary's df sums), same (df DESC, term ASC) top-k rule."""
+    return suggest_terms(union_dictionary(idx_dfs), prefix, k=k)
 
 
-def search_big_tfidf(spark: SparkSession, index_dir: str, query: str,
-                     k: int = 300, threshold: float = 0.3,
-                     index_df=None, docs_df=None,
-                     global_stats: tuple[int, float] | None = None,
-                     df_global: dict[str, int] | None = None,
-                     exclude=None,
+def search_big_tfidf(spark: SparkSession, index_df, docs_df,
+                     terms: list[str], meta: dict[str, tuple[int, int]],
+                     weights: FedWeights, k: int = 300,
+                     threshold: float = 0.3, exclude=None,
                      filters: dict[str, str] | None = None,
                      not_terms: list[str] | None = None
                      ) -> list[tuple[int, int, float]]:
-    """The reference's TF-IDF scoring (Searcher.java:108,113,139-159,196)
-    on the zero-driver-array path — bitwise equal to
+    """One segment's share of the reference's TF-IDF scoring
+    (Searcher.java:108,113,139-159,196) on the zero-driver-array path —
+    the per-segment kernel of search_big_tfidf_federated, bitwise equal to
     SearchEngine.search_tfidf_reference (tests assert it):
 
-    - per-term idf = log10(N/df) from the manifest scalar + a pushdown
-      df scan (len(terms) rows);
+    - per-term idf = log10(N/df) from the federation's ``weights``;
+      ``meta`` (the segment's own dictionary rows, from the same probe)
+      says which terms this segment holds;
     - (1 + log10 tf) * idf computed with NumPy INSIDE the Arrow decode
       step (the same np.log10 the driver path uses — shipping the log to
       the JVM could differ in the last ulp across libm implementations);
@@ -1737,27 +1618,12 @@ def search_big_tfidf(spark: SparkSession, index_dir: str, query: str,
       concatenation order, which is exactly this fold order;
     - score > threshold, top-k via distributed sort+limit, doc_id via the
       k-row broadcast join."""
-    import math as _math
-
     import pandas as pd
 
-    n_docs, _avgdl = (global_stats if global_stats is not None
-                      else load_stats(spark, index_dir))
-    terms = query_terms(query)
-    if not terms or k <= 0:
+    if not terms or k <= 0 or not meta:
         return []
-    if index_df is None:
-        index_df = spark.read.parquet(os.path.join(index_dir, "index"))
-    meta = (index_df.where(F.col("term").isin(terms))
-            .select("term", "df").collect())
-    if not meta:
-        return []
-    ordered = sorted(r["term"] for r in meta)
-    dfs = {r["term"]: int(r["df"]) for r in meta}
-    if df_global is not None:   # federated: corpus-wide idf (see
-        dfs = {t: int(df_global.get(t, dfs[t])) for t in dfs}  # federated fn)
-    term_meta = {t: (i, _math.log10(n_docs / dfs[t]))
-                 for i, t in enumerate(ordered)}
+    term_meta = {t: (i, math.log10(weights.n_docs / weights.df[t]))
+                 for i, t in enumerate(sorted(meta))}
 
     def contribs(batches):
         exc = _excl_value(exclude)
@@ -1785,23 +1651,14 @@ def search_big_tfidf(spark: SparkSession, index_dir: str, query: str,
                   F.lit(0.0),
                   lambda acc, x: acc + x["contrib"]).alias("score"))
               .where(F.col("score") > threshold))
-    docs = (docs_df if docs_df is not None
-            else spark.read.parquet(os.path.join(index_dir, "docs")))
     # result-set restriction (stats as built; tf-idf has no pruning, so
     # plain semi/anti joins are exact — both stay fully distributed)
     if filters:
         scored = scored.join(
-            docs.where(_filters_col(filters, docs.columns))
+            docs_df.where(_filters_col(filters, docs_df.columns))
             .select("ordinal"), "ordinal", "leftsemi")
     if not_terms:
         scored = scored.join(
             _ordinals_frame(index_df, sorted(set(not_terms))),
             "ordinal", "left_anti")
-    top = (scored.orderBy(F.col("score").desc(), F.col("ordinal"))
-           .limit(k).select("ordinal", "score"))
-    rows = (F.broadcast(top)
-            .join(docs.select("ordinal", "doc_id"), "ordinal")
-            .orderBy(F.col("score").desc(), F.col("ordinal"))
-            .collect())
-    return [(i + 1, int(r["doc_id"]), float(r["score"]))
-            for i, r in enumerate(rows)]
+    return _plain_topk(spark, scored, docs_df, k)

@@ -174,11 +174,12 @@ def main() -> None:
     # (MaxScore + path upper bound), bitwise equal to the driver engine
     from engine import fields as FD
     t0 = time.time()
-    rfb = FD.search_big_fielded(spark, out, "def mod777 return", k=10)
+    rfb = FD.search_big_fielded_federated(spark, [out], "def mod777 return",
+                                          k=10)
     res["bm25f_big_query_s"] = round(time.time() - t0, 3)
     assert rfb == rf2
     t0 = time.time()
-    rfb2 = FD.search_big_fielded(spark, out, hot_rare, k=10)
+    rfb2 = FD.search_big_fielded_federated(spark, [out], hot_rare, k=10)
     res["bm25f_big_hot_rare_s"] = round(time.time() - t0, 3)
     fps = dict(FD.last_fielded_prune_stats)
     fps["skip_pct"] = round(100.0 * fps["postings_skipped"]

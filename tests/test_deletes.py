@@ -226,7 +226,7 @@ def test_exclusion_prune_bitwise_and_idempotent_api(spark, tmp_path):
     bitwise (θ and block bounds stay score-safe under masking), results
     never contain excluded docs, and the deletes API rejects empty input
     while tolerating duplicate/unknown ids."""
-    from engine.query import search_big_terms
+    from engine.query import search_big_terms_federated
 
     pdf = make_corpus(150, seed=13)
     idx = str(tmp_path / "idx")
@@ -237,15 +237,15 @@ def test_exclusion_prune_bitwise_and_idempotent_api(spark, tmp_path):
         .select("ordinal", "doc_id").collect()
     ord_of = {int(r["doc_id"]): int(r["ordinal"]) for r in docs}
 
-    base = search_big_terms(spark, idx, ["def", "return"], k=8)
+    base = search_big_terms_federated(spark, [idx], ["def", "return"], k=8)
     assert base
     # exclude the top-2 docs -> they must vanish, rest must shift up
     dead = sorted(ord_of[d] for _, d, _ in base[:2])
     exc = np.array(dead, dtype=np.int64)
-    pruned = search_big_terms(spark, idx, ["def", "return"], k=8,
-                              exclude=exc, prune=True)
-    nopr = search_big_terms(spark, idx, ["def", "return"], k=8,
-                            exclude=exc, prune=False)
+    pruned = search_big_terms_federated(spark, [idx], ["def", "return"],
+                                        k=8, excludes=[exc], prune=True)
+    nopr = search_big_terms_federated(spark, [idx], ["def", "return"],
+                                      k=8, excludes=[exc], prune=False)
     assert pruned == nopr
     got_ids = {d for _, d, _ in pruned}
     assert not got_ids & {d for _, d, _ in base[:2]}

@@ -87,17 +87,17 @@ def test_explain_endpoint(spark, built_index):
 @pytest.mark.parametrize("query", ["def return", "static function",
                                    "identifier_41 def zzz_absent"])
 def test_explain_big_bitwise(spark, built_index, engine, query):
-    """r5: the zero-driver-array explain (query.explain_big) returns the
-    EXACT dict SearchEngine.explain does — floats bitwise, absent terms
-    included."""
-    from engine.query import explain_big
+    """r5: the zero-driver-array explain (query.explain_big_federated
+    over the one index) returns the EXACT dict SearchEngine.explain does
+    — floats bitwise, absent terms included."""
+    from engine.query import explain_big_federated
     out, _man = built_index
     rows = engine.search(query, k=3, mode="ranked")
     for _r, doc_id, _s in rows:
-        assert explain_big(spark, out, query, doc_id) == \
+        assert explain_big_federated(spark, [out], query, doc_id) == \
             engine.explain(query, doc_id), (query, doc_id)
     with pytest.raises(ValueError, match="unknown doc_id"):
-        explain_big(spark, out, query, 12345)
+        explain_big_federated(spark, [out], query, 12345)
 
 
 def test_explain_big_regime_endpoint(spark, built_index, engine):

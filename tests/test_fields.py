@@ -147,18 +147,20 @@ QUERIES_BIG = ["def return", "pkg3 static", "mod7 js def", "src",
 
 @pytest.mark.parametrize("query", QUERIES_BIG)
 def test_big_fielded_bitwise(spark, built_index, fielded, query):
-    """search_big_fielded (zero-driver-array path) is BITWISE equal to
-    FieldedEngine.search — ranks, doc_ids and float64 scores — in plain
-    and rounded (contract-ordering) modes."""
-    from engine.fields import search_big_fielded
+    """The zero-driver-array fielded path (search_big_fielded_federated
+    over the one index) is BITWISE equal to FieldedEngine.search — ranks,
+    doc_ids and float64 scores — in plain and rounded (contract-ordering)
+    modes."""
+    from engine.fields import search_big_fielded_federated
     out, _man = built_index
     want = fielded.search(query, k=10)
-    got = search_big_fielded(spark, out, query, k=10,
-                             w_path=fielded.w_path)
+    got = search_big_fielded_federated(spark, [out], query, k=10,
+                                       w_path=fielded.w_path)
     assert got == want, query
     want_r = fielded.search(query, k=10, rounded=True)
-    got_r = search_big_fielded(spark, out, query, k=10,
-                               w_path=fielded.w_path, rounded=True)
+    got_r = search_big_fielded_federated(spark, [out], query, k=10,
+                                         w_path=fielded.w_path,
+                                         rounded=True)
     assert got_r == want_r, (query, "rounded")
 
 
@@ -167,7 +169,7 @@ def test_fielded_filters_not_restrict(spark, built_index, fielded,
     """filters/NOT on the fielded engine: the surviving docs' scores are
     UNCHANGED (stats as built) and exactly the metadata/NOT-restricted
     prefix of the unrestricted ranking; big path bitwise-equal."""
-    from engine.fields import search_big_fielded
+    from engine.fields import search_big_fielded_federated
     from engine.tokenizer import tokenize
     out, _man = built_index
     q = "pkg5 def"
@@ -180,10 +182,10 @@ def test_fielded_filters_not_restrict(spark, built_index, fielded,
     got = fielded.search(q, k=10, filters={"lang": "python"},
                          not_terms=["import"])
     assert got == want
-    got_big = search_big_fielded(spark, out, q, k=10,
-                                 w_path=fielded.w_path,
-                                 filters={"lang": "python"},
-                                 not_terms=["import"])
+    got_big = search_big_fielded_federated(spark, [out], q, k=10,
+                                           w_path=fielded.w_path,
+                                           filters={"lang": "python"},
+                                           not_terms=["import"])
     assert got_big == want
 
 

@@ -14,7 +14,7 @@ import numpy as np
 import pytest
 
 from engine.oracle import Bm25Oracle, tfidf_reference_scores
-from engine.query import SearchEngine, search_big, search_big_tfidf
+from engine.query import SearchEngine, search_big, search_big_tfidf_federated
 from engine.tokenizer import parse_query, tokenize
 
 
@@ -198,17 +198,18 @@ def test_big_tfidf_filtered_matches_driver(spark, built_index, engine):
     filters = {"lang": "js"}
     want = engine.search_tfidf_reference(QUERY, k=300, filters=filters,
                                          not_terms=["func"])
-    got = search_big_tfidf(spark, out, QUERY, k=300, filters=filters,
-                           not_terms=["func"])
+    got = search_big_tfidf_federated(spark, [out], QUERY, k=300,
+                                     filters=filters, not_terms=["func"])
     assert got == want and got
 
 
 def test_big_wildcard_filtered(spark, built_index, engine):
-    from engine.query import search_big_prefix
+    from engine.query import search_big_prefix_federated
     out, _ = built_index
     filters = {"lang": "python"}
     want = engine.search_prefix("identifier", k=10, filters=filters)
-    got = search_big_prefix(spark, out, "identifier", k=10, filters=filters)
+    got = search_big_prefix_federated(spark, [out], "identifier", k=10,
+                                      filters=filters)
     assert got == want and got
 
 

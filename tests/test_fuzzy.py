@@ -22,9 +22,8 @@ from engine.fuzzy import (
     ensure_fuzzy,
     expand_fuzzy,
     expand_fuzzy_federated,
-    expand_fuzzy_scan,
 )
-from engine.query import SearchEngine, search_big_fuzzy
+from engine.query import SearchEngine, search_big_fuzzy_federated
 from engine.server import SearchService, make_server
 
 
@@ -105,7 +104,8 @@ def test_expansion_matches_brute_force_both_paths(spark, dictionary):
         want = _brute_expand(pdf, q)
         assert scan[q] == want, (q, "scan")
         assert expand_fuzzy(spark, out, q) == want, (q, "artifact")
-        assert expand_fuzzy_scan(eng.index_df, q) == want, (q, "scan-fn")
+        assert expand_fuzzy_federated([eng.index_df], q) == want, \
+            (q, "scan-fn")
     assert scan["zzzzzz"] == []
 
 
@@ -140,8 +140,8 @@ def test_search_big_fuzzy_bitwise_equal(spark, dictionary):
     q = _pick_query(pdf)
     for filters, nots in [(None, None), ({"lang": "python"}, ["import"])]:
         want = eng.search_fuzzy(q, k=10, filters=filters, not_terms=nots)
-        got = search_big_fuzzy(spark, out, q, k=10, filters=filters,
-                               not_terms=nots)
+        got = search_big_fuzzy_federated(spark, [out], q, k=10,
+                                         filters=filters, not_terms=nots)
         assert got == want, (filters, nots)
 
 

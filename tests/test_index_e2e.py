@@ -86,16 +86,19 @@ def test_search_big_tfidf_and_prefix_bitwise_equal(spark, built_index,
     """The zero-driver-array tfidf and wildcard paths must be BITWISE
     equal to the driver-array engine (same NumPy log10, same sorted-term
     fold order, same threshold/tie-break)."""
-    from engine.query import search_big_prefix, search_big_tfidf
+    from engine.query import (
+        search_big_prefix_federated,
+        search_big_tfidf_federated,
+    )
     out, _ = built_index
     for q in ["def return", "def", "class self import", "zzz_absent"]:
-        assert search_big_tfidf(spark, out, q, k=300) == \
+        assert search_big_tfidf_federated(spark, [out], q, k=300) == \
             engine.search_tfidf_reference(q, k=300), q
     for p in ["de", "cl"]:
-        assert search_big_prefix(spark, out, p, k=7) == \
+        assert search_big_prefix_federated(spark, [out], p, k=7) == \
             engine.search_prefix(p, k=7), p
     with pytest.raises(ValueError, match="empty wildcard"):
-        search_big_prefix(spark, out, "", k=5)
+        search_big_prefix_federated(spark, [out], "", k=5)
 
 
 def test_conjunctive_subset_of_ranked(engine):
@@ -121,18 +124,6 @@ def test_tfidf_reference_scorer(engine, fixture_corpus_pdf):
         assert [(d) for _, d, _ in got] == [(d) for _, d, _ in want]
         for (_, _, gs), (_, _, ws) in zip(got, want):
             assert gs == pytest.approx(ws, rel=1e-12)
-
-
-def test_distributed_scoring_matches_driver(engine, golden):
-    """search_distributed must be bitwise rank-identical to the driver path
-    (and therefore to the oracle) — the sort_array/aggregate fold preserves
-    the sorted-term float64 accumulation order."""
-    queries, _ = golden
-    picked = [q for q in queries if q["query_id"] % 5 == 0][:8]
-    for q in picked:
-        want = engine.search(q["query"], k=q["k"], mode=q["mode"])
-        got = engine.search_distributed(q["query"], k=q["k"], mode=q["mode"])
-        assert got == want, f"distributed mismatch for {q}"
 
 
 def test_search_big_bitwise_equal(spark, built_index):

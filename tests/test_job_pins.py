@@ -1,0 +1,121 @@
+"""Spark jobs per request, pinned — a deterministic cost proxy.
+
+Wall times swing with the machine; the number of Spark jobs a request
+runs does not. Each case below is warmed once (lazy stage builds, cache
+persists), then run again inside its own job group, and the jobs that
+group ran are counted (``setJobGroup`` + ``statusTracker``). A count may
+go down, never up: ``BIG_JOBS`` holds the counts measured for the big
+serving regime before it became a one-member federation, and a warm
+driver-regime query runs no Spark job at all.
+
+Stages that change the plan (positions, the fuzzy deletion table, the
+path index) are ensured up front, so the counts do not depend on which
+other tests ran first on the shared ``built_index``.
+"""
+
+import itertools
+
+import pytest
+
+from engine.server import SearchService
+
+_gid = itertools.count()
+
+#: jobs per warm request of ``serve --big`` (SearchService(big=True))
+BIG_JOBS = {
+    "ranked": 12,
+    "conjunctive": 10,
+    "filter": 12,
+    "not": 14,
+    "snippet": 12,
+    "offset": 12,
+    "tfidf": 8,
+    "bm25f": 16,
+    "wildcard": 12,
+    "fuzzy": 13,
+    "phrase": 7,
+    "phrase_slop": 7,
+    "near": 7,
+    "explain": 3,
+    "suggest": 1,
+    "didyoumean": 6,
+    "facets": 5,
+}
+
+SEARCH_CASES = {
+    "ranked": dict(query="def return"),
+    "conjunctive": dict(query="def return", mode="conjunctive"),
+    "filter": dict(query="def return lang:python"),
+    "not": dict(query="def return -class"),
+    "snippet": dict(query="def return", snippet=True),
+    "offset": dict(query="def return", offset=3),
+    "tfidf": dict(query="identifier_10 identifier_11", scoring="tfidf"),
+    "bm25f": dict(query="def return", scoring="bm25f"),
+    "wildcard": dict(query="de*"),
+    "fuzzy": dict(query="retrn~"),
+    "phrase": dict(query="def return", mode="phrase"),
+    "phrase_slop": dict(query="def return", mode="phrase", slop=3),
+    "near": dict(query="def return", mode="near", slop=3),
+}
+
+
+def jobs_of(spark, fn) -> int:
+    """Spark jobs run by fn() on this thread."""
+    sc = spark.sparkContext
+    gid = f"job-pin-{next(_gid)}"
+    sc.setJobGroup(gid, "job pin")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+@pytest.fixture(scope="module")
+def staged(spark, built_index, fixture_corpus_pdf):
+    from engine.corpus import corpus_to_spark
+    from engine.fields import ensure_path_index
+    from engine.fuzzy import ensure_fuzzy
+    from engine.positions import build_positions
+    out, _man = built_index
+    build_positions(spark, corpus_to_spark(spark, fixture_corpus_pdf),
+                    out, n_salts=4, partitions=4)
+    ensure_fuzzy(spark, out)
+    ensure_path_index(spark, out)
+    return out
+
+
+@pytest.fixture(scope="module")
+def big_service(spark, staged):
+    svc = SearchService(spark, staged, big=True)
+    yield svc
+    svc.close()
+
+
+def _big_calls(svc, doc_id: int) -> dict:
+    calls = {name: (lambda c=case: svc.search_payload(k=5, **c))
+             for name, case in SEARCH_CASES.items()}
+    calls["explain"] = lambda: svc.explain_payload("def return", doc_id)
+    calls["suggest"] = lambda: svc.suggest("de", k=5)
+    calls["didyoumean"] = lambda: svc.dym_payload("retrn clas")
+    calls["facets"] = lambda: svc.facets("def return", ["lang"])
+    return calls
+
+
+def test_big_jobs_per_request_never_grow(spark, big_service,
+                                         fixture_corpus_pdf):
+    doc_id = int(fixture_corpus_pdf["doc_id"].iloc[0])
+    got = {}
+    for name, fn in _big_calls(big_service, doc_id).items():
+        fn()  # warm: lazy frames, stage checks
+        got[name] = jobs_of(spark, fn)
+    assert set(got) == set(BIG_JOBS)
+    worse = {n: (got[n], BIG_JOBS[n]) for n in got if got[n] > BIG_JOBS[n]}
+    assert not worse, f"jobs per request grew (got, pinned): {worse}"
+
+
+def test_warm_driver_query_runs_no_job(spark, staged):
+    svc = SearchService(spark, staged)
+    svc.search_payload("def return", k=5)
+    assert jobs_of(spark, lambda: svc.search_payload("def return",
+                                                     k=5)) == 0

@@ -17,7 +17,7 @@ from engine.mlt import (
     ensure_doc_terms,
     mlt_terms,
     more_like_this,
-    more_like_this_big,
+    more_like_this_federated,
 )
 from engine.query import SearchEngine
 from engine.server import SearchService, make_server
@@ -98,7 +98,7 @@ def test_mlt_equals_expansion_search_minus_source(spark, prepared, engine):
 def test_mlt_big_bitwise_equal(spark, prepared, engine):
     for doc in map(int, engine._ext_ids[[3, 19]]):
         want = more_like_this(engine, doc, k=8)
-        got = more_like_this_big(spark, prepared, doc, k=8)
+        got = more_like_this_federated(spark, [prepared], doc, k=8)
         assert got == want, doc
 
 

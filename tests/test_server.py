@@ -153,7 +153,8 @@ def test_big_service_matches_driver_and_never_materializes(
         assert got == want, case
         assert got, case  # every case must actually return hits
     assert calls["n"] == 0  # nothing in the big path materializes docs
-    assert big_svc._phrase._ext_ids_arr is None  # driver array never built
+    # driver array never built
+    assert big_svc._phrases[0]._ext_ids_arr is None
     big_svc.close()
 
 
@@ -165,8 +166,9 @@ def test_big_service_warm_start(spark, built_index):
     out, _man = built_index
     svc = SearchService(spark, out, big=True)
     try:
-        assert svc._index_df.storageLevel.useMemory
-        assert svc._docs_df.storageLevel.useMemory
+        member = svc.members[0]  # the federation of one's member record
+        assert member._index_df.storageLevel.useMemory
+        assert member._docs_df.storageLevel.useMemory
         first = svc.search_payload("def return", k=5)
         assert first and svc.search_payload("def return", k=5) == first
         # the persisted index is genuinely cached after the first query
@@ -176,7 +178,7 @@ def test_big_service_warm_start(spark, built_index):
                    for i in range(len(infos)))
     finally:
         svc.close()
-    assert svc._index_df is None
+    assert member._index_df is None
 
 
 def test_phrase_and_wildcard_served(spark, built_index, fixture_corpus_pdf):
@@ -249,3 +251,58 @@ def test_stats_endpoint(served, fixture_corpus_pdf):
     assert stats["total_len"] > 0 and stats["n_terms"] > 0
     assert stats["postings"] > 0 and stats["bytes_compressed"] > 0
     assert abs(stats["avgdl"] - stats["total_len"] / stats["n_docs"]) < 1e-9
+
+
+def test_big_stats_and_refresh_over_http(spark, built_index, served):
+    """serve --big is the federation of one: /stats is the driver
+    service's payload plus ``"members": 1`` (n_terms stays the integer
+    dictionary size), and /refresh — meaningful only for an NRT view —
+    answers 400 with the reason instead of a 404."""
+    _service, base = served
+    _, driver_stats = _get(f"{base}/stats")
+    out, _man = built_index
+    big = SearchService(spark, out, big=True)
+    srv = make_server(big, port=0)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    big_base = f"http://127.0.0.1:{srv.server_address[1]}"
+    try:
+        _, stats = _get(f"{big_base}/stats")
+        assert stats == {**driver_stats, "members": 1}
+        assert isinstance(stats["n_terms"], int) and stats["n_terms"] > 0
+        with pytest.raises(urllib.error.HTTPError) as ei:
+            _get(f"{big_base}/refresh")
+        assert ei.value.code == 400
+        with pytest.raises(urllib.error.HTTPError) as ei:
+            _get(f"{base}/refresh")  # the driver service has no view
+        assert ei.value.code == 404
+    finally:
+        srv.shutdown()
+        big.close()
+
+
+def test_benchmark_interface_names(spark, built_index, monkeypatch):
+    """The names the benchmark's traced run wraps exist, and the big
+    regime's /search reaches engine.query.search_big_terms_federated
+    through a call-time module lookup — a wrapper set on the module sees
+    every call, so the traced run records its query span."""
+    import engine.query as eq
+    from engine.server import FederatedSearchService
+    assert callable(eq.search_big)
+    assert callable(eq.search_big_terms_federated)
+    for cls in (SearchService, FederatedSearchService):
+        assert callable(cls.search_payload) and callable(cls.resolve_many)
+    calls = []
+    orig = eq.search_big_terms_federated
+
+    def counted(*a, **kw):
+        calls.append(1)
+        return orig(*a, **kw)
+
+    monkeypatch.setattr(eq, "search_big_terms_federated", counted)
+    out, _man = built_index
+    svc = SearchService(spark, out, big=True)
+    try:
+        assert svc.search_payload("def return", k=3)
+    finally:
+        svc.close()
+    assert calls == [1]

@@ -216,7 +216,7 @@ def test_prefix_overflow_expands_to_top_df_subset(spark, tmp_path):
     equals a ranked OR over exactly that subset."""
     import itertools
 
-    from engine.query import expand_prefix_big, search_big_terms
+    from engine.query import expand_prefix_big, search_big_terms_federated
 
     # 80 distinct terms sharing prefix 'px'; term j appears in j+1 docs
     suffixes = ["".join(p) for p in itertools.product(
@@ -240,7 +240,7 @@ def test_prefix_overflow_expands_to_top_df_subset(spark, tmp_path):
     assert expand_prefix_big(index_df, "px") == expected
     want = eng.search(" ".join(expected), k=10, mode="ranked")
     assert eng.search_prefix("px", k=10) == want
-    assert search_big_terms(spark, out, expected, k=10) == want
+    assert search_big_terms_federated(spark, [out], expected, k=10) == want
     # under the cap nothing changes: full expansion, sorted
     assert eng.expand_prefix("pxa") == sorted(
         t for t in terms if t.startswith("pxa"))
@@ -279,15 +279,15 @@ def test_fielded_big_pruning_skips_and_stays_bitwise(spark,
     for q in ("hot needle", "hot needle py"):
         for rounded in (False, True):
             want = fe.search(q, k=5, rounded=rounded)
-            got = FD.search_big_fielded(spark, out, q, k=5,
-                                        rounded=rounded)
+            got = FD.search_big_fielded_federated(spark, [out], q, k=5,
+                                                  rounded=rounded)
             assert got == want, (q, rounded)
-            assert FD.search_big_fielded(spark, out, q, k=5,
-                                         rounded=rounded,
-                                         prune=False) == want, (q, rounded)
+            assert FD.search_big_fielded_federated(
+                spark, [out], q, k=5, rounded=rounded,
+                prune=False) == want, (q, rounded)
     # engagement on the pure body hot+rare shape: the hot list is 5000
     # postings in 40 blocks; only candidate-bearing blocks survive
-    FD.search_big_fielded(spark, out, "hot needle", k=5)
+    FD.search_big_fielded_federated(spark, [out], "hot needle", k=5)
     stats = FD.last_fielded_prune_stats
     assert stats["pruned_terms"] >= 1, stats
     assert stats["postings_skipped"] >= 5000 - 6 * 128, stats
@@ -296,11 +296,11 @@ def test_fielded_big_pruning_skips_and_stays_bitwise(spark,
     # filters/NOT compose with the pruned traversal exactly
     want = fe.search("hot needle", k=5, filters={"lang": "python"},
                      not_terms=["w3"])
-    got = FD.search_big_fielded(spark, out, "hot needle", k=5,
-                                filters={"lang": "python"},
-                                not_terms=["w3"])
+    got = FD.search_big_fielded_federated(spark, [out], "hot needle", k=5,
+                                          filters={"lang": "python"},
+                                          not_terms=["w3"])
     assert got == want
-    assert FD.search_big_fielded(spark, out, "hot needle", k=5,
-                                 prune=False,
-                                 filters={"lang": "python"},
-                                 not_terms=["w3"]) == want
+    assert FD.search_big_fielded_federated(spark, [out], "hot needle",
+                                           k=5, prune=False,
+                                           filters={"lang": "python"},
+                                           not_terms=["w3"]) == want
