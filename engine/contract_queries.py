@@ -1976,7 +1976,7 @@ def consolidated_oracles():
         "bm25f_topk": _bm25f_duck_sql(
             sorted(set(FIELD_QUERY.split())), TOPK, FIELD_W),
         # the SAME mirror against the zero-driver-array fielded path
-        # (fields.search_big_fielded — VERDICT r4 #1)
+        # (fields.search_big_fielded_federated)
         "bm25f_big_topk": _bm25f_duck_sql(
             sorted(set(FIELD_QUERY.split())), TOPK, FIELD_W),
         # the IVF recall dials (VERDICT r4 #7), each verified at a second

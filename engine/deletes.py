@@ -39,9 +39,8 @@ from pyspark.sql import functions as F
 
 DELETE_DIR = "deletes"
 
-# Max dead ordinals shipped per segment on the LOGICAL serving path — the
-# same gated-driver-array regime as query.CANDIDATE_SHIP_LIMIT (32 MB of
-# int64 at the gate). Lucene's analog is the per-segment live-docs bitset;
+# Max dead ordinals shipped per segment on the LOGICAL serving path (32 MB
+# of int64 at the gate). Lucene's analog is the per-segment live-docs bitset;
 # past the gate the answer is the same as Lucene's too: run the compaction
 # (physical apply is pure joins/remaps with no driver array anywhere).
 EXCLUDE_SHIP_LIMIT = 4_000_000

@@ -35,7 +35,6 @@ gives the same pushdown the blob index gets.
 
 from __future__ import annotations
 
-import os
 from typing import Iterator
 
 import numpy as np
@@ -44,7 +43,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .checkpoint import BuildManifest
-from .query import SearchEngine, bm25_tfw
+from .kernel import PathField, Segment
+from .query import SearchEngine
 from .tokenizer import query_terms, tokenize_series
 
 #: default path-field weight (a path hit outranks ~2 body hits)
@@ -98,87 +98,31 @@ def ensure_path_index(spark: SparkSession, index_dir: str) -> str:
 
 
 def path_lens_parquet(index_dir: str) -> str:
-    """Location of the per-doc path-length table (for callers that keep
-    it persisted warm alongside the path_index frame)."""
+    """Location of the per-doc path-length table (kernel.PathField reads
+    it)."""
     return BuildManifest(index_dir).stage_path("path_lens")
 
 
 class FieldedEngine:
-    """Driver-regime field-boosted scorer on top of a SearchEngine (the
-    same regime as the display maps: per-doc path lengths live in one
-    int64 array; per-query path postings arrive via a term-pushdown scan
-    of the dictionary-scale path index)."""
-
-    #: path-posting cache budget — LRU-evicted past this many distinct
-    #: terms (VERDICT r4: same unbounded-growth fix as SearchEngine's
-    #: CACHE_MAX_TERMS)
-    CACHE_MAX_TERMS = 4096
+    """Driver-regime field-boosted scorer on top of a SearchEngine: the
+    kernel's ranked traversal (kernel.Segment.topk) with a PathField —
+    per-doc path lengths in one int64 array, per-query path postings
+    from a term-filtered read of the dictionary-scale path index, kept in
+    an LRU cache like the body postings."""
 
     def __init__(self, engine: SearchEngine, w_path: float = PATH_WEIGHT,
                  cache_max_terms: int | None = None):
-        from collections import OrderedDict
         self.engine = engine
         self.w_path = float(w_path)
         base = ensure_path_index(engine.spark, engine.index_dir)
-        man = BuildManifest(engine.index_dir)
-        m = man.state["completed"]["path_index"]["metrics"]
-        self.avg_pl = m["total_plen"] / max(engine.n_docs, 1)
-        self._postings = engine.spark.read.parquet(base)
-        lens = engine.spark.read.parquet(
-            man.stage_path("path_lens")).toPandas()
-        self._plens = np.zeros(engine.n_docs, dtype=np.int64)
-        self._plens[lens["ordinal"].to_numpy(np.int64)] = \
-            lens["plen"].to_numpy(np.int64)
-        self._cache: "OrderedDict[str, tuple[np.ndarray, np.ndarray]]" = \
-            OrderedDict()
-        self._cache_max = (cache_max_terms if cache_max_terms is not None
-                           else self.CACHE_MAX_TERMS)
-
-    def _fetch_path(self, terms: list[str]
-                    ) -> dict[str, tuple[np.ndarray, np.ndarray]]:
-        out: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        missing = []
-        for t in terms:
-            if t in self._cache:
-                self._cache.move_to_end(t)  # LRU touch
-                out[t] = self._cache[t]
-            else:
-                missing.append(t)
-        if missing:
-            pdf = (self._postings.where(F.col("term").isin(missing))
-                   .toPandas())
-            for t in missing:
-                sub = pdf[pdf["term"] == t].sort_values("ordinal")
-                got = (sub["ordinal"].to_numpy(np.int64),
-                       sub["tf"].to_numpy(np.int64))
-                self._cache[t] = got
-                out[t] = got
-            # evict AFTER collecting this query's results — a query wider
-            # than the whole budget still answers exactly
-            while len(self._cache) > self._cache_max:
-                self._cache.popitem(last=False)
-        return {t: out[t] for t in terms}
-
-    def _path_scores(self, terms: list[str], cands: np.ndarray
-                     ) -> np.ndarray:
-        eng = self.engine
-        path = self._fetch_path(terms)
-        pl = self._plens[cands].astype(np.float64)
-        out = np.zeros(cands.size, dtype=np.float64)
-        for t in terms:  # sorted-term accumulation, like the body engine
-            ords, tfs = path[t]
-            if not ords.size:
-                continue
-            pos = np.searchsorted(ords, cands)
-            pos_c = np.minimum(pos, ords.size - 1)
-            mask = (pos < ords.size) & (ords[pos_c] == cands)
-            if not mask.any():
-                continue
-            tf = tfs[pos_c[mask]].astype(np.float64)
-            idf = eng._idf(int(ords.size))
-            # the tf-weight with the PATH field's length stats
-            out[mask] += idf * bm25_tfw(tf, pl[mask], self.avg_pl)
-        return out
+        self.avg_pl = load_path_stats(engine.index_dir) / max(
+            engine.n_docs, 1)
+        self.path = PathField(
+            base, path_lens_parquet(engine.index_dir),
+            engine._ext_ids.size, self.avg_pl, self.w_path,
+            cache_max_terms=(cache_max_terms if cache_max_terms is not None
+                             else engine.CACHE_MAX_TERMS))
+        self._cache = self.path._cache
 
     def search(self, query: str, k: int = 10, rounded: bool = False,
                filters: dict[str, str] | None = None,
@@ -188,25 +132,12 @@ class FieldedEngine:
         Candidates = union of body and path matches (a pure path hit
         ranks — that is the point of a filename boost). filters/not_terms
         restrict the RESULT SET exactly like the body engine's search
-        (SearchEngine._restrict: metadata filters + body NOT-term
-        exclusion applied to the candidate set before scoring; statistics
-        stay as built — Lucene filter-query semantics)."""
-        eng = self.engine
-        terms = query_terms(query)
-        if not terms or k <= 0:
-            return []
-        body = eng._fetch(terms)
-        path = self._fetch_path(terms)
-        arrays = [tp.doc_ids for tp in body.values()] + \
-                 [o for o, _tf in path.values() if o.size]
-        if not arrays:
-            return []
-        cands = arrays[0] if len(arrays) == 1 else np.unique(
-            np.concatenate(arrays))
-        cands = eng._restrict(cands, filters, not_terms)
-        scores = eng._score(terms, body, cands)
-        scores = scores + self.w_path * self._path_scores(terms, cands)
-        return eng._topk(cands, scores, k, rounded)
+        (metadata filters + body NOT-term exclusion applied to the
+        candidate set before scoring; statistics stay as built — Lucene
+        filter-query semantics)."""
+        return self.engine.topk(query_terms(query), k, rounded=rounded,
+                                filters=filters, not_terms=not_terms,
+                                path=self.path)
 
 
 # --------------------------------------------- fully-cluster fielded path
@@ -218,346 +149,81 @@ def load_path_stats(index_dir: str) -> int:
                ["total_plen"])
 
 
-#: stats of the last search_big_fielded call (driver-side): body postings
-#: of the queried terms vs posting rows actually emitted by the decode
-#: stage (block-max pruning drops the rest). Test/bench hook.
+#: counters of the last search_big_fielded_federated call — the keys and
+#: meaning of query.last_big_prune_stats, over the body postings.
 last_fielded_prune_stats: dict[str, int] = {}
-
-
-def search_big_fielded(spark: SparkSession, index_df, docs_df, path_df,
-                       path_lens_df, terms: list[str],
-                       bmeta: dict[str, tuple[int, int]],
-                       pmeta: dict[str, tuple[int, int]], weights,
-                       avg_pl: float, pdf_global: dict[str, int],
-                       k: int = 10, w_path: float = PATH_WEIGHT,
-                       rounded: bool = False, prune: bool = True,
-                       exclude=None,
-                       filters: dict[str, str] | None = None,
-                       not_terms: list[str] | None = None
-                       ) -> list[tuple[int, int, float]]:
-    """BM25F (score = bm25_body + w*bm25_path) WITHOUT any driver-side doc
-    arrays — the 10^12-doc serving path for the field boost (VERDICT r4
-    #1: path boost is *the* production code-search ranking feature, and
-    the one regime that can serve 10^12 files must be able to serve it).
-    BITWISE equal to FieldedEngine.search (tests assert it):
-
-    - body contributions: the search_big decode (Arrow blob decode ->
-      (ordinal, term_idx, tf) -> doc_len join -> JVM BM25 column with the
-      oracle's float64 op order);
-    - path contributions: the path_index's plain (term, ordinal, tf) rows
-      (dictionary-scale — a pushdown term scan), plen joined from
-      path_lens, the SAME BM25 column with the PATH field's (df, avg_pl)
-      statistics;
-    - the per-doc sum folds a sort_array'd (field, term_idx, contrib)
-      list split by field: body fold + w * path fold — exactly the
-      driver engine's accumulation (body sum in sorted-term order, then
-      the path sum in sorted-term order scaled once);
-    - candidates = union of body and path matches (a doc appears iff it
-      emitted >= 1 contribution row — pure path hits rank);
-    - filters/NOT restrict the result set: metadata filters semi-join the
-      scored frame (and restrict the θ-derivation frame, so pruning stays
-      exact over the survivors); NOT terms merge into the decode-level
-      exclusion array under the gated budget (search_big_terms' rule —
-      past it the scored frame anti-joins and pruning is disabled).
-
-    Block-max pruning (ranked MaxScore, extended with the path field):
-    θ = the k-th best exact single-term BODY contribution of the rarest
-    body term — still a valid lower bound on the k-th best FINAL score
-    (path contributions are non-negative). Body-term blocks are skipped
-    when idf·tfw(block_max_tf, dl=0) + Σ other body ubmax + w·Σ path
-    ubmax falls strictly below θ (the path field's total upper bound —
-    from per-term max path tf, one tiny agg — joins the "max help
-    elsewhere" term, keeping the skip score-safe for docs that rank via
-    their path). Non-essential (hot) body terms emit only blocks holding
-    a CANDIDATE — the union of essential-body posting ordinals AND ALL
-    path-posting ordinals (a doc matching only hot body terms and no
-    path scores ≤ Σ hot ubmax < θ; a path-posting doc is always a
-    candidate, so its hot blocks are never lost). Path rows are never
-    pruned (dictionary-scale). Bitwise tests assert pruned == unpruned
-    == driver engine, and a skew test asserts real skipping.
-
-    This is the per-segment kernel of search_big_fielded_federated.
-    weights/avg_pl/pdf_global: the federation's corpus-wide weights —
-    same exactness argument as search_big_terms, field statistics
-    included (path dfs and total_plen sum across doc-disjoint segments).
-    bmeta/pmeta: this segment's own body and path dictionary rows,
-    term -> (df, max_tf), probed once by the caller; segment-local rows
-    drive which terms emit contributions and the pruning geometry
-    (rarest-term choice, candidate-ship gating). exclude: sorted
-    dead-ordinal array/Broadcast (logical deletes) — masked at body
-    decode and anti-joined off the path rows; statistics stay as built
-    (Lucene stats-until-merge)."""
-    import pandas as pd
-    from pyspark.sql import Observation
-
-    from .query import (
-        CANDIDATE_SHIP_LIMIT,
-        _big_theta,
-        _bm25_contrib_col,
-        _collect_ordinals,
-        _excl_frame,
-        _excl_value,
-        _filters_col,
-        _make_explode_blobs,
-        _maxscore_state,
-        _ordinals_frame,
-        _pairs_to_results,
-        _plain_topk,
-        _rounded_pairs,
-        _tfw_zero_dl,
-        bm25_idf,
-    )
-
-    if not terms or k <= 0 or weights.n_docs == 0 or (
-            not bmeta and not pmeta):
-        return []
-    avgdl = weights.avgdl
-    dfs_b_local = {t: df for t, (df, _mt) in bmeta.items()}
-    max_tf_b = {t: mt for t, (_df, mt) in bmeta.items()}
-    dfs_b = {t: weights.df[t] for t in bmeta}
-    dfs_p_local = {t: df for t, (df, _mt) in pmeta.items()}
-    max_tf_p = {t: mt for t, (_df, mt) in pmeta.items()}
-    dfs_p = {t: pdf_global[t] for t in pmeta}
-
-    def _idf(df: int) -> float:
-        return bm25_idf(weights.n_docs, df)
-
-    ordered = sorted(set(terms))
-    tidx = {t: i for i, t in enumerate(ordered)}
-
-    # ---- NOT terms: merged into the decode-level exclusion array under
-    # the gated budget (search_big_terms' rule); hotter NOT sets stay
-    # fully distributed (anti-join) and disable pruning — θ derived
-    # before an anti-join could over-prune survivors ----
-    anti_df = None
-    if not_terms:
-        nts = sorted(set(not_terms))
-        nmeta = (index_df.where(F.col("term").isin(nts))
-                 .select("term", "df").collect())
-        npresent = sorted(r["term"] for r in nmeta)
-        if npresent:
-            if sum(int(r["df"]) for r in nmeta) <= CANDIDATE_SHIP_LIMIT:
-                not_ords = _collect_ordinals(index_df, npresent)
-                base = _excl_value(exclude)
-                exclude = (not_ords if base is None
-                           else np.union1d(base, not_ords))
-            else:
-                prune = False
-                anti_df = _ordinals_frame(index_df, npresent)
-
-    dl = docs_df.select("ordinal",
-                        F.col("doc_len").cast("double").alias("dl"))
-    # θ derives over the SURVIVORS of metadata filters (the scoring dl
-    # stays unfiltered — path-only docs bypass it; the filter lands as a
-    # semi-join on the scored frame)
-    dl_theta = dl
-    if filters:
-        dl_theta = (docs_df.where(_filters_col(filters, docs_df.columns))
-                    .select("ordinal",
-                            F.col("doc_len").cast("double").alias("dl")))
-
-    # ---- block-pruning state (see docstring for the safety argument) --
-    skip_target: dict[str, float] = {}
-    noness: frozenset[str] = frozenset()
-    cand_bc = None
-    if prune and dfs_b_local:
-        rare = min(dfs_b_local, key=lambda t: (dfs_b_local[t], t))
-        theta = _big_theta(index_df, dl_theta, rare, _idf(dfs_b[rare]),
-                           k, avgdl, exclude=exclude)
-        if theta is not None:
-            ubb = {t: _idf(dfs_b[t]) * _tfw_zero_dl(float(max_tf_b[t]))
-                   for t in dfs_b_local}
-            # the path field's total upper bound — the "max help
-            # elsewhere" a doc can collect outside its body blocks
-            path_help = float(w_path) * sum(
-                _idf(dfs_p[t]) * _tfw_zero_dl(float(max_tf_p[t]))
-                for t in dfs_p_local)
-
-            def _path_ordinals():
-                # every path-posting doc must stay a candidate (it can
-                # rank via its path alone); fetched only when the ship
-                # gate passes
-                if not dfs_p_local:
-                    return None
-                ptbl = (path_df
-                        .where(F.col("term").isin(list(dfs_p_local)))
-                        .select("ordinal").distinct().toArrow())
-                return ptbl.column("ordinal").to_numpy(
-                    zero_copy_only=False)
-
-            skip_target, noness, cand_bc = _maxscore_state(
-                spark, index_df, theta, rounded, ubb, dfs_b_local,
-                extra_help=path_help,
-                extra_df=sum(dfs_p_local.values()),
-                extra_cands=_path_ordinals)
-
-    # ---- body contributions (field 0): search_big's decode shape,
-    # the SAME kernel (query._make_explode_blobs) with the fielded
-    # skip_targets (path upper bound folded in) and candidate set
-    # (essential body ∪ all path-posting ordinals) ----
-    idf_of = {t: _idf(dfs_b[t]) for t in dfs_b_local}
-    explode_blobs = _make_explode_blobs(
-        noness, skip_target, idf_of, tidx, cand_bc, exclude)
-
-    bidf = F.broadcast(spark.createDataFrame(
-        [(tidx[t], _idf(df)) for t, df in dfs_b.items()] or
-        [(int(-1), 0.0)],
-        "term_idx int, idf double"))
-    obs = Observation()
-    body_c = (index_df.where(F.col("term").isin(list(dfs_b) or ["\0"]))
-              .select("term", "postings", "block_max_tfs",
-                      "block_last_ids")
-              .mapInPandas(explode_blobs,
-                           schema="ordinal long, term_idx int, tf double")
-              .observe(obs, F.count(F.lit(1)).alias("emitted"))
-              .join(dl, "ordinal").join(bidf, "term_idx")
-              .select("ordinal", F.lit(0).alias("field"), "term_idx",
-                      _bm25_contrib_col(avgdl).alias("contrib")))
-
-    # ---- path contributions (field 1): plain rows, pure JVM ----
-    # (the serving paths pass path_lens_df persisted warm — the per-doc
-    # plen table is O(n_docs) rows and must not re-scan per query)
-    pl = path_lens_df.select(
-        "ordinal", F.col("plen").cast("double").alias("dl"))
-    pidf = F.broadcast(spark.createDataFrame(
-        [(tidx[t], _idf(df)) for t, df in dfs_p.items()] or
-        [(int(-1), 0.0)],
-        "term_idx int, idf double"))
-    tidx_df = F.broadcast(spark.createDataFrame(
-        list(tidx.items()), "term string, term_idx int"))
-    path_rows = (path_df.where(F.col("term").isin(list(dfs_p) or ["\0"]))
-                 .join(tidx_df, "term")
-                 .select("ordinal", "term_idx",
-                         F.col("tf").cast("double").alias("tf")))
-    exc_arr = _excl_value(exclude)
-    if exc_arr is not None:
-        path_rows = path_rows.join(_excl_frame(spark, exc_arr),
-                                   "ordinal", "left_anti")
-    path_c = (path_rows.join(pl, "ordinal").join(pidf, "term_idx")
-              .select("ordinal", F.lit(1).alias("field"), "term_idx",
-                      _bm25_contrib_col(avg_pl).alias("contrib")))
-
-    # ---- per-doc fielded sum: sort by (field, term_idx) then fold each
-    # field's sublist — the driver engine's exact accumulation order ----
-    lst = F.sort_array(F.collect_list(
-        F.struct("field", "term_idx", "contrib")))
-
-    def _fold(sub):
-        return F.aggregate(sub, F.lit(0.0),
-                           lambda acc, x: acc + x["contrib"])
-
-    scored = (body_c.unionByName(path_c)
-              .groupBy("ordinal")
-              .agg(lst.alias("cs"))
-              .select("ordinal", (
-                  _fold(F.filter(F.col("cs"),
-                                 lambda x: x["field"] == F.lit(0)))
-                  + F.lit(float(w_path))
-                  * _fold(F.filter(F.col("cs"),
-                                   lambda x: x["field"] == F.lit(1)))
-              ).alias("score")))
-
-    # ---- result-set restriction (filters semi-join; NOT either merged
-    # into the exclusion array above or anti-joined here) ----
-    if filters:
-        scored = scored.join(
-            docs_df.where(_filters_col(filters, docs_df.columns))
-            .select("ordinal"), "ordinal", "leftsemi")
-    if anti_df is not None:
-        scored = scored.join(anti_df, "ordinal", "left_anti")
-
-    def _finish(result):
-        global last_fielded_prune_stats
-        if cand_bc is not None:
-            cand_bc.unpersist()
-        total = sum(dfs_b_local.values())
-        try:
-            emitted = int(obs.get["emitted"] or 0)
-        except Exception:
-            emitted = 0  # empty-plan AQE collapse (diagnostics only)
-        last_fielded_prune_stats = {
-            "postings_total": total, "postings_emitted": emitted,
-            "postings_skipped": total - emitted,
-            "pruned_terms": len(skip_target) + len(noness)}
-        return result
-
-    if rounded:
-        scored = scored.persist()
-        try:
-            pairs = _rounded_pairs(spark, scored, k)
-            if not pairs:
-                return _finish([])
-            return _finish(_pairs_to_results(spark, pairs, docs_df))
-        finally:
-            scored.unpersist()
-    return _finish(_plain_topk(spark, scored, docs_df, k))
 
 
 def search_big_fielded_federated(spark: SparkSession,
                                  index_dirs: list[str], query: str,
                                  k: int = 10, w_path: float = PATH_WEIGHT,
                                  rounded: bool = False, prune: bool = True,
-                                 idx_dfs: list | None = None,
-                                 docs_dfs: list | None = None,
                                  path_dfs: list | None = None,
-                                 path_lens_dfs: list | None = None,
                                  excludes: list | None = None,
                                  filters: dict[str, str] | None = None,
                                  not_terms: list[str] | None = None
                                  ) -> list[tuple[int, int, float]]:
-    """BM25F over a doc-disjoint federation — rank-identical to the
-    fielded ranking of the merged index (tests assert it; a single index
-    is the federation of one): every doc's full fielded score is
-    computable inside its own segment (its body AND path postings live
-    there) provided the WEIGHTS are the federation's: global
-    n_docs/avgdl/df from _federation_weights, global path df = Σ
-    per-segment path dfs, global avg_pl = Σ total_plen / Σ n_docs —
-    integer sums over as-built stats, exactly search_big_federated's
-    argument extended to the second field. Per-segment top-k under global
-    weights then merges by (score DESC, doc_id ASC). path_dfs/
-    path_lens_dfs: per-segment warm frames (else read, the path_index
-    stage ensured first)."""
+    """BM25F (score = bm25_body + w*bm25_path) over a doc-disjoint
+    federation WITHOUT any driver-side doc arrays — the big regime's
+    field boost, rank-identical to FieldedEngine.search on the merged
+    index (tests assert it; a single index is the federation of one).
+
+    Every doc's full fielded score is computable inside its own segment
+    (its body AND path postings live there) provided the WEIGHTS are the
+    federation's: global n_docs/avgdl/df from _federation_weights, global
+    path df = Σ per-segment path dfs, global avg_pl = Σ total_plen / Σ
+    n_docs — integer sums over as-built stats, search_big_federated's
+    argument extended to the second field. Each member then runs
+    kernel.Segment.topk with a PathField in its own task (one Spark job
+    for the federation): the body bound plus the exact weighted path
+    score drives the pruned traversal, restriction (filters, NOT terms,
+    logical deletes) applies before θ, and the k×S rows merge by (score
+    DESC, doc_id ASC).
+
+    The per-member path df stays a Spark aggregate: a token like ``py``
+    has O(N) path postings, which must not reach the driver. path_dfs:
+    per-member warm path_index frames (else read, the stage ensured
+    first)."""
     from .query import (
+        _check_filters,
+        _excl_value,
         _federation_weights,
-        _member_frames,
+        _member_topks,
         _merge_federated,
-        query_terms,
     )
 
+    global last_fielded_prune_stats
     terms = query_terms(query)
     if not terms or k <= 0 or not index_dirs:
         return []
-    idx_dfs, docs_dfs = _member_frames(spark, index_dirs, idx_dfs, docs_dfs)
-    w = _federation_weights(index_dirs, terms, idx_dfs)
+    w = _federation_weights(index_dirs, terms)
     if w.n_docs == 0:
         return []
     paths = [ensure_path_index(spark, d) for d in index_dirs]
     if path_dfs is None:
         path_dfs = [spark.read.parquet(p) for p in paths]
-    if path_lens_dfs is None:
-        path_lens_dfs = [spark.read.parquet(path_lens_parquet(d))
-                         for d in index_dirs]
     avg_pl = sum(load_path_stats(d) for d in index_dirs) / w.n_docs
     pdf_map: dict[str, int] = {}
-    pmetas: list[dict[str, tuple[int, int]]] = []
     for pdf_seg in path_dfs:
-        # one path-dictionary probe per segment: (df, max_tf) feeds both
-        # the federation-global df sums AND the segment's kernel call
-        m = {r["term"]: (int(r["df"]), int(r["max_tf"])) for r in
-             (pdf_seg.where(F.col("term").isin(terms))
-              .groupBy("term").agg(F.count(F.lit(1)).alias("df"),
-                                   F.max("tf").alias("max_tf"))
-              .collect())}
-        pmetas.append(m)
-        for t, (df_, _mt) in m.items():
-            pdf_map[t] = pdf_map.get(t, 0) + df_
-    merged: list[tuple[int, float]] = []
-    for i, idx in enumerate(idx_dfs):
-        for _, doc_id, score in search_big_fielded(
-                spark, idx, docs_dfs[i], path_dfs[i], path_lens_dfs[i],
-                terms, w.rows[i], pmetas[i], w, avg_pl, pdf_map, k=k,
-                w_path=w_path, rounded=rounded, prune=prune,
-                exclude=excludes[i] if excludes else None,
-                filters=filters, not_terms=not_terms):
-            merged.append((doc_id, score))
+        for r in (pdf_seg.where(F.col("term").isin(terms))
+                  .groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+                  .collect()):
+            pdf_map[r["term"]] = pdf_map.get(r["term"], 0) + int(r["df"])
+    if not w.df and not pdf_map:
+        return []
+    _check_filters(index_dirs, filters)
+    lens = [path_lens_parquet(d) for d in index_dirs]
+
+    def score(i):
+        seg = Segment(index_dirs[i], w.n_docs, w.avgdl, df=w.df)
+        path = PathField(paths[i], lens[i], seg._ext_ids.size, avg_pl,
+                         w_path, df=pdf_map)
+        rows = seg.topk(terms, k, prune=prune, rounded=rounded,
+                        filters=filters, not_terms=not_terms,
+                        exclude=_excl_value(excludes[i]) if excludes
+                        else None, path=path)
+        return rows, seg.counters(terms)
+
+    merged, last_fielded_prune_stats = _member_topks(spark, index_dirs,
+                                                     score)
     return _merge_federated(merged, k)

@@ -99,16 +99,13 @@ def _resolve_alias(spark: SparkSession, index_dir: str, doc_id: int) -> int:
 
 
 def mlt_terms(spark: SparkSession, index_dir: str, doc_id: int,
-              index_df=None, m: int = MLT_QUERY_TERMS
-              ) -> tuple[int, list[str]]:
+              m: int = MLT_QUERY_TERMS) -> tuple[int, list[str]]:
     """Steps 1-2 over one index (mlt_terms_federated over ``[index_dir]``,
     the doc_terms stage required): (resolved_doc_id, the top-m
     interesting terms of the doc's stored vector by tf * bm25_idf DESC,
     term ASC). Raises on an unknown doc_id or a missing doc_terms stage."""
-    return mlt_terms_federated(
-        spark, [index_dir], doc_id,
-        idx_dfs=None if index_df is None else [index_df], m=m,
-        ensure=False)
+    return mlt_terms_federated(spark, [index_dir], doc_id, m=m,
+                               ensure=False)
 
 
 def _drop_source(rows: list[tuple[int, int, float]], doc_id: int, k: int
@@ -126,21 +123,17 @@ def more_like_this(engine, doc_id: int, k: int = 10,
     """Driver-regime MLT over a SearchEngine: interesting-term expansion,
     then the engine's own pruned ranked-OR with k+1 fetch and source-doc
     drop."""
-    doc_id, terms = mlt_terms(engine.spark, engine.index_dir, doc_id,
-                              index_df=engine.index_df, m=m)
-    if not terms or k <= 0:
+    doc_id, terms = mlt_terms(engine.spark, engine.index_dir, doc_id, m=m)
+    if k <= 0:
         return []
-    postings = engine._fetch(terms)
-    if not postings:
-        return []
-    rows = engine._ranked_pruned(terms, postings, k + 1, rounded,
-                                 filters=filters, not_terms=not_terms)
+    rows = engine.topk(terms, k + 1, rounded=rounded, filters=filters,
+                       not_terms=not_terms)
     return _drop_source(rows, doc_id, k)
 
 
 def mlt_terms_federated(spark: SparkSession, index_dirs: list[str],
-                        doc_id: int, idx_dfs: list | None = None,
-                        m: int = MLT_QUERY_TERMS, ensure: bool = True
+                        doc_id: int, m: int = MLT_QUERY_TERMS,
+                        ensure: bool = True
                         ) -> tuple[int, list[str]]:
     """Steps 1-2 over a doc-disjoint federation: the doc's stored vector
     comes from its OWNING segment (doc_terms probes segment by segment,
@@ -155,9 +148,6 @@ def mlt_terms_federated(spark: SparkSession, index_dirs: list[str],
     postings-decode job per fresh segment, manifest-cached after that.
     ensure=False (a static index) raises with the one-liner instead."""
     from .query import _federation_weights, bm25_idf
-    if idx_dfs is None:
-        idx_dfs = [spark.read.parquet(os.path.join(d, "index"))
-                   for d in index_dirs]
     vec = None
     for d in index_dirs:
         man = BuildManifest(d)
@@ -184,7 +174,7 @@ def mlt_terms_federated(spark: SparkSession, index_dirs: list[str],
     tfs = {r["term"]: int(r["tf"]) for r in vec}
     # federation-global stats from the ONE summing contract every other
     # federated scorer uses (query._federation_weights) — avgdl unused
-    w = _federation_weights(index_dirs, list(tfs), idx_dfs)
+    w = _federation_weights(index_dirs, list(tfs))
 
     def weight(t: str) -> float:
         return tfs[t] * bm25_idf(w.n_docs, w.df.get(t, 0))
@@ -201,8 +191,6 @@ def more_like_this_federated(spark: SparkSession, index_dirs: list[str],
                              doc_id: int, k: int = 10,
                              m: int = MLT_QUERY_TERMS,
                              rounded: bool = False,
-                             idx_dfs: list | None = None,
-                             docs_dfs: list | None = None,
                              excludes: list | None = None,
                              filters: dict[str, str] | None = None,
                              not_terms: list[str] | None = None,
@@ -215,14 +203,10 @@ def more_like_this_federated(spark: SparkSession, index_dirs: list[str],
     the driver regime's more_like_this on the merged index (tests assert
     it)."""
     from .query import search_big_terms_federated
-    if idx_dfs is None:
-        idx_dfs = [spark.read.parquet(os.path.join(d, "index"))
-                   for d in index_dirs]
-    doc_id, terms = mlt_terms_federated(spark, index_dirs, doc_id,
-                                        idx_dfs=idx_dfs, m=m, ensure=ensure)
+    doc_id, terms = mlt_terms_federated(spark, index_dirs, doc_id, m=m,
+                                        ensure=ensure)
     rows = search_big_terms_federated(spark, index_dirs, terms, k=k + 1,
                                       mode="ranked", rounded=rounded,
-                                      idx_dfs=idx_dfs, docs_dfs=docs_dfs,
                                       excludes=excludes, filters=filters,
                                       not_terms=not_terms)
     return _drop_source(rows, doc_id, k)

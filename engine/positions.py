@@ -44,6 +44,7 @@ from .index_build import (
     partition_token_arrays,
     remap_keep,
 )
+from .kernel import _lookup, meta_column, read_postings
 from .tokenizer import tokenize
 
 POS_RUN_SCHEMA = ("term string, salt int, ids binary, counts binary, "
@@ -606,16 +607,7 @@ class PhraseEngine:
 
     def _meta_col(self, name: str) -> np.ndarray:
         if name not in self._meta_cache:
-            if name not in self._docs_df.columns:
-                raise ValueError(
-                    f"this index's docs snapshot has no {name!r} column "
-                    "(stats-only legacy snapshot?) — metadata filters "
-                    "need the full input_hint metadata")
-            pdf = (self._docs_df.select("ordinal", name)
-                   .orderBy("ordinal").toPandas())
-            self._meta_cache[name] = np.asarray(
-                pdf[name].fillna("").astype(str).to_numpy(dtype=object),
-                dtype=str)
+            self._meta_cache[name] = meta_column(self.index_dir, name)
         return self._meta_cache[name]
 
     def _restrict_driver(self, uniq: np.ndarray, n_occ: np.ndarray,
@@ -633,18 +625,12 @@ class PhraseEngine:
                          if field == "path" else (col == value))
             uniq, n_occ = uniq[keep], n_occ[keep]
         if not_terms and uniq.size:
-            from .codec import decode_postings
-            rows = (self._the_index_df()
-                    .where(F.col("term").isin(sorted(set(not_terms))))
-                    .select("postings").collect())
-            if rows:
+            bad = read_postings(self.index_dir, sorted(set(not_terms)))
+            if bad:
                 excl = np.unique(np.concatenate(
-                    [decode_postings(bytes(r["postings"]))[0]
-                     for r in rows]))
-                pos = np.searchsorted(excl, uniq)
-                pos_c = np.minimum(pos, excl.size - 1)
-                bad = (pos < excl.size) & (excl[pos_c] == uniq)
-                uniq, n_occ = uniq[~bad], n_occ[~bad]
+                    [tp.doc_ids for tp in bad.values()]))
+                keep = ~_lookup(excl, uniq)[1]
+                uniq, n_occ = uniq[keep], n_occ[keep]
         return uniq, n_occ
 
     def _restrict_hits(self, hits: DataFrame,

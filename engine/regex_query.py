@@ -23,9 +23,11 @@ term-granular inverted index:
    clause a distinct-union, the clause set an ordinal equi-join chain.
    Only ordinals leave the decode stage, never content.
 3. ``regex_search`` semi-joins the candidate doc_ids against the source
-   table (the join prunes the content scan) and verifies with ONE
-   vectorized ``pandas.Series.str.contains`` pass over Arrow batches of
-   candidates only — no per-row Python.
+   table (the join prunes the content scan) and verifies the candidates
+   only, over Arrow batches, with the ``regex`` module (``re``-compatible
+   VERSION0 semantics) under a per-document timeout: a pattern that
+   backtracks past it fails the request as too expensive instead of
+   hanging a task or silently dropping the document.
 
 **Matching semantics — the document model.** The pattern matches against
 the same normalized text the index tokenizes: ``content`` with each
@@ -80,6 +82,7 @@ from functools import reduce
 from typing import Iterator, Optional
 
 import pandas as pd
+import regex
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -626,19 +629,38 @@ def _candidates_bounded(spark: SparkSession, index_dir: str, pattern: str
     return matched.where(pred).select("ordinal"), n_bound
 
 
+#: per-document budget of the verify pass, in seconds: a pattern whose
+#: backtracking exceeds it on any document fails the whole request with
+#: TOO_EXPENSIVE (never a silently dropped document)
+VERIFY_TIMEOUT_S = 1.0
+TOO_EXPENSIVE = "pattern too expensive"
+
+
+def _check_pattern(pattern: str) -> None:
+    """Surface a bad pattern on the driver, before any job runs: the
+    analysis parses with ``re``, the verify pass runs ``regex``."""
+    re.compile(pattern)
+    regex.compile(pattern, regex.VERSION0)
+
+
 def _verify_frame(src: DataFrame, pattern: str, id_col: str,
                   content_col: str) -> DataFrame:
-    """The shared verify tail: ONE vectorized ``Series.str.contains``
-    pass over Arrow batches of ``src`` (model text — tags stripped),
-    returning the single-column ``id_col`` frame of matches. Capture
-    groups are rewritten non-capturing first (regex semantics unchanged)
-    so pandas' "match groups" UserWarning never fires per batch."""
-    quiet = _non_capturing(pattern)
-
+    """The shared verify tail: one pass over Arrow batches of ``src``
+    searching each document's model text (tags stripped) with the
+    ``regex`` module under VERIFY_TIMEOUT_S, returning the single-column
+    ``id_col`` frame of matches. A timeout raises TOO_EXPENSIVE, which
+    matched_ids turns into a ValueError (a 400 when served)."""
     def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        rx = regex.compile(pattern, regex.VERSION0)
         for pdf in batches:
             model = pdf[content_col].str.replace(_TAG_RE, " ", regex=True)
-            hit = model.str.contains(quiet, regex=True, na=False)
+            hit = []
+            for text in model:
+                try:
+                    hit.append(isinstance(text, str) and rx.search(
+                        text, timeout=VERIFY_TIMEOUT_S) is not None)
+                except TimeoutError:
+                    raise RuntimeError(TOO_EXPENSIVE) from None
             yield pdf.loc[hit, [id_col]]
 
     id_field = src.schema[id_col]
@@ -646,46 +668,19 @@ def _verify_frame(src: DataFrame, pattern: str, id_col: str,
         verify, schema=f"{id_col} {id_field.dataType.simpleString()}")
 
 
-def _non_capturing(pattern: str) -> str:
-    """``pattern`` with every plain capturing ``(`` rewritten to ``(?:``
-    (match semantics identical — only group numbering changes, and the
-    verify pass never reads groups). Patterns whose rewrite cannot be
-    proven safe (backreferences like ``\\1`` or ``(?P=name)`` NEED their
-    groups) are returned unchanged — the cosmetic warning is better than
-    a semantics change."""
-    if re.search(r"\\\d|\(\?P=", pattern):
-        return pattern
-    out = []
-    i, n = 0, len(pattern)
-    while i < n:
-        c = pattern[i]
-        if c == "\\" and i + 1 < n:
-            out.append(pattern[i:i + 2])
-            i += 2
-            continue
-        if c == "[":  # char class: copy verbatim to its closing ]
-            j = i + 1
-            if j < n and pattern[j] == "^":
-                j += 1
-            if j < n and pattern[j] == "]":
-                j += 1
-            while j < n and pattern[j] != "]":
-                j += 2 if pattern[j] == "\\" else 1
-            out.append(pattern[i:j + 1])
-            i = j + 1
-            continue
-        if c == "(" and (i + 1 >= n or pattern[i + 1] != "?"):
-            out.append("(?:")
-            i += 1
-            continue
-        out.append(c)
-        i += 1
-    rewritten = "".join(out)
-    try:  # the rewrite must stay a valid pattern — else keep the original
-        re.compile(rewritten)
-    except re.error:
-        return pattern
-    return rewritten
+def matched_ids(out: DataFrame, k: int, id_col: str = "doc_id"
+                ) -> list[int]:
+    """The k smallest matching ids of a regex_search(_federated) frame; a
+    verify timeout surfaces as ValueError(TOO_EXPENSIVE)."""
+    try:
+        rows = out.orderBy(id_col).limit(max(0, k)).collect()
+    except Exception as e:
+        if TOO_EXPENSIVE in str(e):
+            raise ValueError(
+                f"{TOO_EXPENSIVE}: its backtracking exceeded "
+                f"{VERIFY_TIMEOUT_S} s on a document") from None
+        raise
+    return [int(r[id_col]) for r in rows]
 
 
 def regex_search(spark: SparkSession, index_dir: str, source_df: DataFrame,
@@ -694,14 +689,18 @@ def regex_search(spark: SparkSession, index_dir: str, source_df: DataFrame,
                  prune: bool = True) -> DataFrame:
     """doc_ids of ``source_df`` rows whose ``content_col``'s MODEL TEXT
     (tags stripped — see module docstring) contains a match of ``pattern``
-    (Python ``re.search`` semantics). Index-pruned when the pattern admits
-    required terms; always verified with one vectorized
-    ``Series.str.contains`` pass over Arrow batches. Returns a DataFrame
-    with the single column ``id_col`` (distributed — no driver arrays).
+    (``regex.search`` in VERSION0, ``re``-compatible — except that under
+    IGNORECASE it folds by Unicode simple case folding, so 'i' does not
+    match the dotless 'ı' as it does in ``re``; the index analysis
+    over-approximates with ``re``'s wider equivalences, which stays
+    sound). Index-pruned when the pattern admits required terms; always
+    verified by _verify_frame's pass over Arrow batches. Returns a
+    DataFrame with the single column ``id_col`` (distributed — no driver
+    arrays).
 
     ``prune=False`` forces the full-scan path (the equality test hook:
     pruned and unpruned results must be identical for every pattern)."""
-    re.compile(pattern)  # surface bad patterns before any job runs
+    _check_pattern(pattern)
     src = source_df.select(F.col(id_col), F.col(content_col))
     cands, n_bound = (_candidates_bounded(spark, index_dir, pattern)
                       if prune else (None, 0))
@@ -749,7 +748,7 @@ def regex_search_federated(spark: SparkSession, index_dirs: list[str],
     anti-join off the ordinals BEFORE the doc_id map. The unioned id
     frame semi-joins the source table once, and the ONE vectorized verify
     pass runs over surviving candidates only."""
-    re.compile(pattern)  # surface bad patterns before any job runs
+    _check_pattern(pattern)
     from .query import _excl_value  # late import: query imports us not
 
     src = source_df.select(F.col(id_col), F.col(content_col))

@@ -16,10 +16,14 @@ title/body columns in the `urls` table). Two serving regimes:
 
 - ``SearchService``: the default driver-map service (display dict keyed
   by doc_id — the "broadcast lookup table" regime, fine to ~10^8 docs);
-- ``FederatedSearchService``: the zero-driver-array regime (the
-  10^12-doc path: per-segment distributed kernels under the federation's
-  weights, distributed phrase, per-query k-row pushdown display/alias
-  resolution — no full-docs materialization anywhere, test-enforced).
+- ``FederatedSearchService``: the zero-driver-array regime: every
+  BM25/TF-IDF/BM25F query scores each segment with the driver engine's
+  own NumPy kernel in one Spark task per segment under the federation's
+  weights (one job per query), phrase/NEAR run distributed, and display/
+  alias fields resolve by per-query k-row pushdown — no full-docs
+  materialization anywhere, test-enforced. One task per segment bounds
+  a segment by what one executor can score (the build does not write
+  doc-range shards yet).
   One index is a federation of one: ``serve --big`` and
   ``SearchService(big=True)`` build exactly that; the NRT serving view
   (``serve --work``) is a federation of its live segments.
@@ -154,12 +158,11 @@ class SearchService:
     driver-array SearchEngine — the "broadcast lookup tables" regime,
     fine to ~10^8 docs.
 
-    ``big=True`` asks for the zero-driver-array regime instead (the
-    10^12-doc serving path). A single index is a federation of one, so
-    construction then returns ``FederatedSearchService(spark,
-    [index_dir])``: NO full-docs materialization anywhere
-    (test-enforced), every mode byte-identical to this service's
-    payloads (tests)."""
+    ``big=True`` asks for the zero-driver-array regime instead. A single
+    index is a federation of one, so construction then returns
+    ``FederatedSearchService(spark, [index_dir])``: NO full-docs
+    materialization anywhere (test-enforced), every mode byte-identical
+    to this service's payloads (tests)."""
 
     def __new__(cls, spark: SparkSession, index_dir: str,
                 big: bool = False, source_path: str | None = None):
@@ -425,8 +428,8 @@ def _mlt_rows(svc, rows) -> list[dict]:
 
 
 def _regex_rows(svc, out, k: int) -> list[dict]:
-    ids = [int(r["doc_id"]) for r in
-           out.orderBy("doc_id").limit(max(0, k)).collect()]
+    from .regex_query import matched_ids
+    ids = matched_ids(out, k)
     disp = svc.resolve_many(ids)
     return [{"url": disp[i][0], "title": disp[i][1], "doc_id": i}
             for i in ids]
@@ -455,31 +458,28 @@ class _Member:
         self._aliases_df = (
             spark.read.parquet(os.path.join(index_dir, "aliases"))
             if _stage_complete(index_dir, "aliases") else None)
-        self._path_df = None   # lazy warm path_index frame (bm25f)
-        self._plens_df = None  # lazy warm path_lens frame (bm25f)
+        self._path_df = None  # lazy warm path_index frame (bm25f)
 
-    def path_frames(self):
-        """(path_index, path_lens) frames: ensured and persisted on the
-        first bm25f query, released by close()."""
+    def path_frame(self):
+        """The path_index frame (bm25f's per-query path df aggregate):
+        ensured and persisted on the first bm25f query, released by
+        close()."""
         if self._path_df is None:
             from pyspark import StorageLevel
 
-            from .fields import ensure_path_index, path_lens_parquet
+            from .fields import ensure_path_index
             self._path_df = (self.spark.read.parquet(
                 ensure_path_index(self.spark, self.index_dir))
                 .persist(StorageLevel.MEMORY_AND_DISK))
-            self._plens_df = (self.spark.read.parquet(
-                path_lens_parquet(self.index_dir))
-                .persist(StorageLevel.MEMORY_AND_DISK))
-        return self._path_df, self._plens_df
+        return self._path_df
 
     def close(self) -> None:
         """Release the warm-start cache. Idempotent."""
-        for name in ("_index_df", "_docs_df", "_path_df", "_plens_df"):
+        for name in ("_index_df", "_docs_df", "_path_df"):
             df = getattr(self, name)
             if df is not None:
                 df.unpersist()
-        self._index_df = self._path_df = self._plens_df = None
+        self._index_df = self._path_df = None
 
     def canonical(self, doc_id: int) -> int | None:
         """The canonical id of an alias doc_id in this segment (one
@@ -759,8 +759,7 @@ class FederatedSearchService:
         from .mlt import more_like_this_federated
         return _mlt_rows(self, more_like_this_federated(
             self.spark, self.index_dirs, doc_id, k=k,
-            excludes=self._excl_bcs, ensure=self._work is not None,
-            **self._frames()))
+            excludes=self._excl_bcs, ensure=self._work is not None))
 
     def regex_payload(self, pattern: str, k: int = 100) -> list[dict]:
         """GET /regex over the federation (VERDICT r4 #2): per-segment
@@ -820,7 +819,7 @@ class FederatedSearchService:
         q, filters, not_terms, k, offset, is_wild, is_fuzzy = \
             _parse_search(query, k, offset, mode)
         restrict = {"excludes": self._excl_bcs, "filters": filters,
-                    "not_terms": not_terms, **self._frames()}
+                    "not_terms": not_terms}
         if mode == "phrase":
             pes = self._phrase_engines()
             if slop > 1:
@@ -845,25 +844,23 @@ class FederatedSearchService:
                 self.spark, self.index_dirs, q,
                 k=min(k, REFERENCE_MAX_RESULTS), **restrict)
         elif scoring == "bm25f":
-            # field-boosted ranking (VERDICT r4 #1): per-segment
-            # search_big_fielded under the federation's global two-field
-            # weights, k×S merge — freshly ingested docs get the path
-            # boost without waiting for a compaction
+            # field-boosted ranking: each member scored under the
+            # federation's global two-field weights, k×S merge — freshly
+            # ingested docs get the path boost without waiting for a
+            # compaction
             from .fields import search_big_fielded_federated
-            path_dfs, plens_dfs = zip(*(m.path_frames()
-                                        for m in self.members))
             rows = search_big_fielded_federated(
                 self.spark, self.index_dirs, q, k=k,
-                path_dfs=list(path_dfs), path_lens_dfs=list(plens_dfs),
+                path_dfs=[m.path_frame() for m in self.members],
                 **restrict)
         elif is_fuzzy:
             rows = search_big_fuzzy_federated(
                 self.spark, self.index_dirs, q[:-1].lower(), k=k,
-                **restrict)
+                idx_dfs=self._frames()["idx_dfs"], **restrict)
         elif is_wild:
             rows = search_big_prefix_federated(
                 self.spark, self.index_dirs, q[:-1].lower(), k=k,
-                **restrict)
+                idx_dfs=self._frames()["idx_dfs"], **restrict)
         else:
             rows = search_big_terms_federated(
                 self.spark, self.index_dirs, query_terms(q), k=k,
@@ -879,17 +876,23 @@ def make_server(service, host: str = "127.0.0.1",
     CLI blocks on it)."""
 
     class Handler(BaseHTTPRequestHandler):
-        def _reply(self, payload) -> None:
-            """200 with a JSON body — every endpoint's success path. The
-            reference pins its frontend origin (Searcher.java:201); a
-            library default can't know the deployment origin -> '*'."""
+        def _reply(self, payload, code: int = 200) -> None:
+            """A JSON body — every endpoint's success path, and errors as
+            {"error": message}: the message travels in the (ASCII-escaped)
+            body, the status line keeps the standard reason phrase, so a
+            message with any character still arrives. The reference pins
+            its frontend origin (Searcher.java:201); a library default
+            can't know the deployment origin -> '*'."""
             body = json.dumps(payload).encode()
-            self.send_response(200)
+            self.send_response(code)
             self.send_header("Access-Control-Allow-Origin", "*")
             self.send_header("Content-Type", "application/json")
             self.send_header("Content-Length", str(len(body)))
             self.end_headers()
             self.wfile.write(body)
+
+        def _fail(self, code: int, message: str) -> None:
+            self._reply({"error": message}, code)
 
         def _answer(self, compute, errors=(ValueError,)) -> None:
             """Reply with compute()'s payload; a rejected request (bad
@@ -897,7 +900,7 @@ def make_server(service, host: str = "127.0.0.1",
             try:
                 payload = compute()
             except errors as e:
-                self.send_error(400, str(e))
+                self._fail(400, str(e))
                 return
             self._reply(payload)
 
@@ -920,7 +923,7 @@ def make_server(service, host: str = "127.0.0.1",
                 try:
                     k = int(arg("k", "8"))
                 except ValueError:
-                    self.send_error(400, "k must be an integer")
+                    self._fail(400, "k must be an integer")
                     return
                 self._answer(lambda: service.suggest(arg("q"), k=k))
                 return
@@ -932,7 +935,7 @@ def make_server(service, host: str = "127.0.0.1",
                     doc_id = int(arg("doc_id"))
                     k = int(arg("k", "10"))
                 except ValueError:
-                    self.send_error(400, "doc_id/k must be integers")
+                    self._fail(400, "doc_id/k must be integers")
                     return
                 self._answer(lambda: service.mlt_payload(doc_id, k=k))
                 return
@@ -940,7 +943,7 @@ def make_server(service, host: str = "127.0.0.1",
                 try:
                     doc_id = int(arg("doc_id"))
                 except ValueError:
-                    self.send_error(400, "doc_id must be an integer")
+                    self._fail(400, "doc_id must be an integer")
                     return
                 self._answer(lambda: service.explain_payload(arg("query"),
                                                              doc_id))
@@ -950,14 +953,16 @@ def make_server(service, host: str = "127.0.0.1",
                 try:
                     k = int(arg("k", "100"))
                 except ValueError:
-                    self.send_error(400, "k must be an integer")
+                    self._fail(400, "k must be an integer")
                     return
                 if not pattern:
-                    self.send_error(400, "pattern is required")
+                    self._fail(400, "pattern is required")
                     return
                 import re as _re
+
+                import regex as _regex
                 self._answer(lambda: service.regex_payload(pattern, k=k),
-                             errors=(_re.error, ValueError))
+                             errors=(_re.error, _regex.error, ValueError))
                 return
             if u.path == "/facets":
                 fields = [f for f in arg("fields").split(",") if f]
@@ -965,45 +970,45 @@ def make_server(service, host: str = "127.0.0.1",
                 try:
                     kv = int(arg("k", "10"))
                 except ValueError:
-                    self.send_error(400, "k must be an integer")
+                    self._fail(400, "k must be an integer")
                     return
                 if not fields or mode not in ("ranked", "conjunctive"):
-                    self.send_error(400, "need fields=...; mode "
+                    self._fail(400, "need fields=...; mode "
                                     "ranked|conjunctive")
                     return
                 self._answer(lambda: service.facets(
                     arg("query"), fields, k_values=kv, mode=mode))
                 return
             if u.path != "/search":
-                self.send_error(404, "only /search is served")
+                self._fail(404, "only /search is served")
                 return
             try:
                 k = int(arg("k", "10"))
                 offset = int(arg("offset", "0"))
             except ValueError:
-                self.send_error(400, "k/offset must be integers")
+                self._fail(400, "k/offset must be integers")
                 return
             mode = arg("mode", "ranked")
             scoring = arg("scoring", "bm25")
             try:
                 slop = int(arg("slop", "1"))
             except ValueError:
-                self.send_error(400, "slop must be an integer")
+                self._fail(400, "slop must be an integer")
                 return
             if mode not in ("ranked", "conjunctive", "phrase", "near") or \
                     scoring not in ("bm25", "tfidf", "bm25f") or slop < 1 or \
                     offset < 0:
-                self.send_error(400, "bad mode/scoring/slop/offset")
+                self._fail(400, "bad mode/scoring/slop/offset")
                 return
             hi = arg("highlight", "0") not in ("0", "", "false")
             snip = arg("snippet", "0") not in ("0", "", "false")
             try:
                 snippet_w = int(arg("snippet_w", "30"))
             except ValueError:
-                self.send_error(400, "snippet_w must be an integer")
+                self._fail(400, "snippet_w must be an integer")
                 return
             if snippet_w < 1:
-                self.send_error(400, "snippet_w must be >= 1")
+                self._fail(400, "snippet_w must be >= 1")
                 return
             self._answer(lambda: service.search_payload(
                 arg("query"), k=k, mode=mode, scoring=scoring, slop=slop,

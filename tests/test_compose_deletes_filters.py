@@ -1,13 +1,12 @@
 """Three-way composition: metadata filters + NOT terms + tombstone deletes
 on the NRT federated view, in one serving stack.
 
-Why this composition needs its own test: logical deletes and NOT terms BOTH
-ride the decode-level exclusion array in `search_big_terms` (per member:
-dead ordinals from tombstoned content classes UNIONed with the NOT terms'
-posting ordinals), while metadata filters restrict the doc-length frame.
-Each mechanism is green in isolation (test_deletes, test_filtered_search);
-a faulty union or an exclusion applied before/after the filter join would
-silently resurrect one restriction only when the others are active.
+Why this composition needs its own test: logical deletes, NOT terms and
+metadata filters all restrict each member's candidate set in the scoring
+kernel (kernel.Segment._restrict) before θ is taken. Each mechanism is
+green in isolation (test_deletes, test_filtered_search); a faulty
+composition would silently resurrect one restriction only when the others
+are active.
 
 Expectation model (all three are result-set restrictions under the Lucene
 stats-until-merge discipline — statistics stay as built, a surviving doc's

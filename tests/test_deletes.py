@@ -222,7 +222,7 @@ def test_logical_delete_serving_all_modes(spark, tmp_path):
 
 
 def test_exclusion_prune_bitwise_and_idempotent_api(spark, tmp_path):
-    """search_big_terms with an exclusion array: pruned == unpruned
+    """search_big_terms_federated with an exclusion array: pruned == unpruned
     bitwise (θ and block bounds stay score-safe under masking), results
     never contain excluded docs, and the deletes API rejects empty input
     while tolerating duplicate/unknown ids."""

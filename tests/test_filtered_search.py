@@ -181,18 +181,6 @@ def test_big_filtered_matches_driver_bitwise(spark, built_index, engine):
     assert nonempty >= 3, "restriction cases should mostly have survivors"
 
 
-def test_big_hot_not_term_anti_join_path(spark, built_index, engine,
-                                         monkeypatch):
-    """Force the beyond-ship-limit regime: the NOT set stays distributed
-    (anti-join) and pruning is disabled — results identical."""
-    import engine.query as q
-    monkeypatch.setattr(q, "CANDIDATE_SHIP_LIMIT", 1)
-    out, _ = built_index
-    want = engine.search(QUERY, k=10, not_terms=["nil"])
-    got = search_big(spark, out, QUERY, k=10, not_terms=["nil"])
-    assert got == want and got
-
-
 def test_big_tfidf_filtered_matches_driver(spark, built_index, engine):
     out, _ = built_index
     filters = {"lang": "js"}

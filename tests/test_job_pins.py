@@ -5,7 +5,8 @@ runs does not. Each case below is warmed once (lazy stage builds, cache
 persists), then run again inside its own job group, and the jobs that
 group ran are counted (``setJobGroup`` + ``statusTracker``). A count may
 go down, never up: ``BIG_JOBS`` holds the counts measured for the big
-serving regime before it became a one-member federation, and a warm
+serving regime once every BM25/TF-IDF/BM25F top-k ran as one kernel task
+per member (one job, plus the 2-job display resolve), and a warm
 driver-regime query runs no Spark job at all.
 
 Stages that change the plan (positions, the fuzzy deletion table, the
@@ -23,22 +24,22 @@ _gid = itertools.count()
 
 #: jobs per warm request of ``serve --big`` (SearchService(big=True))
 BIG_JOBS = {
-    "ranked": 12,
-    "conjunctive": 10,
-    "filter": 12,
-    "not": 14,
-    "snippet": 12,
-    "offset": 12,
-    "tfidf": 8,
-    "bm25f": 16,
-    "wildcard": 12,
-    "fuzzy": 13,
+    "ranked": 3,
+    "conjunctive": 3,
+    "filter": 3,
+    "not": 3,
+    "snippet": 3,
+    "offset": 3,
+    "tfidf": 3,
+    "bm25f": 4,
+    "wildcard": 5,
+    "fuzzy": 6,
     "phrase": 7,
     "phrase_slop": 7,
     "near": 7,
     "explain": 3,
     "suggest": 1,
-    "didyoumean": 6,
+    "didyoumean": 4,
     "facets": 5,
 }
 
@@ -112,6 +113,8 @@ def test_big_jobs_per_request_never_grow(spark, big_service,
     assert set(got) == set(BIG_JOBS)
     worse = {n: (got[n], BIG_JOBS[n]) for n in got if got[n] > BIG_JOBS[n]}
     assert not worse, f"jobs per request grew (got, pinned): {worse}"
+    # NOT terms restrict inside the scoring task: no extra probe job
+    assert got["not"] <= got["ranked"], got
 
 
 def test_warm_driver_query_runs_no_job(spark, staged):
@@ -119,3 +122,24 @@ def test_warm_driver_query_runs_no_job(spark, staged):
     svc.search_payload("def return", k=5)
     assert jobs_of(spark, lambda: svc.search_payload("def return",
                                                      k=5)) == 0
+
+
+def test_federated_kernel_is_one_job(spark, built_index, tmp_path):
+    """search_big_terms_federated scores every member in ONE Spark job (a
+    task per member): over one segment and over two doc-disjoint ones."""
+    from engine.corpus import corpus_to_spark, make_corpus
+    from engine.index_build import build_index
+    from engine.query import search_big_terms_federated
+
+    out, _man = built_index
+    pdf = make_corpus(160, seed=91)
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    build_index(spark, corpus_to_spark(spark, pdf.iloc[:90]), a,
+                n_salts=2, partitions=2)
+    build_index(spark, corpus_to_spark(spark, pdf.iloc[90:]), b,
+                n_salts=2, partitions=2)
+    for dirs in ([out], [a, b]):
+        def run(dirs=dirs):
+            assert search_big_terms_federated(spark, dirs, ["def", "return"],
+                                              k=5)
+        assert jobs_of(spark, run) == 1, dirs

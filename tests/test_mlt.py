@@ -79,13 +79,13 @@ def test_interesting_terms_match_brute_force(spark, prepared, engine,
 
     want = sorted(sorted(vecs[doc], key=lambda t: (-w(t), t))
                   [:MLT_QUERY_TERMS])  # selection ranked, result sorted
-    got_doc, got = mlt_terms(spark, prepared, doc, index_df=engine.index_df)
+    got_doc, got = mlt_terms(spark, prepared, doc)
     assert got_doc == doc and got == want
 
 
 def test_mlt_equals_expansion_search_minus_source(spark, prepared, engine):
     doc = int(engine._ext_ids[7])
-    _d, terms = mlt_terms(spark, prepared, doc, index_df=engine.index_df)
+    _d, terms = mlt_terms(spark, prepared, doc)
     assert len(terms) == MLT_QUERY_TERMS
     got = more_like_this(engine, doc, k=10)
     want = [(i + 1, d, s) for i, (_r, d, s) in enumerate(
@@ -106,7 +106,7 @@ def test_mlt_top_hit_shares_vocabulary(spark, prepared, engine,
                                        fixture_corpus_pdf):
     """Sanity: the best match shares interesting terms with the source."""
     doc = int(engine._ext_ids[0])
-    _d, terms = mlt_terms(spark, prepared, doc, index_df=engine.index_df)
+    _d, terms = mlt_terms(spark, prepared, doc)
     got = more_like_this(engine, doc, k=3)
     assert got
     by_id = {int(r.doc_id): r.content for r in

@@ -5,7 +5,9 @@ Three layers:
    tokenize()'s term list (the offsets bridge must never drift from the
    index term space).
 2. literal-analysis SOUNDNESS (the load-bearing property): for any text
-   whose document model matches a pattern, every required clause is
+   whose document model matches a pattern (judged by the ``regex`` module
+   the verify pass runs — ``re`` can backtrack for minutes on generated
+   nested quantifiers), every required clause is
    satisfied by the text's token set — pruning may never lose a match.
    Property-tested over adversarial generated texts (tags, camelCase,
    underscores, token fragments).
@@ -18,6 +20,7 @@ Three layers:
 import re
 
 import pytest
+import regex
 from hypothesis import given, settings, strategies as st
 
 from engine.regex_query import (regex_candidates, regex_search,
@@ -117,7 +120,7 @@ def test_required_clauses_sound(text):
     model = _model(text)
     toks = set(tokenize(text))
     for pat in SOUNDNESS_PATTERNS:
-        if re.search(pat, model):
+        if regex.search(pat, model, regex.V0):
             for clause in required_clauses(pat):
                 assert any(set(alt) <= toks for alt in clause), \
                     (pat, text, clause, toks)
@@ -191,7 +194,7 @@ def test_generated_patterns_sound(pat, text):
     deterministic, and its clauses hold on every matching text."""
     cls = required_clauses(pat)
     assert cls == required_clauses(pat)
-    if re.search(pat, _model(text)):
+    if regex.search(pat, _model(text), regex.V0):
         toks = set(tokenize(text))
         for clause in cls:
             assert any(set(alt) <= toks for alt in clause), \
@@ -290,6 +293,49 @@ def test_regex_endpoint_errors(regex_served, spark, built_index):
     svc = SearchService(spark, idx)
     with pytest.raises(ValueError, match="--source"):
         svc.regex_payload(r"\bx\b")
+
+
+def test_regex_endpoint_answers_nested_quantifiers(regex_served):
+    """A nested-quantifier pattern that makes ``re`` backtrack
+    exponentially on long word runs answers within the request deadline
+    (the verify pass runs the ``regex`` module)."""
+    import json
+    import urllib.parse
+    import urllib.request
+    pattern = urllib.parse.quote(r"(?:\w+)+(?:\w+)+<")
+    url = f"{regex_served}/regex?pattern={pattern}"
+    with urllib.request.urlopen(url, timeout=30) as resp:
+        assert resp.status == 200
+        assert isinstance(json.loads(resp.read().decode()), list)
+
+
+def test_regex_verify_timeout_is_a_400(spark, built_index, tmp_path):
+    """A pattern whose backtracking outlasts the per-document verify
+    budget fails the request with a 400 naming the cause — the document
+    is never silently dropped."""
+    import json
+    import threading
+    import urllib.error
+    import urllib.parse
+    import urllib.request
+
+    from engine.regex_query import TOO_EXPENSIVE
+    from engine.server import SearchService, make_server
+    idx, _ = built_index
+    src = str(tmp_path / "src")
+    spark.createDataFrame([(1, "a" * 40 + "b"), (2, "plain text")],
+                          "doc_id long, content string").write.parquet(src)
+    srv = make_server(SearchService(spark, idx, source_path=src), port=0)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    try:
+        url = (f"http://127.0.0.1:{srv.server_address[1]}/regex?pattern="
+               f"{urllib.parse.quote('(a|aa)+$')}")
+        with pytest.raises(urllib.error.HTTPError) as e:
+            urllib.request.urlopen(url, timeout=60)
+        assert e.value.code == 400
+        assert TOO_EXPENSIVE in json.loads(e.value.read().decode())["error"]
+    finally:
+        srv.shutdown()
 
 
 def test_empty_and_zero_row_source(spark, built_index, source_df):
@@ -418,6 +464,32 @@ _ICASE_TEXTS = _WORDS + [
 ]
 
 
+#: the one (pattern, text) pair of the fixed lists where ``re`` and
+#: ``regex`` disagree: under IGNORECASE ``re`` also equates 'i' with the
+#: dotless 'ı' (its extra case equivalences), ``regex`` folds by Unicode
+#: simple case folding, where 'ı' stays apart from 'i'
+RE_ONLY_MATCH = (r"(?i)\bident\b", "ıdent")
+
+
+def test_re_and_regex_agree_on_fixed_lists():
+    """The verify pass runs ``regex`` (VERSION0) where the analysis reasons
+    in ``re`` semantics: on every fixed pattern x fixed text pair (where
+    ``re`` terminates) both find the same first match, the İ/ı/ſ/Kelvin
+    rows included — except where a text holds the pinned RE_ONLY_MATCH."""
+    texts = [_model(t) for t in TRICKY + _ICASE_TEXTS]
+    texts += [a + " " + b for a in texts for b in texts[:30]]
+    differ = set()
+    for pat in SOUNDNESS_PATTERNS + ICASE_PATTERNS:
+        for text in texts:
+            a = re.search(pat, text)
+            b = regex.search(pat, text, regex.V0)
+            if (a and a.span()) != (b and b.span()):
+                differ.add((pat, text))
+    pat, word = RE_ONLY_MATCH
+    assert (pat, word) in differ
+    assert all(p == pat and word in t for p, t in differ), differ
+
+
 def test_icase_multichar_lower_pattern_literal_is_opaque():
     """r5 review: 'İ'.lower() is 2 chars ('i' + combining dot) and under
     re.I the literal İ ALSO matches bare 'i' — so a pattern-İ must not
@@ -443,7 +515,7 @@ def test_icase_clauses_sound(text):
     model = _model(text)
     toks = set(tokenize(text))
     for pat in ICASE_PATTERNS:
-        if re.search(pat, model):
+        if regex.search(pat, model, regex.V0):
             for clause in required_clauses(pat):
                 assert any(set(alt) <= toks for alt in clause), \
                     (pat, text, clause, toks)
@@ -459,7 +531,7 @@ def test_generated_icase_patterns_sound(pat, text):
     pat = "(?i)" + pat
     cls = required_clauses(pat)
     assert cls == required_clauses(pat)
-    if re.search(pat, _model(text)):
+    if regex.search(pat, _model(text), regex.V0):
         toks = set(tokenize(text))
         for clause in cls:
             assert any(set(alt) <= toks for alt in clause), \

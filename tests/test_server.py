@@ -306,3 +306,25 @@ def test_benchmark_interface_names(spark, built_index, monkeypatch):
     finally:
         svc.close()
     assert calls == [1]
+
+
+def test_non_latin1_error_message_arrives_as_400(spark, built_index):
+    """A rejected request whose message holds a non-latin-1 character (the
+    em dash of the missing-field error) still answers 400, with the
+    message in the JSON body, on both services."""
+    import urllib.error
+    out, _man = built_index
+    for big in (False, True):
+        svc = SearchService(spark, out, big=big)
+        srv = make_server(svc, port=0)
+        threading.Thread(target=srv.serve_forever, daemon=True).start()
+        try:
+            with pytest.raises(urllib.error.HTTPError) as ei:
+                _get(f"http://127.0.0.1:{srv.server_address[1]}"
+                     "/facets?query=def&fields=nope")
+            assert ei.value.code == 400
+            msg = json.loads(ei.value.read().decode())["error"]
+            assert "'nope'" in msg and "—" in msg, msg
+        finally:
+            srv.shutdown()
+            svc.close()
