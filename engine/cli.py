@@ -284,7 +284,7 @@ def main(argv=None):
         q, filters, not_terms = parse_query(args.query)
         if args.mode == "phrase":
             from engine.positions import PhraseEngine
-            res = PhraseEngine(spark, args.index).search_phrase(
+            res = PhraseEngine(args.index).search_phrase(
                 q, k=args.k, filters=filters, not_terms=not_terms)
             print(json.dumps([
                 {"rank": r, "doc_id": d, "n_occ": n} for r, d, n in res]))

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import math
 import os
+import threading
 from collections import OrderedDict
 from dataclasses import dataclass
 from typing import NamedTuple
@@ -94,9 +95,11 @@ def _stage(index_dir: str, stage: str) -> ds.Dataset:
     return ds.dataset(os.path.join(index_dir, stage), format="parquet")
 
 
-def _term_rows(path: str, terms: list[str], columns: list[str]) -> pa.Table:
+def _term_rows(path: str, terms: list[str], columns: list[str],
+               where: pc.Expression | None = None) -> pa.Table:
+    cond = pc.field("term").isin(list(terms))
     return ds.dataset(path, format="parquet").to_table(
-        columns=columns, filter=pc.field("term").isin(list(terms)))
+        columns=columns, filter=cond if where is None else cond & where)
 
 
 def read_dictionary(index_dir: str, terms: list[str]
@@ -152,36 +155,42 @@ def meta_column(index_dir: str, name: str) -> np.ndarray:
 
 
 class _TermCache:
-    """LRU term -> value cache over a batch loader; evicts AFTER answering,
-    so a query wider than the whole budget still answers exactly."""
+    """LRU key -> value cache over a batch loader; evicts AFTER answering,
+    so a query wider than the whole budget still answers exactly. One lock
+    guards the dict work (not the load), so concurrent requests can share
+    a cache: another thread's eviction never lands between a membership
+    check and its read."""
 
-    def __init__(self, load, max_terms: int):
+    def __init__(self, load, max_keys: int):
         self._load = load
-        self._max = max_terms
+        self._max = max_keys
         self._d: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
 
     def __len__(self) -> int:
         return len(self._d)
 
-    def get(self, terms: list[str]) -> dict:
+    def get(self, keys: list) -> dict:
         out = {}
         missing = []
-        for t in terms:
-            if t in self._d:
-                self._d.move_to_end(t)  # LRU touch
-                if (v := self._d[t]) is not None:
-                    out[t] = v
-            else:
-                missing.append(t)
+        with self._lock:
+            for t in keys:
+                if t in self._d:
+                    self._d.move_to_end(t)  # LRU touch
+                    if (v := self._d[t]) is not None:
+                        out[t] = v
+                else:
+                    missing.append(t)
         if missing:
             got = self._load(missing)
-            for t in missing:
-                self._d[t] = v = got.get(t)  # None marks an absent term
-                if v is not None:
-                    out[t] = v
-            while len(self._d) > self._max:
-                self._d.popitem(last=False)
-        return {t: out[t] for t in terms if t in out}
+            with self._lock:
+                for t in missing:
+                    self._d[t] = v = got.get(t)  # None marks an absent key
+                    if v is not None:
+                        out[t] = v
+                while len(self._d) > self._max:
+                    self._d.popitem(last=False)
+        return {t: out[t] for t in keys if t in out}
 
 
 # ----------------------------------------------------------- path field

@@ -16,9 +16,10 @@ lets queries decode only the candidate docs' slices of a hot term:
       pos    = varint(within-doc delta positions, concatenated in ord order)
 
 All three decode independently and vectorized (no sequential record walk).
-Phrase matching is pure NumPy set algebra: each occurrence of phrase term
-j becomes the composite key ordinal*2^32 + (pos - j); a doc position
-starts the phrase iff the key survives intersection across all terms.
+Phrase matching (PhraseEngine) is pure NumPy set algebra, one storage
+block at a time: each occurrence of phrase term j becomes the composite
+key (ordinal - block base)*2^32 + (pos - j); a doc position starts the
+phrase iff the key survives intersection across all terms.
 
 Scale notes: build volume ~= total token occurrences (inherently — it IS
 the positional index); the packed-run shuffle keeps rows ~terms x salts x
@@ -30,6 +31,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Iterator
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -44,7 +46,13 @@ from .index_build import (
     partition_token_arrays,
     remap_keep,
 )
-from .kernel import _lookup, meta_column, read_postings
+from .kernel import Segment, _lookup, _TermCache, _term_rows
+from .query import (
+    _check_filters,
+    _excl_value,
+    _member_topks,
+    _merge_federated,
+)
 from .tokenizer import tokenize
 
 POS_RUN_SCHEMA = ("term string, salt int, ids binary, counts binary, "
@@ -506,570 +514,214 @@ def _near_match(k1: np.ndarray, k2: np.ndarray, p2: np.ndarray,
     return np.intersect1d(k1, window, assume_unique=True)
 
 
+def _block_keys(triple: tuple, base: np.int64) -> np.ndarray:
+    """Sorted composite keys (ordinal - base)*2^32 + pos of one decoded
+    (term, block) row. The ordinal is rebased to its storage block
+    (< 2^POS_BLOCK_BITS), so a key never overflows int64 at any corpus
+    size."""
+    ords, counts, pos = triple
+    return np.repeat(ords - base, counts) * _SHIFT + pos
+
+
+def _phrase_keys(slots: list[tuple], base: np.int64) -> np.ndarray:
+    """Start keys of the exact phrase in one block: slot j's keys shift
+    back by j, and a start survives iff every slot holds it. Slots
+    intersect rarest first (intersection commutes)."""
+    match = None
+    for j in sorted(range(len(slots)), key=lambda j: slots[j][2].size):
+        keys = _block_keys(slots[j], base) - np.int64(j)
+        if j:
+            keys = keys[slots[j][2] >= j]  # no phrase starts before pos 0
+        match = keys if match is None else np.intersect1d(
+            match, keys, assume_unique=True)
+        if not match.size:
+            break
+    return match
+
+
+def _chain_keys(slots: list[tuple], base: np.int64, slop: int
+                ) -> np.ndarray:
+    """Start keys of the windowed chain in one block, matched BACKWARD:
+    every position of the last slot is valid, and a position p of slot j
+    survives iff a valid position of slot j+1 lies within (p, p+slop] —
+    one _near_match per step."""
+    valid = _block_keys(slots[-1], base)
+    for j in range(len(slots) - 2, -1, -1):
+        if not valid.size:
+            break
+        valid = _near_match(_block_keys(slots[j], base), valid,
+                            valid % _SHIFT, slop)
+    return valid
+
+
+def near_terms(term1: str, term2: str) -> list[str]:
+    """`term1 NEAR/slop term2` as the two-slot chain [term1, term2]; []
+    (matches nothing) unless each side is exactly one token."""
+    t1, t2 = tokenize(term1), tokenize(term2)
+    return t1 + t2 if len(t1) == 1 == len(t2) else []
+
+
 class PhraseEngine:
-    """Exact-phrase search over the positional store. Matching is NumPy
-    set algebra on composite (ordinal, position) keys — no per-doc loops.
+    """Exact-phrase, sloppy-phrase and NEAR matching over ONE segment's
+    positional store — the positional twin of kernel.Segment, with no
+    Spark anywhere.
 
-    Traversal is candidate-driven, rarest term first: the rarest phrase
-    term decodes fully (it is small), every later term fetches+decodes
-    ONLY the storage blocks that still hold candidate docs (parquet
-    pushdown on (term, block)) — a stopword in the phrase costs a few
-    blocks, not its whole position stream.
+    Reads go through ``pyarrow.dataset`` like the kernel's: the queried
+    terms' block directory (term -> the storage blocks holding it), then
+    only the blocks that hold EVERY distinct query term — a doc's
+    positions for all terms share its one block — through a decoded-block
+    cache keyed by (term, block). A stopword in the phrase costs the
+    blocks of the rarer terms, not its whole position stream.
 
-    Regimes: the DRIVER matching paths key on global ordinal*2^32+pos
-    and are valid for ordinals < 2^31 — comfortably above their
-    documented <=10^8-doc low-latency regime. The *_distributed paths
-    rebase ordinals per storage block (local ordinal < 2^14) before
-    keying, so they are overflow-free at ANY corpus size and resolve
-    their top-k through a k-row broadcast join (no driver arrays)."""
+    Matching is NumPy set algebra on composite (ordinal, position) keys,
+    block by block with ordinals rebased to the block (_block_keys), so
+    it is overflow-free at any corpus size. Filters, NOT terms and
+    tombstone exclusions restrict the matching docs through the segment's
+    kernel.Segment._restrict — proximity ranking is doc-local, so
+    restriction commutes with the top-k — and doc ids come from its
+    ``_ext_ids``.
+
+    Regimes: the driver-map SearchService runs it in-process over its
+    SearchEngine segment (no Spark job, caches live with the service);
+    the big regime runs it per federation member inside one Spark task
+    (search_positional_federated), so a request is one job for any
+    number of members."""
 
     #: decoded-block cache budget — LRU-evicted past this many (term, block)
     #: entries, so a long-lived serve process holds bounded driver memory
     #: no matter how many distinct phrase queries it answers
     CACHE_MAX_BLOCKS = 4096
 
-    def __init__(self, spark: SparkSession, index_dir: str,
+    def __init__(self, index_dir: str, segment: Segment | None = None,
                  cache_max_blocks: int | None = None):
-        from collections import OrderedDict
-        self.spark = spark
         self.index_dir = index_dir
-        self.pos_df = spark.read.parquet(
-            os.path.join(index_dir, "positions"))
-        self._docs_df = spark.read.parquet(
-            os.path.join(index_dir, "docs"))
-        # tf-index frame, loaded lazily: only NOT-term exclusion reads it
-        # (a NOT term's doc set comes from its tf postings — decoding its
-        # POSITION stream would move every occurrence, not every doc)
-        self._index_df = None
-        # metadata filter columns by ordinal (driver paths; lazy, cached)
-        self._meta_cache: dict[str, np.ndarray] = {}
-        # ordinal -> doc_id driver array: materialized LAZILY, only by the
-        # low-latency driver-matching paths (<=10^8-doc regime). The
-        # distributed paths never touch it — their ordinals resolve via a
-        # k-row broadcast join (the search_big tail), so a 10^12-doc serve
-        # process can answer phrase/NEAR queries with no full-docs
-        # materialization anywhere (test-enforced).
-        self._ext_ids_arr: np.ndarray | None = None
-        # (term, block) -> decoded triple; None marks a fetched-empty block.
-        # LRU-bounded (ADVICE r2: the unbounded dict accumulated every
-        # decoded block forever in a serving process).
-        self._cache: "OrderedDict[tuple[str, int], tuple | None]" = \
-            OrderedDict()
-        self._cache_max = (cache_max_blocks if cache_max_blocks is not None
-                           else self.CACHE_MAX_BLOCKS)
-        self._occ: dict[str, int] = {}  # total occurrences per term
-        # logical-delete exclusion (deletes.py): sorted dead ordinals
-        self._excl_arr: np.ndarray | None = None
-        self._excl_bc = None
-
-    def set_exclusions(self, ordinals) -> None:
-        """Logical deletes (deletes.member_exclusions): a sorted
-        dead-ordinal array excluded from every subsequent result set on
-        BOTH matching regimes. Occurrence counts and relative ranking of
-        surviving docs are unchanged — phrase/NEAR matching is doc-local
-        — so exclusion here equals filtering the full result list (the
-        Lucene stats-until-merge contract, test-enforced). One Spark
-        broadcast per call (refresh-time, not per query); None clears."""
-        if self._excl_bc is not None:
-            self._excl_bc.unpersist()
-            self._excl_bc = None
-        self._excl_arr = None
-        if ordinals is not None and len(ordinals):
-            arr = np.sort(np.asarray(ordinals, dtype=np.int64))
-            self._excl_arr = arr
-            self._excl_bc = self.spark.sparkContext.broadcast(arr)
-
-    def _mask_dead(self, uniq: np.ndarray, n_occ: np.ndarray
-                   ) -> tuple[np.ndarray, np.ndarray]:
-        """Drop logically deleted ordinals from driver-path hits."""
-        exc = self._excl_arr
-        if exc is None or uniq.size == 0:
-            return uniq, n_occ
-        pos = np.searchsorted(exc, uniq)
-        pos_c = np.minimum(pos, exc.size - 1)
-        dead = (pos < exc.size) & (exc[pos_c] == uniq)
-        if dead.any():
-            return uniq[~dead], n_occ[~dead]
-        return uniq, n_occ
-
-    # ------------------------- result-set restriction (filters / NOT terms)
-    # Proximity ranking is doc-local (n_occ), so restricting the hit set
-    # before top-k equals filtering the full result list — the same
-    # stats-free argument as logical deletes (and the same application
-    # points: _mask_dead for the driver paths, _resolve_topk for the
-    # distributed ones).
-
-    def _the_index_df(self):
-        if self._index_df is None:
-            self._index_df = self.spark.read.parquet(
-                os.path.join(self.index_dir, "index"))
-        return self._index_df
-
-    def _meta_col(self, name: str) -> np.ndarray:
-        if name not in self._meta_cache:
-            self._meta_cache[name] = meta_column(self.index_dir, name)
-        return self._meta_cache[name]
-
-    def _restrict_driver(self, uniq: np.ndarray, n_occ: np.ndarray,
-                         filters: dict[str, str] | None,
-                         not_terms: list[str] | None
-                         ) -> tuple[np.ndarray, np.ndarray]:
-        """Driver-path hit restriction (the <=10^8-doc array regime, like
-        the rest of the driver paths)."""
-        uniq, n_occ = self._mask_dead(uniq, n_occ)
-        if filters and uniq.size:
-            keep = np.ones(uniq.size, dtype=bool)
-            for field, value in filters.items():
-                col = self._meta_col(field)[uniq]
-                keep &= (np.char.startswith(col, value)
-                         if field == "path" else (col == value))
-            uniq, n_occ = uniq[keep], n_occ[keep]
-        if not_terms and uniq.size:
-            bad = read_postings(self.index_dir, sorted(set(not_terms)))
-            if bad:
-                excl = np.unique(np.concatenate(
-                    [tp.doc_ids for tp in bad.values()]))
-                keep = ~_lookup(excl, uniq)[1]
-                uniq, n_occ = uniq[keep], n_occ[keep]
-        return uniq, n_occ
-
-    def _restrict_hits(self, hits: DataFrame,
-                       filters: dict[str, str] | None,
-                       not_terms: list[str] | None) -> DataFrame:
-        """Distributed-path hit restriction: a broadcast semi-join against
-        the filtered docs ordinals and an anti-join against the NOT terms'
-        posting ordinals — both before the top-k sort+limit, no driver
-        array anywhere (hit frames hold matching docs only)."""
-        if filters:
-            from .query import _filters_col
-            hits = hits.join(
-                self._docs_df
-                .where(_filters_col(filters, self._docs_df.columns))
-                .select("ordinal"), "ordinal", "leftsemi")
-        if not_terms:
-            from .query import _ordinals_frame
-            hits = hits.join(
-                _ordinals_frame(self._the_index_df(),
-                                sorted(set(not_terms))),
-                "ordinal", "left_anti")
-        return hits
-
-    def _filter_hits(self, hits: DataFrame) -> DataFrame:
-        """Drop logically deleted ordinals from distributed hit rows —
-        BEFORE the top-k sort+limit, so exclusion is exact. The dead set
-        rides the refresh-time broadcast; hit frames are tiny (matching
-        docs only), so the extra Arrow hop is noise."""
-        bc = self._excl_bc
-        if bc is None:
-            return hits
-
-        def f(batches):
-            exc = bc.value
-            for pdf in batches:
-                u = pdf["ordinal"].to_numpy(np.int64)
-                pos = np.searchsorted(exc, u)
-                pos_c = np.minimum(pos, exc.size - 1)
-                dead = (pos < exc.size) & (exc[pos_c] == u)
-                yield pdf[~dead] if dead.any() else pdf
-
-        return hits.mapInPandas(f, schema="ordinal long, n_occ long")
-
-    def _cache_put(self, key: tuple[str, int], val) -> None:
-        self._cache[key] = val
-        self._cache.move_to_end(key)
-        while len(self._cache) > self._cache_max:
-            self._cache.popitem(last=False)
-
-    def _cache_hit(self, key: tuple[str, int]):
-        """Fetch + mark recently-used (None stays a valid 'empty' marker)."""
-        val = self._cache.get(key)
-        if key in self._cache:
-            self._cache.move_to_end(key)
-        return val
-
-    def clear_cache(self) -> None:
-        self._cache.clear()
+        self._path = os.path.join(index_dir, "positions")
+        self._seg = segment
+        budget = (cache_max_blocks if cache_max_blocks is not None
+                  else self.CACHE_MAX_BLOCKS)
+        self._dir = _TermCache(self._read_dir, budget)
+        self._blocks = _TermCache(self._read_blocks, budget)
 
     @property
-    def _ext_ids(self) -> np.ndarray:
-        if self._ext_ids_arr is None:
-            docs = (self._docs_df.select("ordinal", "doc_id")
-                    .orderBy("ordinal").toPandas())
-            self._ext_ids_arr = docs["doc_id"].to_numpy(np.int64)
-        return self._ext_ids_arr
+    def segment(self) -> Segment:
+        """The segment that restricts hits and maps ordinals to doc ids,
+        read on first need (a query without hits reads no docs column).
+        It never scores, so it carries no BM25 weights."""
+        if self._seg is None:
+            self._seg = Segment(self.index_dir, 0, 0.0)
+        return self._seg
 
-    def _resolve_topk(self, hits: DataFrame, k: int,
-                      filters: dict[str, str] | None = None,
-                      not_terms: list[str] | None = None
-                      ) -> list[tuple[int, int, int]]:
-        """(ordinal, n_occ) hit rows -> [(rank, doc_id, n_occ)] via
-        distributed sort+limit and a k-row broadcast join to doc_id —
-        ordinal asc == doc_id asc, so tie-breaks carry. No driver array."""
-        hits = self._filter_hits(hits)
-        hits = self._restrict_hits(hits, filters, not_terms)
-        top = (hits.orderBy(F.col("n_occ").desc(), "ordinal").limit(k)
-               .select("ordinal", "n_occ"))
-        rows = (F.broadcast(top)
-                .join(self._docs_df.select("ordinal", "doc_id"), "ordinal")
-                .orderBy(F.col("n_occ").desc(), "ordinal")
-                .collect())
-        return [(i + 1, int(r["doc_id"]), int(r["n_occ"]))
-                for i, r in enumerate(rows)]
+    def _read_dir(self, terms: list[str]) -> dict[str, np.ndarray]:
+        tbl = _term_rows(self._path, terms, ["term", "block"])
+        got: dict[str, list[int]] = {}
+        for t, b in zip(tbl.column("term").to_pylist(),
+                        tbl.column("block").to_pylist()):
+            got.setdefault(t, []).append(b)
+        return {t: np.unique(np.array(bs, dtype=np.int64))
+                for t, bs in got.items()}
 
-    def _term_occ(self, terms: list[str]) -> dict[str, int]:
-        missing = [t for t in set(terms) if t not in self._occ]
-        if missing:
-            rows = (self.pos_df.where(F.col("term").isin(missing))
-                    .groupBy("term").agg(F.sum("n").alias("n")).collect())
-            got = {r["term"]: int(r["n"]) for r in rows}
-            for t in missing:
-                self._occ[t] = got.get(t, 0)
-        return {t: self._occ[t] for t in set(terms)}
+    def _read_blocks(self, keys: list[tuple[str, int]]) -> dict:
+        want = set(keys)
+        cols = ["term", "block", "ords", "counts", "pos"]
+        blocks = pc.field("block").isin(sorted({b for _t, b in want}))
+        tbl = _term_rows(self._path, sorted({t for t, _b in want}), cols,
+                         blocks)
+        return {(t, b): decode_position_row(o, c, p)
+                for t, b, o, c, p in zip(
+                    *(tbl.column(x).to_pylist() for x in cols))
+                if (t, b) in want}
 
-    def _fetch_blocks(self, term: str, blocks: np.ndarray | None
-                      ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """Decoded (ords, counts, positions) of `term`, restricted to
-        `blocks` (None = all). Block-granular cache."""
-        # `have` holds this call's working set directly — the LRU cache is
-        # an accelerator only; eviction can never drop a needed block
-        have: dict[int, tuple | None] = {}
-        if blocks is None:
-            cond = F.col("term") == term
-            wanted = None
-        else:
-            wanted = []
-            for b in (int(x) for x in blocks):
-                if (term, b) in self._cache:
-                    have[b] = self._cache_hit((term, b))
-                else:
-                    wanted.append(b)
-            cond = (F.col("term") == term) & F.col("block").isin(wanted)
-        if blocks is None or wanted:
-            rows = (self.pos_df.where(cond)
-                    .select("block", "ords", "counts", "pos").collect())
-            got = {int(r["block"]): decode_position_row(
-                bytes(r["ords"]), bytes(r["counts"]), bytes(r["pos"]))
-                for r in rows}
-            if blocks is None:
-                have = got
-            else:
-                for b in wanted:
-                    have[b] = got.get(b)
-            for b, v in got.items():
-                self._cache_put((term, b), v)
-            if blocks is not None:
-                for b in wanted:
-                    if b not in got:
-                        self._cache_put((term, b), None)
-        use = sorted(have)
-        parts = [v for b in use if (v := have.get(b))]
-        if not parts:
-            z = np.empty(0, dtype=np.int64)
-            return z, z, z
-        return (np.concatenate([p[0] for p in parts]),
-                np.concatenate([p[1] for p in parts]),
-                np.concatenate([p[2] for p in parts]))
+    def topk(self, terms: list[str], slop: int | None = None, k: int = 10,
+             filters: dict[str, str] | None = None,
+             not_terms: list[str] | None = None,
+             exclude: np.ndarray | None = None
+             ) -> list[tuple[int, int, int]]:
+        """[(rank, doc_id, n_occ)] of the docs matching the token sequence
+        ``terms``, ranked by n_occ DESC then doc_id ASC. slop=None: the
+        exact phrase, n_occ its occurrences. slop>=1: the windowed chain
+        p_0 < ... < p_{m-1} of the terms in order with every gap
+        p_j - p_{j-1} <= slop, n_occ the distinct starting positions p_0.
+        filters/not_terms/exclude (sorted dead ordinals) restrict the
+        result set."""
+        if not terms or k <= 0 or (slop is not None and slop < 1):
+            return []
+        distinct = sorted(set(terms))
+        dirs = self._dir.get(distinct)
+        if len(dirs) < len(distinct):
+            return []  # some term absent from the segment
+        blocks = reduce(np.intersect1d, [dirs[t] for t in distinct]).tolist()
+        dec = self._blocks.get([(t, b) for t in distinct for b in blocks])
+        ords, n_occ = [], []
+        for b in blocks:
+            base = np.int64(b << POS_BLOCK_BITS)
+            slots = [dec[(t, b)] for t in terms]
+            keys = (_phrase_keys(slots, base) if slop is None
+                    else _chain_keys(slots, base, slop))
+            u, n = np.unique(keys // _SHIFT, return_counts=True)
+            ords.append(u + base)
+            n_occ.append(n)
+        ords = np.concatenate(ords) if ords else np.empty(0, np.int64)
+        if not ords.size:
+            return []
+        n_occ = np.concatenate(n_occ)
+        seg = self.segment
+        keep = _lookup(seg._restrict(ords, filters, not_terms, exclude),
+                       ords)[1]
+        ords, n_occ = ords[keep], n_occ[keep]
+        order = np.lexsort((ords, -n_occ))[:k]
+        return [(i + 1, int(seg._ext_ids[ords[j]]), int(n_occ[j]))
+                for i, j in enumerate(order)]
 
     def search_phrase(self, phrase: str, k: int = 10,
                       filters: dict[str, str] | None = None,
                       not_terms: list[str] | None = None
                       ) -> list[tuple[int, int, int]]:
-        """[(rank, doc_id, n_occurrences)] of docs containing the EXACT
-        token sequence (engine tokenizer semantics), ranked by occurrence
-        count desc then doc_id asc. filters/not_terms restrict the result
-        set (see _restrict_driver)."""
-        terms = tokenize(phrase)  # order + duplicates preserved
-        if not terms or k <= 0:
-            return []
-        occ = self._term_occ(terms)
-        if any(occ[t] == 0 for t in set(terms)):
-            return []  # some phrase term absent anywhere
-        # visit phrase slots rarest-term-first (intersection commutes;
-        # each slot j keeps its own key shift)
-        slots = sorted(enumerate(terms), key=lambda jt: (occ[jt[1]], jt[0]))
-        match: np.ndarray | None = None
-        for j, t in slots:
-            if match is None:
-                ords, counts, pos = self._fetch_blocks(t, None)
-            else:
-                cand_blocks = np.unique(
-                    (match // _SHIFT) >> np.int64(POS_BLOCK_BITS))
-                ords, counts, pos = self._fetch_blocks(t, cand_blocks)
-            keys = np.repeat(ords, counts) * _SHIFT + pos - np.int64(j)
-            if j:
-                keys = keys[pos >= j]  # phrase can't start before doc pos 0
-            match = keys if match is None else np.intersect1d(
-                match, keys, assume_unique=True)
-            if match.size == 0:
-                return []
-        doc_ords = (match // _SHIFT).astype(np.int64)
-        uniq, n_occ = np.unique(doc_ords, return_counts=True)
-        uniq, n_occ = self._restrict_driver(uniq, n_occ, filters, not_terms)
-        order = np.lexsort((uniq, -n_occ))[:k]
-        return [(i + 1, int(self._ext_ids[uniq[j]]), int(n_occ[j]))
-                for i, j in enumerate(order)]
+        """Docs containing the EXACT token sequence (engine tokenizer
+        semantics), n_occ its occurrences."""
+        return self.topk(tokenize(phrase), None, k, filters, not_terms)
 
-    def search_near(self, term1: str, term2: str, slop: int = 1,
-                    k: int = 10,
-                    filters: dict[str, str] | None = None,
-                    not_terms: list[str] | None = None
-                    ) -> list[tuple[int, int, int]]:
-        """Proximity search `term1 NEAR/slop term2` (ordered): ranks docs
-        where an occurrence of term2 follows term1 within `slop` positions
-        (slop=1 == exact adjacency). n_occ counts the matching term1
-        positions. Same composite-key set algebra as search_phrase — the
-        slop window is the union of `slop` shifted copies of term2's keys
-        (deduplicated, so each term1 position counts once no matter how
-        many term2 occurrences land in its window). Rarest term decodes
-        first; the other fetches only candidate blocks."""
-        t1 = tokenize(term1)
-        t2 = tokenize(term2)
-        if len(t1) != 1 or len(t2) != 1 or slop < 1 or k <= 0:
-            return []
-        t1, t2 = t1[0], t2[0]
-        occ = self._term_occ([t1, t2])
-        if occ[t1] == 0 or occ[t2] == 0:
-            return []
-        if occ[t2] <= occ[t1]:  # decode the rarer side fully
-            o2, c2, p2 = self._fetch_blocks(t2, None)
-            k2 = np.repeat(o2, c2) * _SHIFT + p2
-            cand = np.unique(k2 // _SHIFT) >> np.int64(POS_BLOCK_BITS)
-            o1, c1, p1 = self._fetch_blocks(t1, np.unique(cand))
-            k1 = np.repeat(o1, c1) * _SHIFT + p1
-        else:
-            o1, c1, p1 = self._fetch_blocks(t1, None)
-            k1 = np.repeat(o1, c1) * _SHIFT + p1
-            cand = np.unique(k1 // _SHIFT) >> np.int64(POS_BLOCK_BITS)
-            o2, c2, p2 = self._fetch_blocks(t2, np.unique(cand))
-            k2 = np.repeat(o2, c2) * _SHIFT + p2
-        matched = _near_match(k1, k2, p2, slop)
-        if matched.size == 0:
-            return []
-        uniq, n_occ = np.unique(matched // _SHIFT, return_counts=True)
-        uniq, n_occ = self._restrict_driver(uniq, n_occ, filters, not_terms)
-        order = np.lexsort((uniq, -n_occ))[:k]
-        return [(i + 1, int(self._ext_ids[uniq[j]]), int(n_occ[j]))
-                for i, j in enumerate(order)]
-
-    def search_phrase_sloppy(self, phrase: str, slop: int = 1,
-                             k: int = 10,
+    def search_phrase_sloppy(self, phrase: str, slop: int = 1, k: int = 10,
                              filters: dict[str, str] | None = None,
                              not_terms: list[str] | None = None
                              ) -> list[tuple[int, int, int]]:
-        """Windowed-chain phrase search: docs containing positions
-        p_0 < p_1 < ... < p_{m-1} of the phrase terms (in order) with
-        every consecutive gap p_j - p_{j-1} <= slop. slop=1 is exactly
-        search_phrase (test-enforced); n_occ counts the distinct starting
-        positions p_0 that begin at least one valid chain. Matching runs
-        BACKWARD: valid positions of the last term are all its
-        occurrences; a position of term j survives iff some surviving
-        position of term j+1 lies within (p, p+slop] — each step is the
-        same shifted-key intersection as NEAR, so the whole chain is
-        m-1 _near_match calls over composite keys. Fetch is
-        candidate-driven like search_phrase: the rarest term decodes
-        fully first, every other term only its candidate blocks."""
-        terms = tokenize(phrase)
-        if not terms or slop < 1 or k <= 0:
-            return []
-        if len(terms) == 1:
-            return self.search_phrase(phrase, k=k, filters=filters,
-                                      not_terms=not_terms)
-        occ = self._term_occ(terms)
-        if any(occ[t] == 0 for t in set(terms)):
-            return []
-        # fetch keys for every slot, rarest term first: its blocks bound
-        # every later fetch (a matching doc must contain the rarest term,
-        # so restricting to its blocks is a correct superset)
-        order = sorted(range(len(terms)), key=lambda j: (occ[terms[j]], j))
-        keys: dict[int, np.ndarray] = {}
-        cand_blocks = None
-        for j in order:
-            t = terms[j]
-            o, c, p = self._fetch_blocks(t, cand_blocks)
-            kj = np.repeat(o, c) * _SHIFT + p
-            keys[j] = kj
-            if kj.size == 0:
-                return []
-            if cand_blocks is None:
-                cand_blocks = np.unique(
-                    (kj // _SHIFT) >> np.int64(POS_BLOCK_BITS))
-        valid = keys[len(terms) - 1]
-        for j in range(len(terms) - 2, -1, -1):
-            kj = keys[j]
-            # positions of valid (j+1)-chains, shifted back into slot j's
-            # window: p_j survives iff p_{j+1} in (p_j, p_j + slop]
-            pv = (valid % _SHIFT).astype(np.int64)
-            valid = _near_match(kj, valid, pv, slop)
-            if valid.size == 0:
-                return []
-        uniq, n_occ = np.unique(valid // _SHIFT, return_counts=True)
-        uniq, n_occ = self._restrict_driver(uniq, n_occ, filters, not_terms)
-        ordr = np.lexsort((uniq, -n_occ))[:k]
-        return [(i + 1, int(self._ext_ids[uniq[j]]), int(n_occ[j]))
-                for i, j in enumerate(ordr)]
+        """Windowed-chain phrase search (see topk); slop=1 equals
+        search_phrase (test-enforced)."""
+        return self.topk(tokenize(phrase), slop, k, filters, not_terms)
 
-    def search_near_distributed(self, term1: str, term2: str, slop: int = 1,
-                                k: int = 10,
+    def search_near(self, term1: str, term2: str, slop: int = 1,
+                    k: int = 10, filters: dict[str, str] | None = None,
+                    not_terms: list[str] | None = None
+                    ) -> list[tuple[int, int, int]]:
+        """Ordered proximity `term1 NEAR/slop term2`: term1 positions with
+        a term2 occurrence within the next `slop` positions (slop=1 is
+        exact adjacency), n_occ counting those term1 positions — the
+        two-slot chain."""
+        return self.topk(near_terms(term1, term2), slop, k, filters,
+                         not_terms)
+
+
+def search_positional_federated(spark: SparkSession, index_dirs: list[str],
+                                terms: list[str], slop: int | None = None,
+                                k: int = 10, excludes: list | None = None,
                                 filters: dict[str, str] | None = None,
                                 not_terms: list[str] | None = None
                                 ) -> list[tuple[int, int, int]]:
-        """search_near as a Spark job (same result — tests assert it):
-        per-storage-block applyInPandas groups intersect locally, only
-        (ordinal, n_occ) hit rows leave the executors — the hot-term NEAR
-        path at scale, mirroring search_phrase_distributed."""
-        import pandas as pd
+    """PhraseEngine.topk over a federation of doc-disjoint segments in ONE
+    Spark job, a task per member (query._member_topks): no doc array and
+    no position reaches the driver, only the k×S result rows. n_occ is
+    doc-local, so the members' top-ks merge exactly by (n_occ DESC,
+    doc_id ASC) — ordinals ascend with doc_id within and across segments —
+    and restriction inside each member commutes with the merge.
+    excludes: per-member dead-ordinal arrays or Broadcasts."""
+    if (not terms or k <= 0 or not index_dirs
+            or (slop is not None and slop < 1)):
+        return []
+    _check_filters(index_dirs, filters)
 
-        t1l, t2l = tokenize(term1), tokenize(term2)
-        if len(t1l) != 1 or len(t2l) != 1 or slop < 1 or k <= 0:
-            return []
-        t1, t2 = t1l[0], t2l[0]
-        shift = int(_SHIFT)
+    def score(i):
+        return PhraseEngine(index_dirs[i]).topk(
+            terms, slop, k, filters, not_terms,
+            _excl_value(excludes[i]) if excludes else None), (0, 0, [])
 
-        def kern(pdf: pd.DataFrame) -> pd.DataFrame:
-            # ordinals REBASE to the block (ordinal - block<<BITS < 2^14)
-            # before keying: global ordinal*2^32 keys would wrap int64
-            # past 2^31 docs — exactly the regime this path serves
-            base = np.int64(int(pdf["block"].iloc[0]) << POS_BLOCK_BITS)
-            by_term = {}
-            for r in pdf.itertuples(index=False):
-                by_term[r.term] = decode_position_row(
-                    bytes(r.ords), bytes(r.counts), bytes(r.pos))
-            empty = pd.DataFrame({"ordinal": np.empty(0, np.int64),
-                                  "n_occ": np.empty(0, np.int64)})
-            if t1 not in by_term or t2 not in by_term:
-                return empty
-            o1, c1, p1 = by_term[t1]
-            o2, c2, p2 = by_term[t2]
-            k1 = np.repeat(o1 - base, c1) * np.int64(shift) + p1
-            k2 = np.repeat(o2 - base, c2) * np.int64(shift) + p2
-            matched = _near_match(k1, k2, p2, slop)
-            if matched.size == 0:
-                return empty
-            uniq, n_occ = np.unique(matched // np.int64(shift),
-                                    return_counts=True)
-            return pd.DataFrame({"ordinal": uniq.astype(np.int64) + base,
-                                 "n_occ": n_occ.astype(np.int64)})
-
-        tset = [t1] if t1 == t2 else [t1, t2]
-        hits = (self.pos_df.where(F.col("term").isin(tset))
-                .select("term", "block", "ords", "counts", "pos")
-                .groupBy("block")
-                .applyInPandas(kern, schema="ordinal long, n_occ long"))
-        return self._resolve_topk(hits, k, filters, not_terms)
-
-    def search_phrase_sloppy_distributed(self, phrase: str, slop: int = 1,
-                                         k: int = 10,
-                                         filters: dict[str, str] | None
-                                         = None,
-                                         not_terms: list[str] | None = None
-                                         ) -> list[tuple[int, int, int]]:
-        """search_phrase_sloppy as a Spark job (same result — tests assert
-        it): chain matching is per-doc local and a doc's positions for all
-        terms share one storage block, so each applyInPandas group runs
-        the backward shifted-key chain over one block and only
-        (ordinal, n_occ) hit rows leave the executors."""
-        import pandas as pd
-
-        terms = tokenize(phrase)
-        if not terms or slop < 1 or k <= 0:
-            return []
-        if len(terms) == 1:
-            return self.search_phrase_distributed(phrase, k=k,
-                                                  filters=filters,
-                                                  not_terms=not_terms)
-        tset = sorted(set(terms))
-        need = len(tset)
-        shift = int(_SHIFT)
-        m = len(terms)
-
-        def kern(pdf: pd.DataFrame) -> pd.DataFrame:
-            # per-block ordinal rebase — see search_near_distributed
-            base = np.int64(int(pdf["block"].iloc[0]) << POS_BLOCK_BITS)
-            by_term = {}
-            for r in pdf.itertuples(index=False):
-                by_term[r.term] = decode_position_row(
-                    bytes(r.ords), bytes(r.counts), bytes(r.pos))
-            empty = pd.DataFrame({"ordinal": np.empty(0, np.int64),
-                                  "n_occ": np.empty(0, np.int64)})
-            if len(by_term) < need:
-                return empty
-            keys = {}
-            for j in range(m):
-                o, c, p = by_term[terms[j]]
-                keys[j] = np.repeat(o - base, c) * np.int64(shift) + p
-                if keys[j].size == 0:
-                    return empty
-            valid = keys[m - 1]
-            for j in range(m - 2, -1, -1):
-                pv = (valid % np.int64(shift)).astype(np.int64)
-                valid = _near_match(keys[j], valid, pv, slop)
-                if valid.size == 0:
-                    return empty
-            uniq, n_occ = np.unique(valid // np.int64(shift),
-                                    return_counts=True)
-            return pd.DataFrame({"ordinal": uniq.astype(np.int64) + base,
-                                 "n_occ": n_occ.astype(np.int64)})
-
-        hits = (self.pos_df.where(F.col("term").isin(tset))
-                .select("term", "block", "ords", "counts", "pos")
-                .groupBy("block")
-                .applyInPandas(kern, schema="ordinal long, n_occ long"))
-        return self._resolve_topk(hits, k, filters, not_terms)
-
-    def search_phrase_distributed(self, phrase: str, k: int = 10,
-                                  filters: dict[str, str] | None = None,
-                                  not_terms: list[str] | None = None
-                                  ) -> list[tuple[int, int, int]]:
-        """Same result as search_phrase (tests assert it), computed as a
-        Spark job: phrase matching is per-doc local and every doc's
-        positions for ALL terms share one storage block, so blocks are
-        embarrassingly parallel — each applyInPandas group decodes and
-        intersects one block's slices, and only (ordinal, n_occ) hit rows
-        leave the executors. This is the stopword-phrase path at scale:
-        the driver variant above moves every hot-term occurrence through
-        one machine; this one moves none."""
-        import pandas as pd
-
-        terms = tokenize(phrase)
-        if not terms or k <= 0:
-            return []
-        slots = list(enumerate(terms))
-        tset = sorted(set(terms))
-        need = len(tset)
-        shift = int(_SHIFT)
-
-        def kern(pdf: pd.DataFrame) -> pd.DataFrame:
-            # per-block ordinal rebase: global ordinal*2^32 keys would
-            # wrap int64 past 2^31 docs — the regime this path serves
-            base = np.int64(int(pdf["block"].iloc[0]) << POS_BLOCK_BITS)
-            by_term = {}
-            for r in pdf.itertuples(index=False):  # <= |terms| rows
-                by_term[r.term] = decode_position_row(
-                    bytes(r.ords), bytes(r.counts), bytes(r.pos))
-            empty = pd.DataFrame({"ordinal": np.empty(0, np.int64),
-                                  "n_occ": np.empty(0, np.int64)})
-            if len(by_term) < need:
-                return empty
-            ordered = sorted(slots,
-                             key=lambda jt: by_term[jt[1]][1].sum())
-            match = None
-            for j, t in ordered:
-                ords, counts, pos = by_term[t]
-                keys = np.repeat(ords - base, counts) * np.int64(shift) \
-                    + pos - np.int64(j)
-                if j:
-                    keys = keys[pos >= j]
-                match = keys if match is None else np.intersect1d(
-                    match, keys, assume_unique=True)
-                if match.size == 0:
-                    return empty
-            uniq, n_occ = np.unique(match // np.int64(shift),
-                                    return_counts=True)
-            return pd.DataFrame({"ordinal": uniq.astype(np.int64) + base,
-                                 "n_occ": n_occ.astype(np.int64)})
-
-        hits = (self.pos_df.where(F.col("term").isin(tset))
-                .select("term", "block", "ords", "counts", "pos")
-                .groupBy("block")
-                .applyInPandas(kern, schema="ordinal long, n_occ long"))
-        return self._resolve_topk(hits, k, filters, not_terms)
+    per, _counters = _member_topks(spark, index_dirs, score)
+    return [(r, d, int(n)) for r, d, n in _merge_federated(per, k)]

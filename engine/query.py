@@ -269,9 +269,9 @@ def _excl_frame(spark, exc: np.ndarray):
 
 def _ordinals_frame(index_df, terms: list[str]):
     """DISTINCT ordinals of the given terms' postings as a DataFrame — a
-    NOT-term exclusion set that stays distributed (facets, phrase): the
-    frame anti-joins the hit rows instead of shipping an ordinal array to
-    the driver."""
+    NOT-term exclusion set that stays distributed (facets): the frame
+    anti-joins the hit rows instead of shipping an ordinal array to the
+    driver."""
     import pandas as pd
 
     def dec(batches):

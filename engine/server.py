@@ -19,11 +19,13 @@ title/body columns in the `urls` table). Two serving regimes:
 - ``FederatedSearchService``: the zero-driver-array regime: every
   BM25/TF-IDF/BM25F query scores each segment with the driver engine's
   own NumPy kernel in one Spark task per segment under the federation's
-  weights (one job per query), phrase/NEAR run distributed, and display/
-  alias fields resolve by per-query k-row pushdown — no full-docs
+  weights (one job per query), phrase/NEAR match each segment with the
+  driver regime's own positional matcher (engine/positions.py
+  PhraseEngine) in the same one-task-per-segment job, and display/alias
+  fields resolve by per-query k-row pushdown — no full-docs
   materialization anywhere, test-enforced. One task per segment bounds
-  a segment by what one executor can score (the build does not write
-  doc-range shards yet).
+  a segment by what one executor can score or match (the build does not
+  write doc-range shards yet).
   One index is a federation of one: ``serve --big`` and
   ``SearchService(big=True)`` build exactly that; the NRT serving view
   (``serve --work``) is a federation of its live segments.
@@ -235,7 +237,7 @@ class SearchService:
             if not _stage_complete(self.index_dir, "positions"):
                 raise _no_positions("this index")
             from .positions import PhraseEngine
-            self._phrase = PhraseEngine(self.spark, self.index_dir)
+            self._phrase = PhraseEngine(self.index_dir, segment=self.engine)
         return self._phrase
 
     def stats(self) -> dict:
@@ -344,19 +346,10 @@ class SearchService:
         only)."""
         q, filters, not_terms, k, offset, is_wild, is_fuzzy = \
             _parse_search(query, k, offset, mode)
-        if mode == "phrase":
-            pe = self._phrase_engine()
-            if slop > 1:  # windowed-chain phrase (slop=1 == exact)
-                rows = pe.search_phrase_sloppy(
-                    q, slop=slop, k=k, filters=filters,
-                    not_terms=not_terms)
-            else:
-                rows = pe.search_phrase(q, k=k, filters=filters,
-                                        not_terms=not_terms)
-        elif mode == "near":
-            a, b = _near_pair(q)
-            rows = self._phrase_engine().search_near(
-                a, b, slop=slop, k=k, filters=filters, not_terms=not_terms)
+        if mode in ("phrase", "near"):
+            rows = self._phrase_engine().topk(
+                *_positional(q, mode, slop), k=k, filters=filters,
+                not_terms=not_terms)
         elif scoring == "tfidf":
             rows = self.engine.search_tfidf_reference(
                 q, k=min(k, REFERENCE_MAX_RESULTS),
@@ -403,11 +396,19 @@ def _parse_search(query: str, k: int, offset: int, mode: str):
             single and q.endswith("*"), single and q.endswith("~"))
 
 
-def _near_pair(q: str) -> tuple[str, str]:
+def _positional(q: str, mode: str, slop: int
+                ) -> tuple[list[str], int | None]:
+    """A phrase/near request as PhraseEngine.topk's (terms, slop): a
+    phrase with slop<=1 is exact, a larger slop the windowed chain; near
+    is the two-slot chain."""
+    from .positions import near_terms
+    from .tokenizer import tokenize
+    if mode == "phrase":
+        return tokenize(q), (slop if slop > 1 else None)
     parts = q.split()
     if len(parts) != 2:
         raise ValueError("mode=near needs exactly two terms")
-    return parts[0], parts[1]
+    return near_terms(*parts), slop
 
 
 def _render(svc, rows, q: str, is_wild: bool, highlight: bool,
@@ -574,7 +575,6 @@ class FederatedSearchService:
     def _open(self, dirs: list[str]) -> None:
         self.index_dirs = list(dirs)
         self.members = [_Member(self.spark, d) for d in dirs]
-        self._phrases: list | None = None
         self._excl_bcs: list | None = None
         self._load_exclusions()
 
@@ -609,9 +609,6 @@ class FederatedSearchService:
         sc = self.spark.sparkContext
         self._excl_bcs = [sc.broadcast(a) if a is not None else None
                           for a in arrs]
-        if self._phrases is not None:
-            for pe, a in zip(self._phrases, arrs):
-                pe.set_exclusions(a)
 
     def _drop_exclusions(self) -> None:
         if getattr(self, "_excl_bcs", None):
@@ -619,9 +616,6 @@ class FederatedSearchService:
                 if b is not None:
                     b.unpersist()
         self._excl_bcs = None
-        if self._phrases is not None:
-            for pe in self._phrases:
-                pe.set_exclusions(None)
 
     def refresh(self) -> list[str]:
         """Re-resolve the serving view; swap members only when the view
@@ -645,21 +639,12 @@ class FederatedSearchService:
         for m in self.members:
             m.close()
 
-    def _phrase_engines(self) -> list:
-        if self._phrases is None:
-            from .positions import PhraseEngine
-            for d in self.index_dirs:
-                if not _stage_complete(d, "positions"):
-                    raise _no_positions(
-                        "this index" if len(self.index_dirs) == 1
-                        else f"federation member {d}")
-            self._phrases = [PhraseEngine(self.spark, d)
-                             for d in self.index_dirs]
-            if self._excl_bcs is not None:
-                for pe, b in zip(self._phrases, self._excl_bcs):
-                    pe.set_exclusions(
-                        b.value if b is not None else None)
-        return self._phrases
+    def _check_positions(self) -> None:
+        for d in self.index_dirs:
+            if not _stage_complete(d, "positions"):
+                raise _no_positions(
+                    "this index" if len(self.index_dirs) == 1
+                    else f"federation member {d}")
 
     def _contents_of(self, ids: list[int]) -> dict[int, str]:
         # the source table is federation-wide (it backs /regex too)
@@ -680,14 +665,6 @@ class FederatedSearchService:
         for i in rest:
             out[i] = (str(i), "", "")
         return out
-
-    def _merge_counts(self, per: list[tuple[int, int, int]], k: int
-                      ) -> list[tuple[int, int, int]]:
-        """Occurrence-count results are doc-local, so the per-segment
-        lists merge exactly by the engines' (count DESC, doc_id ASC)."""
-        per.sort(key=lambda t: (-t[2], t[1]))
-        return [(i + 1, doc_id, n)
-                for i, (_r, doc_id, n) in enumerate(per[:k])]
 
     def stats(self) -> dict:
         """Federation-wide statistics: integer-summed member manifests
@@ -820,25 +797,12 @@ class FederatedSearchService:
             _parse_search(query, k, offset, mode)
         restrict = {"excludes": self._excl_bcs, "filters": filters,
                     "not_terms": not_terms}
-        if mode == "phrase":
-            pes = self._phrase_engines()
-            if slop > 1:
-                per = [r for pe in pes for r in
-                       pe.search_phrase_sloppy_distributed(
-                           q, slop=slop, k=k, filters=filters,
-                           not_terms=not_terms)]
-            else:
-                per = [r for pe in pes
-                       for r in pe.search_phrase_distributed(
-                           q, k=k, filters=filters, not_terms=not_terms)]
-            rows = self._merge_counts(per, k)
-        elif mode == "near":
-            a, b = _near_pair(q)
-            per = [r for pe in self._phrase_engines() for r in
-                   pe.search_near_distributed(a, b, slop=slop, k=k,
-                                              filters=filters,
-                                              not_terms=not_terms)]
-            rows = self._merge_counts(per, k)
+        if mode in ("phrase", "near"):
+            from .positions import search_positional_federated
+            self._check_positions()
+            rows = search_positional_federated(
+                self.spark, self.index_dirs, *_positional(q, mode, slop),
+                k=k, **restrict)
         elif scoring == "tfidf":
             rows = search_big_tfidf_federated(
                 self.spark, self.index_dirs, q,

@@ -29,7 +29,7 @@ def main() -> None:
     from engine import query as q
     from engine.corpus import make_corpus_spark
     from engine.index_build import build_index
-    from engine.positions import PhraseEngine
+    from engine.positions import near_terms, search_positional_federated
     from engine.query import SearchEngine, search_big
     from engine.session import get_spark
 
@@ -112,23 +112,27 @@ def main() -> None:
     res["big_ranked_filtered_s"] = round(time.time() - t0, 3)
     assert [x[1] for x in rbf] == [x[1] for x in rf]
 
-    # positional operators, per-block distributed paths, 100%-hot terms
-    pe = PhraseEngine(spark, out)
+    # positional operators through the federated entry (one task matches
+    # the segment block by block), 100%-hot terms
     t0 = time.time()
-    ph = pe.search_phrase_distributed("def return", k=10)
+    ph = search_positional_federated(spark, [out], ["def", "return"], k=10)
     res["phrase_distributed_s"] = round(time.time() - t0, 3)
     assert ph
     t0 = time.time()
-    nr = pe.search_near_distributed("def", "import", slop=3, k=10)
+    nr = search_positional_federated(spark, [out],
+                                     near_terms("def", "import"), slop=3,
+                                     k=10)
     res["near3_distributed_s"] = round(time.time() - t0, 3)
     assert nr
     t0 = time.time()
-    sl = pe.search_phrase_sloppy_distributed("def return import",
-                                             slop=4, k=10)
+    sl = search_positional_federated(spark, [out],
+                                     ["def", "return", "import"], slop=4,
+                                     k=10)
     res["sloppy4_distributed_s"] = round(time.time() - t0, 3)
     assert sl
     t0 = time.time()
-    pf = pe.search_phrase_distributed("def return", k=10, filters=filt)
+    pf = search_positional_federated(spark, [out], ["def", "return"], k=10,
+                                     filters=filt)
     res["phrase_filtered_distributed_s"] = round(time.time() - t0, 3)
     assert pf
 

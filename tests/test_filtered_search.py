@@ -262,14 +262,19 @@ def test_phrase_and_near_restriction(spark, tmp_path, fixture_corpus_pdf):
     the full result list); a mid-token '-' stays punctuation."""
     from engine.corpus import corpus_to_spark
     from engine.index_build import build_index
-    from engine.positions import PhraseEngine, build_positions
+    from engine.positions import (
+        PhraseEngine,
+        build_positions,
+        near_terms,
+        search_positional_federated,
+    )
     from engine.server import SearchService
     out = str(tmp_path / "idx")
     build_index(spark, corpus_to_spark(spark, fixture_corpus_pdf), out,
                 n_salts=4, partitions=4)
     build_positions(spark, corpus_to_spark(spark, fixture_corpus_pdf), out,
                     n_salts=4, partitions=4)
-    pe = PhraseEngine(spark, out)
+    pe = PhraseEngine(out)
     filters = {"lang": "python"}
     kbig = len(fixture_corpus_pdf)
     langs = dict(zip(fixture_corpus_pdf["doc_id"].astype(int),
@@ -282,19 +287,24 @@ def test_phrase_and_near_restriction(spark, tmp_path, fixture_corpus_pdf):
     want = [(d, n) for _r, d, n in full
             if langs[d] == "python" and "import" not in tokenize(texts[d])]
     want = [(i + 1, d, n) for i, (d, n) in enumerate(want[:5])]
-    for fn in (pe.search_phrase, pe.search_phrase_distributed):
-        got = fn("def return", k=5, filters=filters, not_terms=["import"])
-        assert got == want and got, fn.__name__
+    got = pe.search_phrase("def return", k=5, filters=filters,
+                           not_terms=["import"])
+    assert got == want and got
+    got = search_positional_federated(spark, [out], tokenize("def return"),
+                                      k=5, filters=filters,
+                                      not_terms=["import"])
+    assert got == want and got
 
     # NEAR + sloppy, driver vs distributed equality under restriction
-    for a, b in ((pe.search_near, pe.search_near_distributed),):
-        d1 = a("def", "return", slop=3, k=5, filters=filters)
-        d2 = b("def", "return", slop=3, k=5, filters=filters)
-        assert d1 == d2 and d1
-        assert all(langs[d] == "python" for _, d, _ in d1)
+    d1 = pe.search_near("def", "return", slop=3, k=5, filters=filters)
+    d2 = search_positional_federated(spark, [out],
+                                     near_terms("def", "return"), slop=3,
+                                     k=5, filters=filters)
+    assert d1 == d2 and d1
+    assert all(langs[d] == "python" for _, d, _ in d1)
     s1 = pe.search_phrase_sloppy("def return", slop=3, k=5, filters=filters)
-    s2 = pe.search_phrase_sloppy_distributed("def return", slop=3, k=5,
-                                             filters=filters)
+    s2 = search_positional_federated(spark, [out], tokenize("def return"),
+                                     slop=3, k=5, filters=filters)
     assert s1 == s2 and s1
 
     # served: operator syntax parses in phrase mode; mid-token '-' does not

@@ -101,8 +101,8 @@ def test_incremental_compaction_consumes_only_new(spark, tmp_path):
     for q in ["def return", "identifier_10"]:
         assert eng.search(q, k=10, mode="ranked") == oracle.topk(q, 10,
                                                                  "ranked")
-    pe_inc = PhraseEngine(spark, gen2)
-    pe_bat = PhraseEngine(spark, batch_all)
+    pe_inc = PhraseEngine(gen2)
+    pe_bat = PhraseEngine(batch_all)
     assert pe_inc.search_phrase("def return", k=10) == \
         pe_bat.search_phrase("def return", k=10)
 

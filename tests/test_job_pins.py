@@ -5,9 +5,10 @@ runs does not. Each case below is warmed once (lazy stage builds, cache
 persists), then run again inside its own job group, and the jobs that
 group ran are counted (``setJobGroup`` + ``statusTracker``). A count may
 go down, never up: ``BIG_JOBS`` holds the counts measured for the big
-serving regime once every BM25/TF-IDF/BM25F top-k ran as one kernel task
-per member (one job, plus the 2-job display resolve), and a warm
-driver-regime query runs no Spark job at all.
+serving regime once every BM25/TF-IDF/BM25F top-k and every phrase/NEAR
+match ran as one kernel task per member (one job, plus the 2-job display
+resolve), and a warm driver-regime query runs no Spark job at all — nor
+does a cold phrase/NEAR one.
 
 Stages that change the plan (positions, the fuzzy deletion table, the
 path index) are ensured up front, so the counts do not depend on which
@@ -34,9 +35,9 @@ BIG_JOBS = {
     "bm25f": 4,
     "wildcard": 5,
     "fuzzy": 6,
-    "phrase": 7,
-    "phrase_slop": 7,
-    "near": 7,
+    "phrase": 3,
+    "phrase_slop": 3,
+    "near": 3,
     "explain": 3,
     "suggest": 1,
     "didyoumean": 4,
@@ -122,24 +123,36 @@ def test_warm_driver_query_runs_no_job(spark, staged):
     svc.search_payload("def return", k=5)
     assert jobs_of(spark, lambda: svc.search_payload("def return",
                                                      k=5)) == 0
+    # the positional matcher reads the stage itself: no job even cold
+    for name in ("phrase", "phrase_slop", "near"):
+        def run(case=SEARCH_CASES[name]):
+            assert svc.search_payload(k=5, **case)
+        assert jobs_of(spark, run) == 0, (name, "cold")
+        assert jobs_of(spark, run) == 0, (name, "warm")
 
 
-def test_federated_kernel_is_one_job(spark, built_index, tmp_path):
-    """search_big_terms_federated scores every member in ONE Spark job (a
-    task per member): over one segment and over two doc-disjoint ones."""
+def test_federated_kernel_is_one_job(spark, staged, tmp_path):
+    """search_big_terms_federated and search_positional_federated score
+    or match every member in ONE Spark job (a task per member): over one
+    segment and over two doc-disjoint ones."""
     from engine.corpus import corpus_to_spark, make_corpus
     from engine.index_build import build_index
+    from engine.positions import search_positional_federated
     from engine.query import search_big_terms_federated
 
-    out, _man = built_index
     pdf = make_corpus(160, seed=91)
     a, b = str(tmp_path / "a"), str(tmp_path / "b")
     build_index(spark, corpus_to_spark(spark, pdf.iloc[:90]), a,
-                n_salts=2, partitions=2)
+                n_salts=2, partitions=2, with_positions=True)
     build_index(spark, corpus_to_spark(spark, pdf.iloc[90:]), b,
-                n_salts=2, partitions=2)
-    for dirs in ([out], [a, b]):
+                n_salts=2, partitions=2, with_positions=True)
+    for dirs in ([staged], [a, b]):
         def run(dirs=dirs):
             assert search_big_terms_federated(spark, dirs, ["def", "return"],
                                               k=5)
+
+        def phrase(dirs=dirs):
+            assert search_positional_federated(spark, dirs,
+                                               ["def", "return"], k=5)
         assert jobs_of(spark, run) == 1, dirs
+        assert jobs_of(spark, phrase) == 1, dirs

@@ -155,7 +155,7 @@ def test_merge_positions_match_monolithic(spark, tmp_path, monkeypatch):
                   n_salts=4, partitions=4)
     assert pos_fp(out_m) == pos_fp(dirs["full"])
 
-    pe_m, pe_f = PhraseEngine(spark, out_m), PhraseEngine(spark, dirs["full"])
+    pe_m, pe_f = PhraseEngine(out_m), PhraseEngine(dirs["full"])
     for phrase in ["def return", "class self"]:
         assert pe_m.search_phrase(phrase, k=10) == \
             pe_f.search_phrase(phrase, k=10), phrase

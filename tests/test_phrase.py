@@ -2,10 +2,17 @@
 Python oracle (tokenize each doc, scan for the exact token subsequence),
 ranked by occurrence count desc then doc_id asc."""
 
+import os
+
 import numpy as np
 import pytest
 
-from engine.positions import PhraseEngine, build_positions
+from engine.positions import (
+    PhraseEngine,
+    build_positions,
+    near_terms,
+    search_positional_federated,
+)
 from engine.tokenizer import tokenize
 
 
@@ -15,7 +22,7 @@ def phrase_engine(spark, built_index, fixture_corpus_pdf):
     from engine.corpus import corpus_to_spark
     build_positions(spark, corpus_to_spark(spark, fixture_corpus_pdf),
                     out, n_salts=4, partitions=4)
-    return PhraseEngine(spark, out)
+    return PhraseEngine(out)
 
 
 def _oracle(pdf, phrase, k=10):
@@ -64,7 +71,9 @@ def test_positions_decode_roundtrip(spark, phrase_engine):
     """Every stored row decodes to sorted ordinals, counts matching the
     position segment lengths, and in-doc ascending positions."""
     from engine.positions import decode_position_row
-    rows = phrase_engine.pos_df.limit(50).collect()
+    rows = (spark.read.parquet(os.path.join(phrase_engine.index_dir,
+                                            "positions"))
+            .limit(50).collect())
     assert rows
     for r in rows:
         ords, counts, pos = decode_position_row(
@@ -78,11 +87,15 @@ def test_positions_decode_roundtrip(spark, phrase_engine):
             assert (np.diff(seg) > 0).all() if c > 1 else True
 
 
-def test_distributed_phrase_equals_driver(phrase_engine, fixture_corpus_pdf):
+def test_distributed_phrase_equals_driver(spark, phrase_engine,
+                                          fixture_corpus_pdf):
+    dirs = [phrase_engine.index_dir]
     for phrase in ["def return", "class self", "return return", "def"]:
-        assert phrase_engine.search_phrase_distributed(phrase, k=10) == \
+        assert search_positional_federated(spark, dirs, tokenize(phrase),
+                                           k=10) == \
             phrase_engine.search_phrase(phrase, k=10), phrase
-    assert phrase_engine.search_phrase_distributed("zzz_nope def", k=5) == []
+    assert search_positional_federated(spark, dirs,
+                                       tokenize("zzz_nope def"), k=5) == []
 
 
 # ------------------------------------------------------- NEAR/slop queries
@@ -122,14 +135,16 @@ def test_near_slop1_equals_exact_bigram(phrase_engine):
             phrase_engine.search_phrase(f"{t1} {t2}", k=10), (t1, t2)
 
 
-def test_near_distributed_equals_driver(phrase_engine):
+def test_near_distributed_equals_driver(spark, phrase_engine):
+    dirs = [phrase_engine.index_dir]
     for t1, t2, slop in [("def", "return", 3), ("return", "return", 2),
                          ("value", "index", 4)]:
-        assert phrase_engine.search_near_distributed(t1, t2, slop=slop,
-                                                     k=10) == \
+        assert search_positional_federated(spark, dirs, near_terms(t1, t2),
+                                           slop=slop, k=10) == \
             phrase_engine.search_near(t1, t2, slop=slop, k=10), (t1, t2)
-    assert phrase_engine.search_near_distributed("zzz_nope", "def",
-                                                 slop=3, k=5) == []
+    assert search_positional_federated(spark, dirs,
+                                       near_terms("zzz_nope", "def"),
+                                       slop=3, k=5) == []
 
 
 def test_near_edge_cases(phrase_engine):
@@ -177,15 +192,17 @@ def test_sloppy_slop1_equals_exact_phrase(phrase_engine):
             phrase_engine.search_phrase(phrase, k=10), phrase
 
 
-def test_sloppy_distributed_equals_driver(phrase_engine):
+def test_sloppy_distributed_equals_driver(spark, phrase_engine):
+    dirs = [phrase_engine.index_dir]
     for phrase, slop in [("def return", 3), ("def value return", 4),
                          ("return return", 2)]:
-        assert phrase_engine.search_phrase_sloppy_distributed(
-            phrase, slop=slop, k=10) == \
+        assert search_positional_federated(spark, dirs, tokenize(phrase),
+                                           slop=slop, k=10) == \
             phrase_engine.search_phrase_sloppy(phrase, slop=slop, k=10), \
             (phrase, slop)
-    assert phrase_engine.search_phrase_sloppy_distributed(
-        "zzz_nope def", slop=3, k=5) == []
+    assert search_positional_federated(spark, dirs,
+                                       tokenize("zzz_nope def"), slop=3,
+                                       k=5) == []
 
 
 # ---------------------------------------- kernel property tests (no Spark)
@@ -260,7 +277,7 @@ def test_lru_cache_bound_preserves_results(spark, built_index,
     not change any result — the cache is an accelerator, never a
     correctness dependency (ADVICE r2: unbounded growth in serving)."""
     out, _man = built_index
-    tiny = PhraseEngine(spark, out, cache_max_blocks=1)
+    tiny = PhraseEngine(out, cache_max_blocks=1)
     full = phrase_engine
     for phrase in ["def return", "class self", "def"]:
         assert tiny.search_phrase(phrase, k=10) == \
@@ -268,9 +285,7 @@ def test_lru_cache_bound_preserves_results(spark, built_index,
     for t1, t2, slop in [("def", "return", 3), ("value", "index", 4)]:
         assert tiny.search_near(t1, t2, slop=slop, k=10) == \
             full.search_near(t1, t2, slop=slop, k=10)
-    assert len(tiny._cache) <= 1
-    tiny.clear_cache()
-    assert len(tiny._cache) == 0
+    assert len(tiny._blocks) <= 1
 
 
 def test_single_scan_positions_byte_identical(spark, tmp_path):
@@ -327,6 +342,106 @@ def test_single_scan_positions_phrase_serves(spark, tmp_path):
     b = str(tmp_path / "ph_b")
     build_index(spark, corpus, b, n_salts=2, partitions=2,
                 with_positions=True)
-    ea, eb = PhraseEngine(spark, a), PhraseEngine(spark, b)
+    ea, eb = PhraseEngine(a), PhraseEngine(b)
     for q in ["join spark", "scan window", "slow fast", "order by key"]:
         assert eb.search_phrase(q, k=20) == ea.search_phrase(q, k=20)
+
+
+# --------------------------- multi-block matching (no Spark, edge ordinals)
+
+_BITS = 14  # POS_BLOCK_BITS
+_EDGE_ORDS = [0, 5, (1 << _BITS) - 1, 1 << _BITS, (1 << _BITS) + 3,
+              2 << _BITS, (2 << _BITS) + 1]
+_N_SEG_DOCS = (2 << _BITS) + 2
+
+
+def _ext_id(ordinal: int) -> int:
+    return 3 * ordinal + 7  # monotone in the ordinal, like a real build
+
+
+def _write_segment(root: str, docs: dict[int, list[str]]) -> None:
+    """A minimal segment: the positions stage written row for row by the
+    build's block emitter, and a docs stage of ordinal/doc_id/doc_len."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from engine.positions import POS_BLOCK_BITS, _emit_pos_blocks
+    assert POS_BLOCK_BITS == _BITS
+    occ: dict[str, list[tuple[int, int]]] = {}
+    for o in sorted(docs):
+        for p, t in enumerate(docs[o]):
+            occ.setdefault(t, []).append((o, p))
+    rows: list = []
+    for t in sorted(occ):
+        ords = np.array([o for o, _p in occ[t]], dtype=np.int64)
+        pos = np.array([p for _o, p in occ[t]], dtype=np.int64)
+        ids, counts = np.unique(ords, return_counts=True)
+        _emit_pos_blocks(t, ids, counts.astype(np.int32), pos, rows)
+    cols = list(zip(*rows)) if rows else [[]] * 7
+    os.makedirs(os.path.join(root, "positions"))
+    pq.write_table(pa.table({
+        "term": pa.array(cols[0], pa.string()),
+        "block": pa.array(cols[1], pa.int64()),
+        "df": pa.array(cols[2], pa.int64()),
+        "n": pa.array(cols[3], pa.int64()),
+        "ords": pa.array(cols[4], pa.binary()),
+        "counts": pa.array(cols[5], pa.binary()),
+        "pos": pa.array(cols[6], pa.binary())}),
+        os.path.join(root, "positions", "part-0.parquet"))
+    ordinal = np.arange(_N_SEG_DOCS, dtype=np.int64)
+    os.makedirs(os.path.join(root, "docs"))
+    pq.write_table(pa.table({
+        "ordinal": ordinal, "doc_id": _ext_id(ordinal),
+        "doc_len": np.array([max(len(docs.get(o, [])), 1)
+                             for o in range(_N_SEG_DOCS)], np.int64)}),
+        os.path.join(root, "docs", "part-0.parquet"))
+
+
+def _brute(docs, count) -> list[tuple[int, int, int]]:
+    hits = [(_ext_id(o), n) for o, toks in docs.items() if (n := count(toks))]
+    hits.sort(key=lambda x: (-x[1], x[0]))
+    return [(i + 1, d, n) for i, (d, n) in enumerate(hits)]
+
+
+def _brute_phrase(terms):
+    m = len(terms)
+    return lambda toks: sum(toks[i:i + m] == terms
+                            for i in range(len(toks) - m + 1))
+
+
+def _brute_chain(terms, slop):
+    def count(toks):
+        valid = {i for i, t in enumerate(toks) if t == terms[-1]}
+        for j in range(len(terms) - 2, -1, -1):
+            valid = {i for i, t in enumerate(toks) if t == terms[j]
+                     and any(i + d in valid for d in range(1, slop + 1))}
+        return len(valid)
+    return count
+
+
+def _brute_near(t1, t2, slop):
+    return lambda toks: sum(t == t1 and t2 in toks[i + 1:i + 1 + slop]
+                            for i, t in enumerate(toks))
+
+
+@given(st.lists(st.lists(st.sampled_from("abc"), max_size=10),
+                min_size=len(_EDGE_ORDS), max_size=len(_EDGE_ORDS)),
+       st.lists(st.sampled_from("abc"), min_size=1, max_size=3),
+       st.integers(1, 3))
+@settings(max_examples=40, deadline=None)
+def test_matcher_across_storage_blocks(tokens, terms, slop):
+    """Phrase, sloppy and NEAR over docs in three storage blocks — the
+    ordinals at both sides of each block edge (2^14-1, 2^14, 2·2^14) —
+    equal a brute-force token scan, doc ids mapped through the segment."""
+    import tempfile
+    docs = dict(zip(_EDGE_ORDS, tokens))
+    with tempfile.TemporaryDirectory() as root:
+        _write_segment(root, docs)
+        eng = PhraseEngine(root)
+        k = len(docs)
+        assert eng.topk(terms, None, k) == _brute(docs, _brute_phrase(terms))
+        assert eng.topk(terms, slop, k) == \
+            _brute(docs, _brute_chain(terms, slop))
+        t1, t2 = terms[0], terms[-1]
+        assert eng.search_near(t1, t2, slop=slop, k=k) == \
+            _brute(docs, _brute_near(t1, t2, slop))

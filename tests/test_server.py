@@ -118,8 +118,11 @@ def test_big_service_matches_driver_and_never_materializes(
     must return byte-identical payloads to the driver-map service for
     bm25 ranked/conjunctive and phrase/NEAR, resolve aliases, and do it
     with ZERO DataFrame.toPandas calls (call-count assert) — no full-docs
-    display map, no ordinal->doc_id driver array (stays lazy/unbuilt)."""
+    display map — and ZERO kernel.read_docs calls in this (driver)
+    process: no ordinal->doc_id driver array, phrase/NEAR included."""
     import pyspark.sql
+
+    import engine.kernel
 
     from engine.corpus import corpus_to_spark
     from engine.positions import build_positions
@@ -136,6 +139,14 @@ def test_big_service_matches_driver_and_never_materializes(
         return orig(self_df, *a, **kw)
 
     monkeypatch.setattr(pyspark.sql.DataFrame, "toPandas", counted)
+    reads = {"n": 0}
+    orig_read = engine.kernel.read_docs
+
+    def counted_read(*a, **kw):
+        reads["n"] += 1
+        return orig_read(*a, **kw)
+
+    monkeypatch.setattr(engine.kernel, "read_docs", counted_read)
     big_svc = SearchService(spark, out, big=True)
     cases = [dict(query="def return", mode="ranked"),
              dict(query="def return", mode="conjunctive"),
@@ -148,13 +159,14 @@ def test_big_service_matches_driver_and_never_materializes(
              dict(query="identifier_10 identifier_11", scoring="tfidf"),
              dict(query="de*")]
     for case in cases:
+        before = reads["n"]
         got = big_svc.search_payload(k=5, **case)
+        # the doc arrays are read inside the members' tasks only
+        assert reads["n"] == before, case
         want = driver_svc.search_payload(k=5, **case)
         assert got == want, case
         assert got, case  # every case must actually return hits
     assert calls["n"] == 0  # nothing in the big path materializes docs
-    # driver array never built
-    assert big_svc._phrases[0]._ext_ids_arr is None
     big_svc.close()
 
 
@@ -196,7 +208,7 @@ def test_phrase_and_wildcard_served(spark, built_index, fixture_corpus_pdf):
     base = f"http://127.0.0.1:{srv.server_address[1]}"
     try:
         _, hits = _get(f"{base}/search?query=def+return&mode=phrase&k=5")
-        expected = PhraseEngine(spark, out).search_phrase("def return", k=5)
+        expected = PhraseEngine(out).search_phrase("def return", k=5)
         assert [h["rank_score"] for h in hits] == [n for _, _, n in expected]
         assert hits and all(set(h) == {"url", "rank_score", "title", "body"}
                             for h in hits)
@@ -205,7 +217,7 @@ def test_phrase_and_wildcard_served(spark, built_index, fixture_corpus_pdf):
         assert [h["rank_score"] for h in whits] == [s for _, _, s in wexp]
         _, nhits = _get(f"{base}/search?query=def+return&mode=near"
                         "&slop=3&k=5")
-        nexp = PhraseEngine(spark, out).search_near("def", "return",
+        nexp = PhraseEngine(out).search_near("def", "return",
                                                     slop=3, k=5)
         assert [h["rank_score"] for h in nhits] == [n for _, _, n in nexp]
         assert nhits  # slop=3 supersets the exact bigram -> non-empty

@@ -178,8 +178,8 @@ def test_streamed_positions_match_batch(spark, tmp_path, monkeypatch):
     assert _pos_fingerprint(spark, out_stream) == \
         _pos_fingerprint(spark, out_batch)
 
-    pe_s = PhraseEngine(spark, out_stream)
-    pe_b = PhraseEngine(spark, out_batch)
+    pe_s = PhraseEngine(out_stream)
+    pe_b = PhraseEngine(out_batch)
     for phrase in ["def return", "class self", "def"]:
         assert pe_s.search_phrase(phrase, k=10) == \
             pe_b.search_phrase(phrase, k=10), phrase
