@@ -374,15 +374,15 @@ def main(argv=None):
         print(json.dumps({"out": args.out, "n_rows": n,
                           "pairs": bool(args.pairs)}))
     elif args.cmd == "regex":
-        from engine.regex_query import regex_search
+        from engine.regex_query import regex_search_federated
         if args.source.startswith("synthetic:"):
             from engine.corpus import corpus_to_spark, make_corpus
             src = corpus_to_spark(
                 spark, make_corpus(int(args.source.split(":", 1)[1])))
         else:
             src = spark.read.parquet(args.source)
-        out = regex_search(spark, args.index, src, args.pattern,
-                           prune=not args.no_prune)
+        out = regex_search_federated(spark, [args.index], src,
+                                     args.pattern, prune=not args.no_prune)
         ids = [r["doc_id"] for r in
                out.orderBy("doc_id").limit(args.limit).collect()]
         print(json.dumps({"pattern": args.pattern, "n_shown": len(ids),

@@ -664,11 +664,11 @@ def q_regex_search(spark, sf_dir):
     the REAL engine index, vs a DuckDB regexp_matches oracle over the same
     document model. The pruned == unpruned invariant itself is
     property-tested in tests/test_regex_query.py."""
-    from .regex_query import regex_search
+    from .regex_query import regex_search_federated
     out = _built_engine_dir(spark, sf_dir)
     src = _t(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").alias("content"))
-    return regex_search(spark, out, src, REGEX_PATTERN)
+    return regex_search_federated(spark, [out], src, REGEX_PATTERN)
 
 
 #: case-insensitive twin (r5): same Python-re ∩ RE2 subset, upper-cased
@@ -678,13 +678,13 @@ REGEX_ICASE_PATTERN = r"(?i)\bSPARK (ORDER|SORT) DATA"
 
 
 def q_regex_icase_search(spark, sf_dir):
-    """regex_search under re.IGNORECASE — index-pruned since round 5
+    """The regex search under re.IGNORECASE — index-pruned since round 5
     (VERDICT r4 #6); DuckDB RE2 honors the same inline (?i)."""
-    from .regex_query import regex_search
+    from .regex_query import regex_search_federated
     out = _built_engine_dir(spark, sf_dir)
     src = _t(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").alias("content"))
-    return regex_search(spark, out, src, REGEX_ICASE_PATTERN)
+    return regex_search_federated(spark, [out], src, REGEX_ICASE_PATTERN)
 
 
 def q_training_pairs(spark, sf_dir):
@@ -898,17 +898,16 @@ qualify row_number() over (partition by qterm order by df desc, term) = 1
 
 
 def q_facet_counts(spark, sf_dir):
-    """Facet aggregation (query.facet_frame + facet_topn) over the REAL
-    engine index: per-lang match counts of the fixture ranked query across
-    the FULL matching set — a distributed candidate frame (posting decode
-    via mapInPandas) joined to the column-pruned docs snapshot, then
-    groupBy + sort+limit. Verified against the equivalent DuckDB
-    histogram; the driver-regime twin (SearchEngine.facet_counts) is
-    pytest-asserted bitwise equal (tests/test_facets.py)."""
-    from .query import facet_frame, facet_topn
+    """Facet aggregation (query.facets_federated) over the REAL engine
+    index: per-lang match counts of the fixture ranked query across the
+    FULL matching set — the kernel's histogram of the segment's
+    candidates in one Spark task, then groupBy + a per-field rank.
+    Verified against the equivalent DuckDB histogram; the driver regime
+    runs the same kernel in-process (tests/test_facets.py)."""
+    from .query import facets_federated
     out = _built_engine_dir(spark, sf_dir)
-    got = facet_topn([facet_frame(spark, out, BM25_TERMS, ["lang"])],
-                     ["lang"], k_values=TOPK)
+    got = facets_federated(spark, [out], BM25_TERMS, ["lang"],
+                           k_values=TOPK)
     return spark.createDataFrame(got["lang"], "value string, cnt long")
 
 

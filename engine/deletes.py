@@ -106,6 +106,25 @@ def tombstones_frame(spark: SparkSession, files: list[str]
     return spark.read.parquet(*files).select("doc_id").distinct()
 
 
+def _canonical(tomb: DataFrame, aliases: DataFrame | None) -> DataFrame:
+    """Tombstoned doc_ids resolved through the alias map to their
+    canonical (chains have length <= 1 in a deduped index)."""
+    if aliases is None:
+        return tomb
+    return (tomb.join(aliases.select("doc_id", "canonical_doc_id"),
+                      "doc_id", "left")
+            .select(F.coalesce("canonical_doc_id", "doc_id").alias("doc_id")))
+
+
+def _aliases_frame(spark: SparkSession, index_dir: str) -> DataFrame | None:
+    """A segment's alias map, gated on the MANIFEST (an aliases dir an
+    older build left behind is not trusted)."""
+    from .checkpoint import BuildManifest
+    man = BuildManifest(index_dir)
+    return (spark.read.parquet(man.stage_path("aliases"))
+            if man.is_complete("aliases") else None)
+
+
 def dead_sha_frame(docs_union: DataFrame, aliases: DataFrame | None,
                    tomb: DataFrame) -> DataFrame:
     """The content_sha256 values of every tombstoned doc's content class:
@@ -114,14 +133,8 @@ def dead_sha_frame(docs_union: DataFrame, aliases: DataFrame | None,
     sha. Unknown ids simply don't join — idempotent. All sides here are
     tombstone-sized; the caller broadcasts the result against the doc
     table."""
-    canon = tomb
-    if aliases is not None:
-        canon = (tomb.join(
-            aliases.select("doc_id", "canonical_doc_id"), "doc_id", "left")
-            .select(F.coalesce("canonical_doc_id", "doc_id")
-                    .alias("doc_id")))
     return (docs_union.select("doc_id", "content_sha256")
-            .join(canon.distinct(), "doc_id")
+            .join(_canonical(tomb, aliases).distinct(), "doc_id")
             .select("content_sha256").distinct())
 
 
@@ -142,15 +155,9 @@ def filter_dead(docs_union: DataFrame, aliases: DataFrame | None,
                 .join(F.broadcast(shas), "content_sha256", "leftsemi")
                 .select("doc_id"))
     else:
-        canon = tomb
-        if aliases is not None:
-            canon = (tomb.join(
-                aliases.select("doc_id", "canonical_doc_id"),
-                "doc_id", "left")
-                .select(F.coalesce("canonical_doc_id", "doc_id")
-                        .alias("doc_id")))
         dead = (docs_union.select("doc_id")
-                .join(F.broadcast(canon.distinct()), "doc_id", "leftsemi"))
+                .join(F.broadcast(_canonical(tomb, aliases).distinct()),
+                      "doc_id", "leftsemi"))
     live = docs_union.join(dead, "doc_id", "left_anti")
     return live, dead
 
@@ -163,7 +170,7 @@ def member_exclusions(spark: SparkSession, members: list,
     merge collapses it), then each member reports the ordinals of its own
     dead docs. Runs at refresh time, never per query; each array ships to
     that member's queries as a broadcast. members are the big regime's
-    member records (server._Member: persisted _docs_df/_aliases_df). Returns None
+    member records (server._Member: index_dir, docs_df). Returns None
     when nothing is excluded."""
     if tomb is None:
         return None
@@ -171,18 +178,11 @@ def member_exclusions(spark: SparkSession, members: list,
     sha_parts = []
     id_parts = []
     for s in members:
-        if "content_sha256" in s._docs_cols:
-            sha_parts.append(
-                dead_sha_frame(s._docs_df, s._aliases_df, tomb))
+        aliases = _aliases_frame(spark, s.index_dir)
+        if "content_sha256" in s.docs_df.columns:
+            sha_parts.append(dead_sha_frame(s.docs_df, aliases, tomb))
         else:
-            canon = tomb
-            if s._aliases_df is not None:
-                canon = (tomb.join(
-                    s._aliases_df.select("doc_id", "canonical_doc_id"),
-                    "doc_id", "left")
-                    .select(F.coalesce("canonical_doc_id", "doc_id")
-                            .alias("doc_id")))
-            id_parts.append(canon.distinct())
+            id_parts.append(_canonical(tomb, aliases).distinct())
     shas = None
     for p in sha_parts:
         shas = p if shas is None else shas.unionByName(p)
@@ -198,8 +198,8 @@ def member_exclusions(spark: SparkSession, members: list,
     any_dead = False
     for s in members:
         conds = []
-        docs = s._docs_df
-        if shas is not None and "content_sha256" in s._docs_cols:
+        docs = s.docs_df
+        if shas is not None and "content_sha256" in docs.columns:
             conds.append(docs.join(shas, "content_sha256", "leftsemi"))
         if ids is not None:
             conds.append(docs.join(ids, "doc_id", "leftsemi"))

@@ -182,10 +182,10 @@ def search_big_fielded_federated(spark: SparkSession,
 
     The per-member path df stays a Spark aggregate: a token like ``py``
     has O(N) path postings, which must not reach the driver. path_dfs:
-    per-member warm path_index frames (else read, the stage ensured
+    per-member path_index frames (else read, the stage ensured
     first)."""
     from .query import (
-        _check_filters,
+        _check_columns,
         _excl_value,
         _federation_weights,
         _member_topks,
@@ -211,7 +211,7 @@ def search_big_fielded_federated(spark: SparkSession,
             pdf_map[r["term"]] = pdf_map.get(r["term"], 0) + int(r["df"])
     if not w.df and not pdf_map:
         return []
-    _check_filters(index_dirs, filters)
+    _check_columns(index_dirs, filters)
     lens = [path_lens_parquet(d) for d in index_dirs]
 
     def score(i):

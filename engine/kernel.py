@@ -1,10 +1,13 @@
 """The one top-k scorer: BM25, the reference's TF-IDF and the path-boosted
-BM25F over ONE index segment, in NumPy, with no Spark anywhere.
+BM25F over ONE index segment, in NumPy, with no Spark anywhere — plus the
+one candidate derivation (Segment.candidates) that the top-k, the facet
+histograms (Segment.facet_counts) and the score explanation
+(Segment.explain) share.
 
 Both serving regimes run these functions. The driver-map SearchEngine is a
 ``Segment`` that keeps its doc arrays and a posting cache for the process
-lifetime; the big regime scores each federation member inside one Spark
-task (query._member_topks), where a ``Segment`` lives for one query and
+lifetime; the big regime runs each federation member's ``Segment`` inside
+one Spark task (query.member_frame), where it lives for one request and
 its doc arrays never reach the driver.
 
 Everything a segment needs it reads with ``pyarrow.dataset`` straight from
@@ -77,6 +80,10 @@ def missing_column(name: str) -> ValueError:
         "the full input_hint metadata")
 
 
+_NONE = np.empty(0, dtype=np.int64)  # the empty ordinal set
+_NONE.flags.writeable = False
+
+
 def _lookup(sorted_ids: np.ndarray, x: np.ndarray
             ) -> tuple[np.ndarray, np.ndarray]:
     """(clamped positions in sorted_ids, membership mask) of the values x."""
@@ -141,6 +148,19 @@ def read_docs(index_dir: str, columns: list[str]) -> dict[str, pa.Array]:
     tbl = _stage(index_dir, "docs").to_table(columns=["ordinal", *columns])
     tbl = tbl.take(pc.sort_indices(tbl.column("ordinal")))
     return {c: tbl.column(c) for c in columns}
+
+
+def canonical_id(index_dir: str, doc_id: int) -> int:
+    """The canonical doc_id of an alias (a duplicate the build dropped
+    from docs) in this segment, else ``doc_id`` itself. The manifest
+    gates the stage: an aliases dir an older build left behind is not
+    read."""
+    from .checkpoint import BuildManifest
+    if not BuildManifest(index_dir).is_complete("aliases"):
+        return doc_id
+    tbl = _stage(index_dir, "aliases").to_table(
+        columns=["canonical_doc_id"], filter=pc.field("doc_id") == doc_id)
+    return int(tbl.column(0)[0].as_py()) if tbl.num_rows else doc_id
 
 
 def meta_column(index_dir: str, name: str) -> np.ndarray:
@@ -374,6 +394,36 @@ class Segment:
         return arrays[0] if len(arrays) == 1 else np.unique(
             np.concatenate(arrays))
 
+    def candidates(self, terms: list[str],
+                   postings: dict[str, TermPostings], mode: str = "ranked",
+                   filters: dict[str, str] | None = None,
+                   not_terms: list[str] | None = None,
+                   exclude: np.ndarray | None = None,
+                   extra: list[np.ndarray] = ()) -> np.ndarray:
+        """The matching set of a query, as sorted ordinals: ranked = the
+        union of the terms' postings (and of ``extra`` ordinal arrays, the
+        BM25F path matches), conjunctive = the docs holding every term;
+        then _restrict. Every mode's top-k and the facet histograms count
+        over this one set."""
+        if mode == "conjunctive":
+            if len(postings) < len(terms):
+                return _NONE  # some term absent from the segment
+            cands = None
+            for tp in sorted(postings.values(), key=lambda x: x.df):
+                cands = tp.doc_ids if cands is None else np.intersect1d(
+                    cands, tp.doc_ids, assume_unique=True)
+                if cands.size == 0:
+                    return cands
+        elif mode == "ranked":
+            arrays = [tp.doc_ids for tp in postings.values()]
+            arrays += [a for a in extra if a.size]
+            if not arrays:
+                return _NONE
+            cands = self._union(arrays)
+        else:
+            raise ValueError(f"unknown mode {mode!r}")
+        return self._restrict(cands, filters, not_terms, exclude)
+
     def topk(self, terms: list[str], k: int = 10, mode: str = "ranked",
              prune: bool = True, rounded: bool = False,
              filters: dict[str, str] | None = None,
@@ -389,22 +439,79 @@ class Segment:
         if not terms or k <= 0:
             return []
         postings = self._fetch(terms)
-        if mode == "conjunctive":
-            if len(postings) < len(terms):
-                return []  # some term absent from the segment -> empty AND
-            cands = None
-            for tp in sorted(postings.values(), key=lambda x: x.df):
-                cands = tp.doc_ids if cands is None else np.intersect1d(
-                    cands, tp.doc_ids, assume_unique=True)
-                if cands.size == 0:
-                    return []
-            cands = self._restrict(cands, filters, not_terms, exclude)
-            return self._topk(cands, self._score(terms, postings, cands), k,
-                              rounded)
-        if mode != "ranked":
-            raise ValueError(f"unknown mode {mode!r}")
-        return self._ranked_pruned(terms, postings, k, rounded, filters,
-                                   not_terms, exclude, path, prune)
+        if mode == "ranked":
+            return self._ranked_pruned(terms, postings, k, rounded, filters,
+                                       not_terms, exclude, path, prune)
+        cands = self.candidates(terms, postings, mode, filters, not_terms,
+                                exclude)
+        return self._topk(cands, self._score(terms, postings, cands), k,
+                          rounded)
+
+    def facet_counts(self, terms: list[str], fields: list[str],
+                     k_values: int | None = None, mode: str = "ranked",
+                     filters: dict[str, str] | None = None,
+                     not_terms: list[str] | None = None,
+                     exclude: np.ndarray | None = None
+                     ) -> dict[str, list[tuple[str, int]]]:
+        """Per-field (value, count) histograms over the FULL matching set
+        (candidates), count DESC then value ASC; the first ``k_values``
+        per field, or all of them (None). A field the docs snapshot lacks
+        raises missing_column."""
+        if not terms:
+            return {f: [] for f in fields}
+        cols = {f: self._meta_col(f) for f in fields}  # validate first
+        cands = self.candidates(terms, self._fetch(terms), mode, filters,
+                                not_terms, exclude)
+        cut = None if k_values is None else max(k_values, 0)
+        out = {}
+        for f in fields:
+            vals, cnts = np.unique(cols[f][cands], return_counts=True)
+            order = np.lexsort((vals, -cnts))[:cut]
+            out[f] = [(str(vals[i]), int(cnts[i])) for i in order]
+        return out
+
+    def ordinal_of(self, doc_id: int) -> int | None:
+        # ordinals ascend in doc_id order, so _ext_ids is sorted
+        pos = int(np.searchsorted(self._ext_ids, doc_id))
+        if pos < self._ext_ids.size and self._ext_ids[pos] == doc_id:
+            return pos
+        return None
+
+    def explain(self, terms: list[str], doc_id: int) -> dict:
+        """Lucene-style score explanation: the per-term BM25 breakdown of
+        ``doc_id``'s score over sorted ``terms``, with the EXACT float64
+        op order ranking uses (sorted terms, ``idf * tfw`` accumulation),
+        so ``score`` is bitwise the score topk ranks by. A term absent
+        from the doc (or the corpus) contributes 0 and still appears with
+        its df/idf — the segment's own, or the federation's under
+        federation weights, so a term only another member holds shows the
+        merged index's stats. df == 0 -> idf None."""
+        ordinal = self.ordinal_of(doc_id)
+        if ordinal is None:
+            raise ValueError(f"unknown doc_id {doc_id}")
+        dl = np.float64(self._doc_lens[ordinal])
+        postings = self._fetch(terms)
+        total = np.float64(0.0)
+        parts = []
+        for t in terms:
+            tp = postings.get(t)
+            df = ((tp.df if tp else 0) if self._df is None
+                  else self._df.get(t, 0))
+            ent = {"term": t, "df": df,
+                   "idf": bm25_idf(self.n_docs, df) if df > 0 else None,
+                   "tf": 0, "contribution": 0.0}
+            if tp is not None:
+                p = int(np.searchsorted(tp.doc_ids, ordinal))
+                if p < tp.doc_ids.size and tp.doc_ids[p] == ordinal:
+                    c = self._idf(t, tp) * self._tfw(
+                        np.float64(tp.tfs[p]), dl)
+                    total = total + c
+                    ent["tf"] = int(tp.tfs[p])
+                    ent["contribution"] = float(c)
+            parts.append(ent)
+        return {"doc_id": int(doc_id), "doc_len": int(dl),
+                "n_docs": int(self.n_docs), "avgdl": float(self.avgdl),
+                "k1": K1, "b": B, "score": float(total), "terms": parts}
 
     # ------------------------------------------------- block-max pruned ranked
 
@@ -476,15 +583,11 @@ class Segment:
         last_prune_stats records candidates/scored/skipped, and the body
         postings of the skipped candidates (postings_skipped, per term in
         pruned_terms)."""
-        arrays = [tp.doc_ids for tp in postings.values()]
         pw = None
-        if path is not None:
-            arrays += [o for o, _tf in path.postings(terms).values()
-                       if o.size]
-        if not arrays:
-            return []
-        union = self._restrict(self._union(arrays), filters, not_terms,
-                               exclude)
+        extra = ([o for o, _tf in path.postings(terms).values()]
+                 if path is not None else [])
+        union = self.candidates(terms, postings, "ranked", filters,
+                                not_terms, exclude, extra)
         if path is not None:
             pw = path.weighted_scores(self.n_docs, terms, union)
         if not prune:

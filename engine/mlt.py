@@ -147,7 +147,8 @@ def mlt_terms_federated(spark: SparkSession, index_dirs: list[str],
     step per segment would make the endpoint unusable; the ensure is one
     postings-decode job per fresh segment, manifest-cached after that.
     ensure=False (a static index) raises with the one-liner instead."""
-    from .query import _federation_weights, bm25_idf
+    from .kernel import bm25_idf
+    from .query import _federation_weights
     vec = None
     for d in index_dirs:
         man = BuildManifest(d)

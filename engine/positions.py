@@ -48,7 +48,7 @@ from .index_build import (
 )
 from .kernel import Segment, _lookup, _TermCache, _term_rows
 from .query import (
-    _check_filters,
+    _check_columns,
     _excl_value,
     _member_topks,
     _merge_federated,
@@ -716,7 +716,7 @@ def search_positional_federated(spark: SparkSession, index_dirs: list[str],
     if (not terms or k <= 0 or not index_dirs
             or (slop is not None and slop < 1)):
         return []
-    _check_filters(index_dirs, filters)
+    _check_columns(index_dirs, filters)
 
     def score(i):
         return PhraseEngine(index_dirs[i]).topk(

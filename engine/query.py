@@ -9,9 +9,13 @@ regimes:
 
 - driver-map: ``SearchEngine`` is a kernel.Segment holding the doc arrays
   (the "broadcast lookup tables" of BASELINE.json) and a posting cache;
-- big (zero driver arrays): each doc-disjoint federation member is scored
-  by the same kernel inside one Spark task under the federation's weights,
-  and only the k×S result rows reach the driver (_member_topks).
+  top-k, facet histograms and score explanations run in-process;
+- big (zero driver arrays): each doc-disjoint federation member runs the
+  same kernel inside one Spark task under the federation's weights, all
+  members in one job (member_frame): top-k and phrase matches collect
+  the k×S rows (_member_topks), /explain the owning member's breakdown
+  (explain_big_federated), /facets the members' histograms reduced by
+  one groupBy and a per-field rank (facets_federated).
 
 Scoring: BM25 (k1=1.2, b=0.75) per BASELINE.json north_rule, conjunctive
 (AND) and ranked (OR) modes, tie-break score DESC then doc_id ASC, bitwise
@@ -23,21 +27,20 @@ actually fires on skewed corpora.
 
 from __future__ import annotations
 
+import json
 import os
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from . import B, K1
-from .codec import decode_postings
 from .index_build import load_stats
 from .kernel import (
     FedWeights,
     Segment,
-    _lookup,
-    bm25_idf,
-    bm25_tfw,
+    canonical_id,
     docs_columns,
     missing_column,
     read_dictionary,
@@ -81,41 +84,6 @@ class SearchEngine(Segment):
                          rounded=rounded, filters=filters,
                          not_terms=not_terms)
 
-    def explain(self, query: str, doc_id: int) -> dict:
-        """Lucene-style score explanation: the per-term BM25 breakdown of
-        ``doc_id``'s score for ``query``, computed with the EXACT float64
-        op order ranking uses (sorted terms, ``idf * tfw`` accumulation),
-        so ``total`` is bitwise equal to the score ``search`` ranks by
-        (test-enforced). Terms absent from the doc (or the corpus)
-        contribute 0 and still appear, with their stats — that is the
-        point of an explain: showing why something did NOT score."""
-        terms = query_terms(query)
-        pos = int(np.searchsorted(self._ext_ids, doc_id))
-        # ordinals ascend in doc_id order, so _ext_ids is sorted
-        if pos >= self._ext_ids.size or self._ext_ids[pos] != doc_id:
-            raise ValueError(f"unknown doc_id {doc_id}")
-        ordinal, dl = pos, float(self._doc_lens[pos])
-        postings = self._fetch(terms)
-        total = np.float64(0.0)
-        parts = []
-        for t in terms:
-            tp = postings.get(t)
-            ent = {"term": t, "df": int(tp.df) if tp else 0,
-                   "idf": self._idf(t, tp) if tp else None,
-                   "tf": 0, "contribution": 0.0}
-            if tp is not None:
-                p = int(np.searchsorted(tp.doc_ids, ordinal))
-                if p < tp.doc_ids.size and tp.doc_ids[p] == ordinal:
-                    tf = np.float64(tp.tfs[p])
-                    c = self._idf(t, tp) * self._tfw(tf, np.float64(dl))
-                    total = total + c
-                    ent["tf"] = int(tp.tfs[p])
-                    ent["contribution"] = float(c)
-            parts.append(ent)
-        return {"query": query, "doc_id": int(doc_id), "doc_len": int(dl),
-                "n_docs": int(self.n_docs), "avgdl": float(self.avgdl),
-                "k1": K1, "b": B, "score": float(total), "terms": parts}
-
     # ---------------------------------------------------------- prefix query
 
     PREFIX_EXPANSION_CAP = 64  # max terms a wildcard may expand to
@@ -157,51 +125,6 @@ class SearchEngine(Segment):
                              index_df=self.index_df)
         return self.topk(terms, k, rounded=rounded, filters=filters,
                          not_terms=not_terms)
-
-    # ------------------------------------------------------------- facets
-
-    def facet_counts(self, query: str, fields: list[str],
-                     k_values: int = 10, mode: str = "ranked",
-                     filters: dict[str, str] | None = None,
-                     not_terms: list[str] | None = None
-                     ) -> dict[str, list[tuple[str, int]]]:
-        """Per-field (value, count) histograms over the FULL matching set
-        (not the top-k page) — count DESC then value ASC, k_values values
-        per field. Matching/restriction semantics identical to search()
-        (ranked=union, conjunctive=intersection; filters/NOT restrict the
-        set). Driver-map regime: candidates and the cached per-ordinal
-        metadata arrays are already in memory, so this is pure NumPy.
-        The big-path twin (facet_frame + facet_topn) is test-asserted
-        equal."""
-        terms = query_terms(query)
-        if not terms:
-            return {f: [] for f in fields}
-        cols = {f: self._meta_col(f) for f in fields}  # validate first
-        postings = self._fetch(terms)
-        if mode == "conjunctive":
-            if len(postings) < len(terms):
-                return {f: [] for f in fields}
-            cands: np.ndarray | None = None
-            for tp in sorted(postings.values(), key=lambda x: x.df):
-                ids = tp.doc_ids
-                cands = ids if cands is None else np.intersect1d(
-                    cands, ids, assume_unique=True)
-        elif mode == "ranked":
-            if not postings:
-                return {f: [] for f in fields}
-            cands = self._union([tp.doc_ids for tp in postings.values()])
-        else:
-            raise ValueError(f"unknown mode {mode!r}")
-        cands = self._restrict(cands, filters, not_terms)
-        out: dict[str, list[tuple[str, int]]] = {}
-        for f in fields:
-            if k_values <= 0 or cands.size == 0:
-                out[f] = []
-                continue
-            vals, cnts = np.unique(cols[f][cands], return_counts=True)
-            order = np.lexsort((vals, -cnts))[:k_values]
-            out[f] = [(str(vals[i]), int(cnts[i])) for i in order]
-        return out
 
     def search_tfidf_reference(self, query: str, k: int = 300,
                                threshold: float = 0.3,
@@ -267,24 +190,6 @@ def _excl_frame(spark, exc: np.ndarray):
         pd.DataFrame({"ordinal": np.asarray(exc, dtype=np.int64)})))
 
 
-def _ordinals_frame(index_df, terms: list[str]):
-    """DISTINCT ordinals of the given terms' postings as a DataFrame — a
-    NOT-term exclusion set that stays distributed (facets): the frame
-    anti-joins the hit rows instead of shipping an ordinal array to the
-    driver."""
-    import pandas as pd
-
-    def dec(batches):
-        for pdf in batches:
-            for blob in pdf["postings"]:
-                ids, _ = decode_postings(bytes(blob))
-                yield pd.DataFrame({"ordinal": ids})
-
-    return (index_df.where(F.col("term").isin(terms))
-            .select("postings")
-            .mapInPandas(dec, schema="ordinal long").distinct())
-
-
 def _filters_col(filters: dict[str, str], columns) -> "F.Column":
     """Metadata filters (tokenizer.parse_query) -> one JVM predicate over
     the docs snapshot — pushes down to the docs parquet scan. `path` is a
@@ -307,88 +212,6 @@ def _excl_value(exclude) -> np.ndarray | None:
         return None
     arr = exclude.value if hasattr(exclude, "value") else exclude
     return arr if arr is not None and arr.size else None
-
-
-def _doc_term_stats(index_df, terms: list[str], ordinal: int
-                    ) -> dict[str, int]:
-    """term -> tf at ``ordinal`` for the query terms one segment knows:
-    an Arrow probe over just their posting rows — blobs decode on the
-    EXECUTOR, one (term, tf) row per term reaches the driver."""
-    import pandas as pd
-
-    def probe(batches):
-        for pdf in batches:
-            outs = []
-            for term, blob in zip(pdf["term"], pdf["postings"]):
-                ids, tfs = decode_postings(bytes(blob))
-                p = int(np.searchsorted(ids, ordinal))
-                tf = (int(tfs[p])
-                      if p < ids.size and ids[p] == ordinal else 0)
-                outs.append({"term": term, "tf": tf})
-            if outs:
-                yield pd.DataFrame(outs)
-
-    return {r["term"]: int(r["tf"])
-            for r in (index_df.where(F.col("term").isin(terms))
-                      .select("term", "postings")
-                      .mapInPandas(probe, schema="term string, tf int")
-                      .collect())}
-
-
-def explain_big(query: str, doc_id: int, dl: int,
-                tf_at: dict[str, int], weights: FedWeights) -> dict:
-    """SearchEngine.explain WITHOUT driver doc arrays: the per-term BM25
-    breakdown of one doc (doc_len ``dl``, tf per term ``tf_at`` — from its
-    owning segment's _doc_term_stats probe) under the federation's
-    ``weights``, computed with the driver engine's exact float64 op order
-    — ``score`` is bitwise the score the big path ranks by (tests assert
-    dict equality vs SearchEngine.explain)."""
-    total = np.float64(0.0)
-    parts = []
-    for t in query_terms(query):  # sorted — the engines' accumulation order
-        df = weights.df.get(t, 0)
-        # idf keys off the federation-wide df: a term the owning segment
-        # lacks but another segment knows shows its idf exactly like the
-        # merged index would (merged parity is the payload contract);
-        # df == 0 (term nowhere in the corpus) -> None, as the driver engine
-        ent = {"term": t, "df": df,
-               "idf": bm25_idf(weights.n_docs, df) if df > 0 else None,
-               "tf": 0, "contribution": 0.0}
-        tf = tf_at.get(t, 0)
-        if tf > 0:
-            c = bm25_idf(weights.n_docs, df) * bm25_tfw(
-                np.float64(tf), np.float64(dl), weights.avgdl)
-            total = total + c
-            ent["tf"] = tf
-            ent["contribution"] = float(c)
-        parts.append(ent)
-    return {"query": query, "doc_id": int(doc_id), "doc_len": int(dl),
-            "n_docs": int(weights.n_docs), "avgdl": float(weights.avgdl),
-            "k1": K1, "b": B, "score": float(total), "terms": parts}
-
-
-def explain_big_federated(spark: SparkSession, index_dirs: list[str],
-                          query: str, doc_id: int,
-                          idx_dfs: list | None = None,
-                          docs_dfs: list | None = None) -> dict:
-    """explain over a federation: the doc's tf/doc_len from its OWNING
-    segment (one pushdown doc_id lookup per segment until found), df/
-    n_docs/avgdl the federation's integer sums — so ``score`` is bitwise
-    the score search_big_terms_federated ranks this doc by."""
-    terms = query_terms(query)
-    idx_dfs = _member_frames(spark, index_dirs, "index", idx_dfs)
-    docs_dfs = _member_frames(spark, index_dirs, "docs", docs_dfs)
-    for i, docs in enumerate(docs_dfs):
-        drow = (docs.where(F.col("doc_id") == int(doc_id))
-                .select("ordinal", "doc_len").collect())
-        if drow:
-            break
-    else:
-        raise ValueError(f"unknown doc_id {doc_id}")
-    tf_at = (_doc_term_stats(idx_dfs[i], terms, int(drow[0]["ordinal"]))
-             if terms else {})
-    return explain_big(query, doc_id, int(drow[0]["doc_len"]), tf_at,
-                       _federation_weights(index_dirs, terms))
 
 
 def search_big_federated(spark: SparkSession, index_dirs: list[str],
@@ -427,7 +250,7 @@ def search_big_federated(spark: SparkSession, index_dirs: list[str],
 def _member_frames(spark, index_dirs: list[str], stage: str,
                    dfs: list | None) -> list:
     """Per-member frames of one stage ("index" or "docs"): the caller's
-    warm (persisted) ones, else fresh parquet reads."""
+    (built once per member), else fresh parquet reads."""
     if dfs is None:
         dfs = [spark.read.parquet(os.path.join(d, stage))
                for d in index_dirs]
@@ -463,52 +286,149 @@ def _merge_federated(per: list[tuple[int, float]], k: int
             for i, (doc_id, score) in enumerate(per[:k])]
 
 
-def _check_filters(index_dirs: list[str], filters: dict[str, str] | None
+def _check_columns(index_dirs: list[str], names, error=missing_column
                    ) -> None:
-    """Reject a filter on a column some member's docs snapshot lacks, on
-    the driver (a 400), before any task could fail on it."""
+    """Reject a filter (or facet field) on a column some member's docs
+    snapshot lacks, on the driver (a 400), before any task could fail on
+    it."""
     for d in index_dirs:
         cols = docs_columns(d)
-        for field in filters or {}:
-            if field not in cols:
-                raise missing_column(field)
+        for name in names or ():
+            if name not in cols:
+                raise error(name)
+
+
+def member_frame(spark: SparkSession, n: int, rows, schema: pa.Schema):
+    """The one runner of the big regime: a DataFrame of ``rows(i)`` (dicts
+    of ``schema``) for every federation member i < n, computed in ONE
+    Spark job — spark.range over n one-row partitions, one task per
+    member, no shuffle. rows(i) runs the Spark-free kernels (kernel.py,
+    positions.py) inside the task, so a member's doc arrays and postings
+    never reach the driver, only its rows do. A federation of one is a
+    single partition, so a groupBy or window on top needs no exchange."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    def task(batches):
+        for b in batches:
+            for i in b.column(0).to_pylist():
+                yield pa.RecordBatch.from_pylist(rows(i), schema=schema)
+
+    return spark.range(0, n, 1, n).mapInArrow(task,
+                                              from_arrow_schema(schema))
+
+
+_TOPK = pa.schema([("doc_ids", pa.list_(pa.int64())),
+                   ("scores", pa.list_(pa.float64())),
+                   ("total", pa.int64()), ("skipped", pa.int64()),
+                   ("pruned", pa.list_(pa.string()))])
 
 
 def _member_topks(spark: SparkSession, index_dirs: list[str], score
                   ) -> tuple[list[tuple[int, float]], dict[str, int]]:
-    """Run ``score(i)`` for every federation member i in ONE Spark job:
-    spark.range over S one-row partitions, one task per member, no
-    shuffle. score(i) -> (rows, kernel.Segment.counters) runs the NumPy
-    kernel inside the task, so a member's doc arrays and postings never
-    reach the driver — only its k (doc_id, score) rows and counters do.
-    Returns the k×S rows for _merge_federated and the summed counters."""
-    def task(batches):
-        import pyarrow as pa
-        schema = pa.schema([("doc_ids", pa.list_(pa.int64())),
-                            ("scores", pa.list_(pa.float64())),
-                            ("total", pa.int64()), ("skipped", pa.int64()),
-                            ("pruned", pa.list_(pa.string()))])
-        for b in batches:
-            for i in b.column(0).to_pylist():
-                rows, (total, skipped, pruned) = score(i)
-                yield pa.RecordBatch.from_pylist([{
-                    "doc_ids": [d for _r, d, _s in rows],
-                    "scores": [s for _r, _d, s in rows],
-                    "total": total, "skipped": skipped,
-                    "pruned": pruned}], schema=schema)
+    """Run ``score(i)`` for every federation member i in one member_frame
+    job. score(i) -> (rows, kernel.Segment.counters): only a member's k
+    (doc_id, score) rows and counters reach the driver. Returns the k×S
+    rows for _merge_federated and the summed counters."""
+    def rows(i):
+        hits, (total, skipped, pruned) = score(i)
+        return [{"doc_ids": [d for _r, d, _s in hits],
+                 "scores": [s for _r, _d, s in hits],
+                 "total": total, "skipped": skipped, "pruned": pruned}]
 
-    n = len(index_dirs)
-    got = (spark.range(0, n, 1, n)
-           .mapInArrow(task, "doc_ids array<bigint>, scores array<double>, "
-                             "total bigint, skipped bigint, "
-                             "pruned array<string>")
-           .collect())
+    got = member_frame(spark, len(index_dirs), rows, _TOPK).collect()
     total = sum(r["total"] for r in got)
     skipped = sum(r["skipped"] for r in got)
     return ([(d, s) for r in got for d, s in zip(r["doc_ids"], r["scores"])],
             {"postings_total": total, "postings_emitted": total - skipped,
              "postings_skipped": skipped,
              "pruned_terms": len({t for r in got for t in r["pruned"]})})
+
+
+_EXPLAIN = pa.schema([("alias", pa.bool_()), ("payload", pa.string())])
+
+
+def explain_big_federated(spark: SparkSession, index_dirs: list[str],
+                          query: str, doc_id: int) -> dict:
+    """GET /explain over a federation in ONE job: each member's task maps
+    ``doc_id`` through its own aliases stage (kernel.canonical_id) and,
+    when it owns the doc, answers kernel.Segment.explain under the
+    federation's weights — tf/doc_len from the owning segment, df/
+    n_docs/avgdl the federation's integer sums, so ``score`` is bitwise
+    what the federated ranker scores this doc, and a term only another
+    member holds shows the merged index's df/idf. The other members
+    yield nothing."""
+    terms = query_terms(query)
+    w = _federation_weights(index_dirs, terms)
+
+    def rows(i):
+        canon = canonical_id(index_dirs[i], doc_id)
+        seg = Segment(index_dirs[i], w.n_docs, w.avgdl, df=w.df)
+        if seg.ordinal_of(canon) is None:
+            return []
+        return [{"alias": canon != doc_id,
+                 "payload": json.dumps(seg.explain(terms, canon))}]
+
+    got = member_frame(spark, len(index_dirs), rows, _EXPLAIN).collect()
+    if not got:
+        raise ValueError(f"unknown doc_id {doc_id}")
+    # an id one member aliases and another holds (re-ingested before a
+    # compaction) explains as the alias's canonical doc
+    best = max(got, key=lambda r: r["alias"])
+    return {"query": query, **json.loads(best["payload"])}
+
+
+_FACETS = pa.schema([("field", pa.string()), ("value", pa.string()),
+                     ("count", pa.int64())])
+
+
+def _no_facet_field(name: str) -> ValueError:
+    return ValueError(
+        f"this index's docs snapshot has no {name!r} column — facet "
+        "fields need the full input_hint metadata")
+
+
+def facets_federated(spark: SparkSession, index_dirs: list[str],
+                     terms: list[str], fields: list[str],
+                     k_values: int = 10, mode: str = "ranked",
+                     excludes: list | None = None,
+                     filters: dict[str, str] | None = None,
+                     not_terms: list[str] | None = None
+                     ) -> dict[str, list[tuple[str, int]]]:
+    """Per-field (value, count) histograms over the FULL matching set of
+    a federation (Elasticsearch-style aggs, not the top-k page), count
+    DESC then value ASC, k_values values per field. Each member's task
+    counts its own matching set with kernel.Segment.facet_counts (the
+    top-k candidates, restriction stack included: filters, NOT terms,
+    the member's dead ordinals ``excludes``); one groupBy(field, value)
+    sums the members' full histograms — exact, since every doc lives in
+    one member — and a per-field rank keeps k_values rows per field for
+    the driver."""
+    from pyspark.sql.window import Window
+    _check_columns(index_dirs, fields, _no_facet_field)
+    terms = sorted(set(terms))
+    if not terms or k_values <= 0:
+        return {f: [] for f in fields}
+    if mode not in ("ranked", "conjunctive"):
+        raise ValueError(f"unknown mode {mode!r}")
+    _check_columns(index_dirs, filters)
+
+    def rows(i):
+        got = Segment(index_dirs[i], 0, 0.0).facet_counts(
+            terms, fields, mode=mode, filters=filters, not_terms=not_terms,
+            exclude=_excl_value(excludes[i]) if excludes else None)
+        return [{"field": f, "value": v, "count": c}
+                for f, vals in got.items() for v, c in vals]
+
+    rank = F.row_number().over(Window.partitionBy("field").orderBy(
+        F.col("count").desc(), F.col("value")))
+    got = (member_frame(spark, len(index_dirs), rows, _FACETS)
+           .groupBy("field", "value").agg(F.sum("count").alias("count"))
+           .withColumn("rank", rank).where(F.col("rank") <= k_values)
+           .collect())
+    out: dict[str, list[tuple[str, int]]] = {f: [] for f in fields}
+    for r in sorted(got, key=lambda r: r["rank"]):
+        out[r["field"]].append((r["value"], int(r["count"])))
+    return out
 
 
 def search_big_terms_federated(spark: SparkSession, index_dirs: list[str],
@@ -542,7 +462,7 @@ def search_big_terms_federated(spark: SparkSession, index_dirs: list[str],
     if w.n_docs == 0 or not w.df or (
             mode == "conjunctive" and len(w.df) < len(terms)):
         return []
-    _check_filters(index_dirs, filters)
+    _check_columns(index_dirs, filters)
 
     def score(i):
         if not w.rows[i]:
@@ -578,7 +498,7 @@ def search_big_tfidf_federated(spark: SparkSession, index_dirs: list[str],
     w = _federation_weights(index_dirs, terms)
     if w.n_docs == 0 or not w.df:
         return []
-    _check_filters(index_dirs, filters)
+    _check_columns(index_dirs, filters)
 
     def score(i):
         if not w.rows[i]:
@@ -659,99 +579,6 @@ def expand_prefix_big(index_df, prefix: str) -> list[str]:
                 .orderBy(F.col("df").desc(), F.col("term"))
                 .select("term").limit(cap).collect())
     return sorted(r["term"] for r in rows)
-
-
-def facet_frame(spark: SparkSession, index_dir: str, terms: list[str],
-                fields: list[str], mode: str = "ranked",
-                index_df=None, docs_df=None, exclude=None,
-                filters: dict[str, str] | None = None,
-                not_terms: list[str] | None = None):
-    """One row of metadata per MATCHING doc — the distributed half of
-    facet aggregation (Elasticsearch-style aggs over the full result set,
-    not the top-k page). Matching = the query's candidate semantics:
-    ranked -> union of the terms' postings, conjunctive -> docs containing
-    every term; then the same restriction stack as search (metadata
-    filters pushed to the docs scan, NOT-term anti-join, logical-delete
-    exclusion masked at posting decode). Stays a DataFrame end-to-end so
-    federations can union members' frames BEFORE counting — facet counts
-    over a federation are exact, not per-member-truncated approximations.
-    Cost: one job over Σ df postings of the query terms + a join to the
-    docs snapshot projected to `fields` (column-pruned scan)."""
-    import pandas as pd
-
-    if index_df is None:
-        index_df = spark.read.parquet(os.path.join(index_dir, "index"))
-    if docs_df is None:
-        docs_df = spark.read.parquet(os.path.join(index_dir, "docs"))
-    for f in fields:
-        if f not in docs_df.columns:
-            raise ValueError(
-                f"this index's docs snapshot has no {f!r} column — facet "
-                "fields need the full input_hint metadata")
-    terms = sorted(set(terms))
-    empty = docs_df.select(*fields).limit(0)
-    if not terms:
-        return empty
-    exc_bc = exclude
-
-    def dec(batches):
-        exc = _excl_value(exc_bc)
-        for pdf in batches:
-            for blob in pdf["postings"]:
-                ids, _ = decode_postings(bytes(blob))
-                if exc is not None:
-                    ids = ids[~_lookup(exc, ids)[1]]
-                yield pd.DataFrame({"ordinal": ids})
-
-    hits = (index_df.where(F.col("term").isin(terms)).select("postings")
-            .mapInPandas(dec, schema="ordinal long"))
-    if mode == "conjunctive":
-        # presence check: <= len(terms) dictionary rows via pushdown
-        n_present = index_df.where(F.col("term").isin(terms)).count()
-        if n_present < len(terms):
-            return empty  # some term absent from corpus -> empty AND
-        # each term lists an ordinal at most once, so the per-ordinal row
-        # count IS the distinct-term count
-        cand = (hits.groupBy("ordinal").agg(F.count(F.lit(1)).alias("nt"))
-                .where(F.col("nt") == len(terms)).select("ordinal"))
-    elif mode == "ranked":
-        cand = hits.distinct()
-    else:
-        raise ValueError(f"unknown mode {mode!r}")
-    if not_terms:
-        bad = _ordinals_frame(index_df, sorted(set(not_terms)))
-        cand = cand.join(bad, "ordinal", "left_anti")
-    docs_sel = docs_df.select("ordinal", *fields)
-    if filters:
-        docs_sel = docs_sel.where(_filters_col(filters, docs_df.columns))
-    return cand.join(docs_sel, "ordinal").select(*fields)
-
-
-def facet_topn(frames: list, fields: list[str], k_values: int = 10
-               ) -> dict[str, list[tuple[str, int]]]:
-    """Reduce facet_frame outputs to per-field top-k_values (value, count)
-    lists, count DESC then value ASC — a distributed groupBy + sort+limit
-    per field, so only k_values rows per field reach the driver. Multiple
-    frames union first (doc-disjoint federation members), making the
-    federation counts exact."""
-    from functools import reduce
-
-    from pyspark import StorageLevel
-    if k_values <= 0:
-        return {f: [] for f in fields}
-    u = reduce(lambda a, b: a.unionByName(b), frames)
-    # the fields share one candidate derivation — materialize it once
-    u = u.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        out = {}
-        for f in fields:
-            rows = (u.groupBy(f).agg(F.count(F.lit(1)).alias("cnt"))
-                    .orderBy(F.col("cnt").desc(), F.col(f))
-                    .limit(k_values).collect())
-            out[f] = [(r[f], int(r["cnt"])) for r in rows]
-        return out
-    finally:
-        u.unpersist()
 
 
 def suggest_terms(index_df, prefix: str, k: int = 8

@@ -17,15 +17,15 @@ title/body columns in the `urls` table). Two serving regimes:
 - ``SearchService``: the default driver-map service (display dict keyed
   by doc_id — the "broadcast lookup table" regime, fine to ~10^8 docs);
 - ``FederatedSearchService``: the zero-driver-array regime: every
-  BM25/TF-IDF/BM25F query scores each segment with the driver engine's
-  own NumPy kernel in one Spark task per segment under the federation's
-  weights (one job per query), phrase/NEAR match each segment with the
-  driver regime's own positional matcher (engine/positions.py
-  PhraseEngine) in the same one-task-per-segment job, and display/alias
-  fields resolve by per-query k-row pushdown — no full-docs
-  materialization anywhere, test-enforced. One task per segment bounds
-  a segment by what one executor can score or match (the build does not
-  write doc-range shards yet).
+  BM25/TF-IDF/BM25F top-k, phrase/NEAR match, facet histogram and score
+  explanation runs the driver regime's own Spark-free kernel
+  (kernel.Segment, positions.PhraseEngine) in one Spark task per
+  segment under the federation's weights — one job per request for any
+  number of segments (query.member_frame) — and the k result rows'
+  display fields resolve in one pushdown job over the segments' docs
+  frames. No full-docs materialization anywhere, test-enforced. One
+  task per segment bounds a segment by what one executor can score or
+  match (the build does not write doc-range shards yet).
   One index is a federation of one: ``serve --big`` and
   ``SearchService(big=True)`` build exactly that; the NRT serving view
   (``serve --work``) is a federation of its live segments.
@@ -41,12 +41,17 @@ from __future__ import annotations
 
 import json
 import os
+import threading
+from functools import reduce
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from typing import NamedTuple
 from urllib.parse import parse_qs, urlparse
 
 from pyspark.sql import SparkSession
 
 REFERENCE_MAX_RESULTS = 300  # Searcher.java:203 caps the result list
+#: the docs-snapshot columns a result row displays from
+_DISPLAY = ("repo", "path", "commit", "title", "snippet")
 
 
 def _stage_complete(index_dir: str, stage: str) -> bool:
@@ -187,9 +192,8 @@ class SearchService:
         self.engine = SearchEngine(spark, index_dir)
         docs = spark.read.parquet(os.path.join(index_dir, "docs"))
         cols = set(docs.columns)
-        want = [c for c in ("doc_id", "repo", "path", "commit",
-                            "title", "snippet") if c in cols]
-        pdf = docs.select(*want).toPandas()
+        pdf = docs.select("doc_id", *[c for c in _DISPLAY
+                                      if c in cols]).toPandas()
         # vectorized display-map build (pandas C string ops + dict(zip)):
         # a per-row Python loop here would be minutes of driver CPU at the
         # upper end of the driver-map regime
@@ -272,15 +276,16 @@ class SearchService:
 
     def explain_payload(self, query: str, doc_id: int) -> dict:
         """GET /explain: the per-term BM25 breakdown of one document's
-        score for a query (SearchEngine.explain) — bitwise the ranked
-        score, and equal to the big regime's query.explain_big.
+        score for a query (kernel.Segment.explain) — bitwise the ranked
+        score, and equal to the big regime's query.explain_big_federated.
         Filter/NOT syntax is parsed off first (they restrict result sets,
         never scores); alias doc_ids resolve to their canonical before
         lookup."""
-        from .tokenizer import parse_query
+        from .tokenizer import parse_query, query_terms
         q, _filters, _nots = parse_query(query.strip())
         did = int(doc_id)
-        return self.engine.explain(q, self._alias.get(did, did))
+        return {"query": q, **self.engine.explain(
+            query_terms(q), self._alias.get(did, did))}
 
     def regex_payload(self, pattern: str, k: int = 100) -> list[dict]:
         """GET /regex: index-pruned regex content search
@@ -290,13 +295,11 @@ class SearchService:
         {url, title, doc_id}, doc_id ASC (regex matches carry no score).
         The distributed sort+limit ships exactly k ids to the driver;
         display fields resolve like every other endpoint."""
-        if self._source_df is None:
-            raise ValueError("regex search needs the corpus table: start "
-                             "the service with --source <corpus parquet>")
-        from .regex_query import regex_search
-        out = regex_search(self.spark, self.index_dir, self._source_df,
-                           pattern)
-        return _regex_rows(self, out, k)
+        from .regex_query import matched_ids, regex_search_federated
+        _need_source(self._source_df)
+        ids = matched_ids(regex_search_federated(
+            self.spark, [self.index_dir], self._source_df, pattern), k)
+        return _regex_rows(self.resolve_many(ids), ids)
 
     def mlt_payload(self, doc_id: int, k: int = 10) -> list[dict]:
         """More-like-this (engine/mlt.py): the k docs most similar to
@@ -304,22 +307,22 @@ class SearchService:
         doc_terms stage (mlt.ensure_doc_terms) — a missing stage raises
         with the one-liner to build it."""
         from .mlt import more_like_this
-        return _mlt_rows(self, more_like_this(self.engine, doc_id, k=k))
+        rows = more_like_this(self.engine, doc_id, k=k)
+        return _mlt_rows(self.resolve_many([d for _r, d, _s in rows]),
+                         rows)
 
     def facets(self, query: str, fields: list[str], k_values: int = 10,
                mode: str = "ranked") -> dict[str, list[dict]]:
         """Per-field (value, count) histograms over the FULL matching set
         of ``query`` (filters/NOT syntax included) — Elasticsearch-style
         aggs, NumPy over the cached metadata arrays
-        (SearchEngine.facet_counts); the big regime's distributed
-        facet_frame/facet_topn is test-asserted equal."""
-        from .tokenizer import parse_query
+        (kernel.Segment.facet_counts, in-process); the big regime runs
+        the same kernel per member (query.facets_federated)."""
+        from .tokenizer import parse_query, query_terms
         q, filters, nots = parse_query(query.strip())
-        got = self.engine.facet_counts(q, fields, k_values=k_values,
-                                       mode=mode, filters=filters,
-                                       not_terms=nots)
-        return {f: [{"value": v, "count": c} for v, c in vals]
-                for f, vals in got.items()}
+        return _facet_rows(self.engine.facet_counts(
+            query_terms(q), fields, k_values=k_values, mode=mode,
+            filters=filters, not_terms=nots))
 
     def search_payload(self, query: str, k: int = 10, mode: str = "ranked",
                        scoring: str = "bm25", slop: int = 1,
@@ -379,7 +382,7 @@ class SearchService:
             rows = self.engine.search(q, k=k, mode=mode, filters=filters,
                                       not_terms=not_terms)
         return _render(self, rows[offset:], q, is_wild, highlight, snippet,
-                       snippet_w)
+                       snippet_w, self.resolve_many)
 
 
 def _parse_search(query: str, k: int, offset: int, mode: str):
@@ -412,8 +415,8 @@ def _positional(q: str, mode: str, slop: int
 
 
 def _render(svc, rows, q: str, is_wild: bool, highlight: bool,
-            snippet: bool, snippet_w: int) -> list[dict]:
-    disp = svc.resolve_many([doc_id for _r, doc_id, _s in rows])
+            snippet: bool, snippet_w: int, resolve) -> list[dict]:
+    disp = resolve([doc_id for _r, doc_id, _s in rows])
     return render_rows(rows, disp, q, is_wild, highlight=highlight,
                        snippet=snippet, snippet_w=snippet_w,
                        fetch_content=(svc._contents_of
@@ -421,108 +424,61 @@ def _render(svc, rows, q: str, is_wild: bool, highlight: bool,
                                       else None))
 
 
-def _mlt_rows(svc, rows) -> list[dict]:
-    disp = svc.resolve_many([d for _r, d, _s in rows])
+def _mlt_rows(disp, rows) -> list[dict]:
     return [{"url": disp[int(d)][0], "rank_score": s,
              "title": disp[int(d)][1], "body": disp[int(d)][2]}
             for _r, d, s in rows]
 
 
-def _regex_rows(svc, out, k: int) -> list[dict]:
-    from .regex_query import matched_ids
-    ids = matched_ids(out, k)
-    disp = svc.resolve_many(ids)
+def _regex_rows(disp, ids: list[int]) -> list[dict]:
     return [{"url": disp[i][0], "title": disp[i][1], "doc_id": i}
             for i in ids]
 
 
+def _facet_rows(got: dict) -> dict[str, list[dict]]:
+    return {f: [{"value": v, "count": c} for v, c in vals]
+            for f, vals in got.items()}
+
+
+def _need_source(source_df) -> None:
+    if source_df is None:
+        raise ValueError("regex search needs the corpus table: start "
+                         "the service with --source <corpus parquet>")
+
+
 class _Member:
-    """One segment of the big (zero-driver-array) regime: its persisted
-    index/docs frames, its alias table, lazily persisted path frames
-    (bm25f) and the k-row display tail. Warm start (VERDICT r3 #8):
-    MEMORY_AND_DISK persistence lets repeated queries reuse cached
-    partitions instead of re-reading parquet — hot index partitions pin
-    in executor memory, the long tail spills, nothing materializes on the
-    driver (the regime's invariant)."""
+    """One segment of the big (zero-driver-array) regime: its index and
+    docs frames, built once and not persisted (persisted partitions
+    measured no faster than re-scanning the parquet the frame was built
+    over, and the display resolve's pushdown scan was slower), and its
+    path_index frame (bm25f), ensured on the first bm25f query. The
+    segment's doc arrays and postings are read inside its kernel task."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
-        from pyspark import StorageLevel
         self.spark = spark
         self.index_dir = index_dir
-        self._index_df = (spark.read.parquet(os.path.join(index_dir, "index"))
-                          .persist(StorageLevel.MEMORY_AND_DISK))
-        self._docs_df = (spark.read.parquet(os.path.join(index_dir, "docs"))
-                         .persist(StorageLevel.MEMORY_AND_DISK))
-        self._docs_cols = set(self._docs_df.columns)
-        # Gate aliases on the MANIFEST, not a bare _SUCCESS marker: a stage
-        # dir left behind by an older build must not be trusted.
-        self._aliases_df = (
-            spark.read.parquet(os.path.join(index_dir, "aliases"))
-            if _stage_complete(index_dir, "aliases") else None)
-        self._path_df = None  # lazy warm path_index frame (bm25f)
+        self.index_df = spark.read.parquet(os.path.join(index_dir, "index"))
+        self.docs_df = spark.read.parquet(os.path.join(index_dir, "docs"))
+        self._path_df = None
 
     def path_frame(self):
-        """The path_index frame (bm25f's per-query path df aggregate):
-        ensured and persisted on the first bm25f query, released by
-        close()."""
         if self._path_df is None:
-            from pyspark import StorageLevel
-
             from .fields import ensure_path_index
-            self._path_df = (self.spark.read.parquet(
+            self._path_df = self.spark.read.parquet(
                 ensure_path_index(self.spark, self.index_dir))
-                .persist(StorageLevel.MEMORY_AND_DISK))
         return self._path_df
 
-    def close(self) -> None:
-        """Release the warm-start cache. Idempotent."""
-        for name in ("_index_df", "_docs_df", "_path_df"):
-            df = getattr(self, name)
-            if df is not None:
-                df.unpersist()
-        self._index_df = self._path_df = None
 
-    def canonical(self, doc_id: int) -> int | None:
-        """The canonical id of an alias doc_id in this segment (one
-        pushdown lookup), None when it is not an alias here."""
-        if self._aliases_df is None:
-            return None
-        from pyspark.sql import functions as F
-        arow = (self._aliases_df.where(F.col("doc_id") == doc_id)
-                .select("canonical_doc_id").collect())
-        return int(arow[0]["canonical_doc_id"]) if arow else None
-
-    def resolve_found(self, doc_ids) -> dict[int, tuple[str, str, str]]:
-        """doc_id -> (url, title, body) for the ids this segment actually
-        resolves (directly or through its alias map) via two pushdown
-        isin-scans over <= 2k metadata rows — the k-row tail, no driver
-        map. The federation probes each segment with the leftovers and
-        falls back for true misses, so a stats-only docs snapshot
-        (url == str(id)) is still claimed by its owning segment."""
-        from pyspark.sql import functions as F
-        ids = [int(d) for d in doc_ids]
-        canon = {i: i for i in ids}
-        if self._aliases_df is not None and ids:
-            for r in (self._aliases_df.where(F.col("doc_id").isin(ids))
-                      .collect()):
-                canon[int(r["doc_id"])] = int(r["canonical_doc_id"])
-        want = sorted(set(canon.values()))
-        cols = self._docs_cols
-        sel = ["doc_id"] + [c for c in ("repo", "path", "commit", "title",
-                                        "snippet") if c in cols]
-        disp: dict[int, tuple[str, str, str]] = {}
-        if want:
-            for r in (self._docs_df.select(*sel)
-                      .where(F.col("doc_id").isin(want)).collect()):
-                if {"repo", "path", "commit"} <= cols:
-                    url = f'{r["repo"]}/{r["path"]}@{r["commit"]}'
-                else:
-                    url = str(r["doc_id"])
-                disp[int(r["doc_id"])] = (
-                    url,
-                    (r["title"] or "") if "title" in cols else "",
-                    (r["snippet"] or "") if "snippet" in cols else "")
-        return {i: disp[c] for i, c in canon.items() if c in disp}
+class _View(NamedTuple):
+    """One serving view, immutable: the member dirs, their records and
+    the per-member exclusion broadcasts (None: nothing deleted). A
+    refresh builds the next view completely and swaps it in with one
+    assignment; a request reads the view once, so it never sees a
+    half-built view or pairs one view's members with another's
+    exclusions."""
+    index_dirs: list[str]
+    members: list[_Member]
+    excludes: list | None
 
 
 class FederatedSearchService:
@@ -536,17 +492,16 @@ class FederatedSearchService:
     NRT-reader shape the reference's whole-table re-index (README.md:19-21)
     can't offer.
 
-    Each member is a _Member record (warm persisted frames, k-row
-    pushdown display); display fields resolve from whichever segment owns
-    each result id (resolve_found probes). Per query the federation's
-    weights come from ONE dictionary probe per member, handed to the
-    per-segment kernels. refresh() re-resolves the view — the NRT reopen:
-    new ingests become searchable, partials consumed by a compaction drop
-    out, and pending tombstones (deletes.py) re-resolve to per-member
-    exclusion sets (LOGICAL delete: every mode filters the dead docs
-    while stats stay as built — Lucene stats-until-merge). Construct
-    either with explicit index_dirs or with work_dir/out_dir (view mode,
-    refresh()-able)."""
+    The service serves one _View of _Member records; display fields of a
+    result set resolve in one pushdown job over the members' docs
+    frames. Per query the federation's weights come from ONE dictionary
+    probe per member, handed to the per-segment kernels. refresh()
+    re-resolves the view — the NRT reopen: new ingests become
+    searchable, partials consumed by a compaction drop out, and pending
+    tombstones (deletes.py) re-resolve to per-member exclusion sets
+    (LOGICAL delete: every mode filters the dead docs while stats stay
+    as built — Lucene stats-until-merge). Construct either with explicit
+    index_dirs or with work_dir/out_dir (view mode, refresh()-able)."""
 
     def __init__(self, spark: SparkSession,
                  index_dirs: list[str] | None = None, *,
@@ -565,35 +520,35 @@ class FederatedSearchService:
                 raise ValueError(
                     "pass index_dirs, or work_dir+out_dir for view mode")
             index_dirs = self._resolve_view()
-        self._open(index_dirs)
+        self._refresh_lock = threading.Lock()
+        self._view = self._build_view(list(index_dirs), None)
+
+    @property
+    def index_dirs(self) -> list[str]:
+        return self._view.index_dirs
 
     def _resolve_view(self) -> list[str]:
         from .streaming import serving_view
         return serving_view(self.spark, self._work, self._out,
                             n_salts=self._salts, partitions=self._parts)
 
-    def _open(self, dirs: list[str]) -> None:
-        self.index_dirs = list(dirs)
-        self.members = [_Member(self.spark, d) for d in dirs]
-        self._excl_bcs: list | None = None
-        self._load_exclusions()
+    def _build_view(self, dirs: list[str], old: _View | None) -> _View:
+        """The view over ``dirs``: the old view's members when the dirs
+        did not change, and freshly resolved exclusions either way."""
+        members = (old.members if old is not None and dirs == old.index_dirs
+                   else [_Member(self.spark, d) for d in dirs])
+        return _View(dirs, members, self._exclusions(members))
 
-    def _frames(self) -> dict:
-        """The members' warm frames as the federated kernels' keywords."""
-        return {"idx_dfs": [m._index_df for m in self.members],
-                "docs_dfs": [m._docs_df for m in self.members]}
-
-    def _load_exclusions(self) -> None:
-        """LOGICAL deletes (deletes.py): resolve the work dir's pending
-        tombstones to per-member dead-ordinal sets, shipped to queries as
-        one Spark broadcast per member per refresh (never per query).
-        Deleted docs vanish from every mode's results while each member's
-        statistics stay as built — Lucene's stats-until-merge semantics;
-        the next compact_incremental applies them physically and this
-        resolves to no-exclusions again."""
-        self._drop_exclusions()
+    def _exclusions(self, members: list[_Member]) -> list | None:
+        """LOGICAL deletes (deletes.py): the work dir's pending tombstones
+        as per-member dead-ordinal sets, shipped to queries as one Spark
+        broadcast per member per refresh (never per query). Deleted docs
+        vanish from every mode's results while each member's statistics
+        stay as built — Lucene's stats-until-merge semantics; the next
+        compact_incremental applies them physically and this resolves to
+        no exclusions again."""
         if self._work is None:
-            return
+            return None
         from .deletes import (
             member_exclusions,
             pending_delete_files,
@@ -602,69 +557,59 @@ class FederatedSearchService:
         from .streaming import _load_compaction_state
         files = pending_delete_files(
             self._work, _load_compaction_state(self._out))
-        tomb = tombstones_frame(self.spark, files)
-        arrs = member_exclusions(self.spark, self.members, tomb)
+        arrs = member_exclusions(self.spark, members,
+                                 tombstones_frame(self.spark, files))
         if arrs is None:
-            return
+            return None
         sc = self.spark.sparkContext
-        self._excl_bcs = [sc.broadcast(a) if a is not None else None
-                          for a in arrs]
-
-    def _drop_exclusions(self) -> None:
-        if getattr(self, "_excl_bcs", None):
-            for b in self._excl_bcs:
-                if b is not None:
-                    b.unpersist()
-        self._excl_bcs = None
+        return [sc.broadcast(a) if a is not None else None for a in arrs]
 
     def refresh(self) -> list[str]:
-        """Re-resolve the serving view; swap members only when the view
-        changed (the warm caches survive a no-op refresh). Exclusions
-        ALWAYS re-resolve: new tombstones take effect on an unchanged
-        view, and a compaction that consumed them clears the old set."""
+        """Re-resolve the serving view and swap it in whole. Members are
+        kept when the view's dirs did not change; exclusions ALWAYS
+        re-resolve: new tombstones take effect on an unchanged view, and
+        a compaction that consumed them clears the old set. Requests in
+        flight finish on the view they read."""
         if self._work is None:
             raise ValueError("refresh() requires view mode "
                              "(work_dir/out_dir)")
-        new = self._resolve_view()
-        if new != self.index_dirs:
-            self.close()
-            self._open(new)
-        else:
-            self._load_exclusions()
-        return self.index_dirs
+        with self._refresh_lock:
+            old = self._view
+            self._view = new = self._build_view(self._resolve_view(), old)
+        _unpersist(old.excludes)
+        return new.index_dirs
 
     def close(self) -> None:
-        """Release every member's warm-start cache. Idempotent."""
-        self._drop_exclusions()
-        for m in self.members:
-            m.close()
-
-    def _check_positions(self) -> None:
-        for d in self.index_dirs:
-            if not _stage_complete(d, "positions"):
-                raise _no_positions(
-                    "this index" if len(self.index_dirs) == 1
-                    else f"federation member {d}")
+        """Release the exclusion broadcasts' executor copies. Idempotent."""
+        _unpersist(self._view.excludes)
 
     def _contents_of(self, ids: list[int]) -> dict[int, str]:
         # the source table is federation-wide (it backs /regex too)
         return _contents_from_source(self._source_df, ids)
 
-    def resolve_many(self, doc_ids) -> dict[int, tuple[str, str, str]]:
-        """doc_id -> (url, title, body) for a RESULT SET (k ids): each
-        member claims the ids it owns (the pushdown k-row tail), a
-        str(id) fallback covers the rest."""
+    def resolve_many(self, doc_ids, view: _View | None = None
+                     ) -> dict[int, tuple[str, str, str]]:
+        """doc_id -> (url, title, body) for a RESULT SET (k ids) of
+        ``view`` (default: the current one): ONE pushdown isin job over
+        the union of the members' docs frames — result ids come from the
+        docs stage, never alias ids — with a str(id) fallback for ids no
+        member holds; a stats-only snapshot's url is str(id)."""
+        from pyspark.sql import functions as F
         ids = [int(d) for d in doc_ids]
-        out: dict[int, tuple[str, str, str]] = {}
-        rest = ids
-        for m in self.members:
-            if not rest:
-                break
-            out.update(m.resolve_found(rest))
-            rest = [i for i in rest if i not in out]
-        for i in rest:
-            out[i] = (str(i), "", "")
-        return out
+        found: dict[int, tuple[str, str, str]] = {}
+        if ids:
+            docs = reduce(
+                lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                [m.docs_df.select("doc_id", *[
+                    c for c in _DISPLAY if c in m.docs_df.columns])
+                 for m in (view or self._view).members])
+            for r in docs.where(F.col("doc_id").isin(ids)).collect():
+                d = r.asDict()
+                url = (f'{d["repo"]}/{d["path"]}@{d["commit"]}'
+                       if d.get("repo") is not None else str(d["doc_id"]))
+                found[d["doc_id"]] = (url, d.get("title") or "",
+                                      d.get("snippet") or "")
+        return {i: found.get(i, (str(i), "", "")) for i in ids}
 
     def stats(self) -> dict:
         """Federation-wide statistics: integer-summed member manifests
@@ -690,7 +635,7 @@ class FederatedSearchService:
         federation-wide df — stats as built)."""
         from .query import suggest_terms_federated
         return [{"term": t, "df": df} for t, df in suggest_terms_federated(
-            self._frames()["idx_dfs"], prefix, k=k)]
+            [m.index_df for m in self._view.members], prefix, k=k)]
 
     def dym_payload(self, query: str) -> dict:
         """Did-you-mean against the federation's UNION dictionary
@@ -700,30 +645,24 @@ class FederatedSearchService:
         identifiers count immediately."""
         from .fuzzy import apply_corrections, correct_terms_federated
         from .tokenizer import parse_query, tokenize
+        v = self._view
         q, _filters, _nots = parse_query(query.strip())
-        corr = correct_terms_federated(self._frames()["idx_dfs"],
-                                       tokenize(q),
-                                       index_dirs=self.index_dirs)
+        corr = correct_terms_federated([m.index_df for m in v.members],
+                                       tokenize(q), index_dirs=v.index_dirs)
         return {"query": query,
                 "did_you_mean": apply_corrections(q, corr)}
 
     def explain_payload(self, query: str, doc_id: int) -> dict:
-        """GET /explain (r5): the doc's tf from its owning segment,
-        df/n_docs/avgdl the federation's sums — score bitwise what the
-        federated ranker scores this doc (query.explain_big_federated).
-        Filter/NOT syntax is parsed off first; alias doc_ids resolve
-        through the owning segment's alias map first."""
+        """GET /explain in one job (query.explain_big_federated): the
+        owning member maps an alias doc_id to its canonical and explains
+        the doc under the federation's weights — score bitwise what the
+        federated ranker scores it. Filter/NOT syntax is parsed off
+        first (they restrict result sets, never scores)."""
         from .query import explain_big_federated
         from .tokenizer import parse_query
         q, _filters, _nots = parse_query(query.strip())
-        did = int(doc_id)
-        for m in self.members:
-            canon = m.canonical(did)
-            if canon is not None:
-                did = canon
-                break
-        return explain_big_federated(self.spark, self.index_dirs, q, did,
-                                     **self._frames())
+        return explain_big_federated(self.spark, self.index_dirs, q,
+                                     int(doc_id))
 
     def mlt_payload(self, doc_id: int, k: int = 10) -> list[dict]:
         """More-like-this over the federation (VERDICT r4 #8): the doc's
@@ -734,9 +673,12 @@ class FederatedSearchService:
         segments get their doc_terms stage built lazily; explicit index
         dirs must carry it (a missing stage raises with the one-liner)."""
         from .mlt import more_like_this_federated
-        return _mlt_rows(self, more_like_this_federated(
-            self.spark, self.index_dirs, doc_id, k=k,
-            excludes=self._excl_bcs, ensure=self._work is not None))
+        v = self._view
+        rows = more_like_this_federated(
+            self.spark, v.index_dirs, doc_id, k=k, excludes=v.excludes,
+            ensure=self._work is not None)
+        return _mlt_rows(self.resolve_many([d for _r, d, _s in rows], v),
+                         rows)
 
     def regex_payload(self, pattern: str, k: int = 100) -> list[dict]:
         """GET /regex over the federation (VERDICT r4 #2): per-segment
@@ -744,37 +686,30 @@ class FederatedSearchService:
         tombstone exclusion, one verify pass over the union — freshly
         ingested docs are regex-visible before any compaction. Same
         payload shape as the driver regime's endpoint."""
-        if self._source_df is None:
-            raise ValueError("regex search needs the corpus table: start "
-                             "the service with --source <corpus parquet>")
-        from .regex_query import regex_search_federated
-        out = regex_search_federated(
-            self.spark, self.index_dirs, self._source_df, pattern,
-            excludes=self._excl_bcs,
-            docs_dfs=self._frames()["docs_dfs"])
-        return _regex_rows(self, out, k)
+        from .regex_query import matched_ids, regex_search_federated
+        _need_source(self._source_df)
+        v = self._view
+        ids = matched_ids(regex_search_federated(
+            self.spark, v.index_dirs, self._source_df, pattern,
+            excludes=v.excludes,
+            docs_dfs=[m.docs_df for m in v.members]), k)
+        return _regex_rows(self.resolve_many(ids, v), ids)
 
     def facets(self, query: str, fields: list[str], k_values: int = 10,
                mode: str = "ranked") -> dict[str, list[dict]]:
-        """EXACT federation facets: members' candidate-metadata frames
-        union BEFORE the count (doc-disjoint segments), so the histogram
-        equals the merged index's — no per-member truncation. Logical
-        deletes mask per member at posting decode, same as search."""
-        from .query import facet_frame, facet_topn, query_terms
+        """EXACT federation facets in one kernel job
+        (query.facets_federated): each member counts its full matching
+        set, one groupBy sums the members' histograms BEFORE the top
+        k_values per field are taken — no per-member truncation. Logical
+        deletes restrict per member, same as search."""
+        from .query import facets_federated, query_terms
         from .tokenizer import parse_query
+        v = self._view
         q, filters, nots = parse_query(query.strip())
-        terms = query_terms(q)
-        frames = []
-        for i, m in enumerate(self.members):
-            exc = (self._excl_bcs[i]
-                   if self._excl_bcs is not None else None)
-            frames.append(facet_frame(
-                self.spark, m.index_dir, terms, fields, mode=mode,
-                index_df=m._index_df, docs_df=m._docs_df, exclude=exc,
-                filters=filters, not_terms=nots))
-        got = facet_topn(frames, fields, k_values=k_values)
-        return {f: [{"value": v, "count": c} for v, c in vals]
-                for f, vals in got.items()}
+        return _facet_rows(facets_federated(
+            self.spark, v.index_dirs, query_terms(q), fields,
+            k_values=k_values, mode=mode, excludes=v.excludes,
+            filters=filters, not_terms=nots))
 
     def search_payload(self, query: str, k: int = 10, mode: str = "ranked",
                        scoring: str = "bm25", slop: int = 1,
@@ -793,20 +728,26 @@ class FederatedSearchService:
             search_big_terms_federated,
             search_big_tfidf_federated,
         )
+        v = self._view
+        dirs = v.index_dirs
+        idx_dfs = [m.index_df for m in v.members]
         q, filters, not_terms, k, offset, is_wild, is_fuzzy = \
             _parse_search(query, k, offset, mode)
-        restrict = {"excludes": self._excl_bcs, "filters": filters,
+        restrict = {"excludes": v.excludes, "filters": filters,
                     "not_terms": not_terms}
         if mode in ("phrase", "near"):
             from .positions import search_positional_federated
-            self._check_positions()
+            for d in dirs:
+                if not _stage_complete(d, "positions"):
+                    raise _no_positions("this index" if len(dirs) == 1
+                                        else f"federation member {d}")
             rows = search_positional_federated(
-                self.spark, self.index_dirs, *_positional(q, mode, slop),
-                k=k, **restrict)
+                self.spark, dirs, *_positional(q, mode, slop), k=k,
+                **restrict)
         elif scoring == "tfidf":
             rows = search_big_tfidf_federated(
-                self.spark, self.index_dirs, q,
-                k=min(k, REFERENCE_MAX_RESULTS), **restrict)
+                self.spark, dirs, q, k=min(k, REFERENCE_MAX_RESULTS),
+                **restrict)
         elif scoring == "bm25f":
             # field-boosted ranking: each member scored under the
             # federation's global two-field weights, k×S merge — freshly
@@ -814,23 +755,28 @@ class FederatedSearchService:
             # compaction
             from .fields import search_big_fielded_federated
             rows = search_big_fielded_federated(
-                self.spark, self.index_dirs, q, k=k,
-                path_dfs=[m.path_frame() for m in self.members],
-                **restrict)
+                self.spark, dirs, q, k=k,
+                path_dfs=[m.path_frame() for m in v.members], **restrict)
         elif is_fuzzy:
             rows = search_big_fuzzy_federated(
-                self.spark, self.index_dirs, q[:-1].lower(), k=k,
-                idx_dfs=self._frames()["idx_dfs"], **restrict)
+                self.spark, dirs, q[:-1].lower(), k=k, idx_dfs=idx_dfs,
+                **restrict)
         elif is_wild:
             rows = search_big_prefix_federated(
-                self.spark, self.index_dirs, q[:-1].lower(), k=k,
-                idx_dfs=self._frames()["idx_dfs"], **restrict)
+                self.spark, dirs, q[:-1].lower(), k=k, idx_dfs=idx_dfs,
+                **restrict)
         else:
             rows = search_big_terms_federated(
-                self.spark, self.index_dirs, query_terms(q), k=k,
-                mode=mode, **restrict)
+                self.spark, dirs, query_terms(q), k=k, mode=mode,
+                **restrict)
         return _render(self, rows[offset:], q, is_wild, highlight, snippet,
-                       snippet_w)
+                       snippet_w, lambda ids: self.resolve_many(ids, v))
+
+
+def _unpersist(broadcasts: list | None) -> None:
+    for b in broadcasts or ():
+        if b is not None:
+            b.unpersist()
 
 
 def make_server(service, host: str = "127.0.0.1",

@@ -139,18 +139,19 @@ def main() -> None:
     # regex search at 1M docs (round 4): a rare-literal pattern — the
     # analyzer pins {identifier, 1965}, so the verify scan touches only
     # that conjunction's candidates, vs the unpruned full-content scan
-    from engine.regex_query import regex_candidates, regex_search
+    from engine.regex_query import regex_candidates, regex_search_federated
     pat = r"\bdef identifier_1965\b"
     t0 = time.time()
     n_cand = regex_candidates(spark, out, pat).count()
     res["regex_candidates_s"] = round(time.time() - t0, 3)
     res["regex_candidates_n"] = int(n_cand)
     t0 = time.time()
-    n_pruned = regex_search(spark, out, corpus, pat).count()
+    n_pruned = regex_search_federated(spark, [out], corpus, pat).count()
     res["regex_pruned_s"] = round(time.time() - t0, 3)
     res["regex_matches_n"] = int(n_pruned)
     t0 = time.time()
-    n_full = regex_search(spark, out, corpus, pat, prune=False).count()
+    n_full = regex_search_federated(spark, [out], corpus, pat,
+                                    prune=False).count()
     res["regex_fullscan_s"] = round(time.time() - t0, 3)
     assert n_full == n_pruned and n_cand < N_DOCS / 10
 
@@ -203,7 +204,7 @@ def main() -> None:
     res["regex_icase_candidates_s"] = round(time.time() - t0, 3)
     res["regex_icase_candidates_n"] = int(n_icand)
     t0 = time.time()
-    n_ip = regex_search(spark, out, corpus, ipat).count()
+    n_ip = regex_search_federated(spark, [out], corpus, ipat).count()
     res["regex_icase_pruned_s"] = round(time.time() - t0, 3)
     res["regex_icase_matches_n"] = int(n_ip)
     assert n_ip == n_pruned and n_icand < N_DOCS / 10

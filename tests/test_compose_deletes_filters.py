@@ -105,7 +105,7 @@ def test_filters_nots_and_tombstones_compose_on_federated_view(
 
     fed = FederatedSearchService(spark, work_dir=work, out_dir=out,
                                  partitions=4)
-    assert fed._excl_bcs is not None  # tombstones actually loaded
+    assert fed._view.excludes is not None  # tombstones actually loaded
 
     def expect(cargs):
         wide = dict(cargs)

@@ -77,3 +77,28 @@ def test_served_alias_resolves_to_canonical(spark, tmp_path):
     svc = SearchService(spark, out)
     alias_id, canon_id = next(iter(expected_alias.items()))
     assert svc.resolve(int(alias_id)) == svc.resolve(int(canon_id))
+
+
+def test_regex_serves_no_alias_ids(spark, tmp_path):
+    """/regex answers with served docs only, whether the pattern prunes
+    or not: an unselective pattern's full verify scan covers the index's
+    docs, not the source table's dedup aliases — so the driver and big
+    regimes answer the same ids."""
+    from engine.server import SearchService
+    pdf = make_corpus(200, seed=31)
+    big, expected_alias = _with_duplicates(pdf, 30)
+    out, src = str(tmp_path / "idx"), str(tmp_path / "src")
+    corpus_to_spark(spark, big).write.parquet(src)
+    build_index(spark, corpus_to_spark(spark, big), out,
+                n_salts=4, partitions=4)
+    driver = SearchService(spark, out, source_path=src)
+    big_svc = SearchService(spark, out, big=True, source_path=src)
+    try:
+        for pattern in (r"identifier_1\d", r"\bdef\b"):
+            got = driver.regex_payload(pattern, k=300)
+            assert got == big_svc.regex_payload(pattern, k=300), pattern
+            ids = {r["doc_id"] for r in got}
+            assert ids and not ids & set(expected_alias), pattern
+            assert ids <= set(pdf["doc_id"].astype(int)), pattern
+    finally:
+        big_svc.close()

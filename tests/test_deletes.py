@@ -165,7 +165,7 @@ def test_logical_delete_serving_all_modes(spark, tmp_path):
 
     fed = FederatedSearchService(spark, work_dir=work, out_dir=out,
                                  partitions=4)
-    assert fed._excl_bcs is not None
+    assert fed._view.excludes is not None
 
     dead_urls = {f"{r.repo}/{r.path}@{r.commit}"
                  for r in big[big["doc_id"].isin(dead_ids)]
@@ -205,7 +205,7 @@ def test_logical_delete_serving_all_modes(spark, tmp_path):
     # payloads now equal the survivors-only service EXACTLY
     gen = compact_incremental(spark, work, out, partitions=4)
     assert fed.refresh() == [gen]
-    assert fed._excl_bcs is None
+    assert fed._view.excludes is None
 
     survivors = big[~big["doc_id"].isin(dead_ids2)]
     sv = str(tmp_path / "sv")
@@ -258,3 +258,58 @@ def test_exclusion_prune_bitwise_and_idempotent_api(spark, tmp_path):
     p1 = delete_docs(str(tmp_path / "w"), [1, 1, 2])
     p2 = delete_docs(str(tmp_path / "w"), [2, 3])
     assert p1 != p2 and os.path.exists(p1) and os.path.exists(p2)
+
+
+def test_refresh_never_serves_a_tombstoned_doc(spark, tmp_path,
+                                               monkeypatch):
+    """A query that runs while refresh() resolves the next view's
+    exclusions is answered by the whole previous view: the tombstoned
+    doc stays absent (the next view swaps in with one assignment, once
+    its exclusions exist)."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    import engine.deletes as ed
+    from engine.server import FederatedSearchService
+    from engine.tokenizer import tokenize
+
+    pdf = make_corpus(120, seed=71)
+    src, work, out = (str(tmp_path / d) for d in ("src", "work", "out"))
+    os.makedirs(src)
+    _ingest_wave(spark, pdf, src, work)
+    compact_incremental(spark, work, out, partitions=4)
+    row = pdf.iloc[0]
+    delete_docs(work, [int(row.doc_id)])
+    dead_url = f"{row.repo}/{row.path}@{row.commit}"
+    q = f"{tokenize(row.content)[0]} path:{row.path}"
+
+    def urls(rows):
+        return {r["url"] for r in rows}
+
+    fed = FederatedSearchService(spark, work_dir=work, out_dir=out,
+                                 partitions=4)
+    # without its exclusions the view serves the doc for this query
+    assert dead_url in urls(FederatedSearchService(
+        spark, fed.index_dirs).search_payload(q, k=50))
+    before = fed.search_payload(q, k=50)
+    assert dead_url not in urls(before)
+
+    entered, release = threading.Event(), threading.Event()
+    resolve = ed.member_exclusions
+
+    def blocked(*a, **kw):
+        entered.set()
+        assert release.wait(300)
+        return resolve(*a, **kw)
+
+    monkeypatch.setattr(ed, "member_exclusions", blocked)
+    with ThreadPoolExecutor(1) as pool:
+        refresh = pool.submit(fed.refresh)
+        try:
+            assert entered.wait(300)
+            during = fed.search_payload(q, k=50)
+        finally:
+            release.set()
+        assert refresh.result(timeout=300) == fed.index_dirs
+    assert during == before
+    assert fed.search_payload(q, k=50) == before

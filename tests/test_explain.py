@@ -1,4 +1,4 @@
-"""Score explanation (SearchEngine.explain + GET /explain).
+"""Score explanation (kernel.Segment.explain + GET /explain).
 
 The contract: explain's total is BITWISE the score ranking uses — same
 sorted-term accumulation, same float64 op order — so an explanation can
@@ -13,33 +13,38 @@ import urllib.request
 
 import pytest
 
-from engine.query import SearchEngine
+from engine.server import SearchService, make_server
 
 
 @pytest.fixture(scope="module")
-def engine(spark, built_index):
+def service(spark, built_index):
     out, _man = built_index
-    return SearchEngine(spark, out)
+    return SearchService(spark, out)
+
+
+@pytest.fixture(scope="module")
+def engine(service):
+    return service.engine
 
 
 @pytest.mark.parametrize("query", ["def return", "static function",
                                    "identifier_41 def zzz_absent"])
-def test_explain_total_is_the_ranked_score(engine, query):
+def test_explain_total_is_the_ranked_score(service, engine, query):
     rows = engine.search(query, k=5, mode="ranked")
     assert rows
     for _rank, doc_id, score in rows:
-        exp = engine.explain(query, doc_id)
+        exp = service.explain_payload(query, doc_id)
         assert exp["score"] == score  # bitwise, not approx
         assert sum(t["contribution"] for t in exp["terms"]) == \
             pytest.approx(score, rel=1e-12)
         assert exp["doc_id"] == doc_id and exp["k1"] == 1.2
 
 
-def test_explain_absent_term_and_absent_from_doc(engine,
+def test_explain_absent_term_and_absent_from_doc(service, engine,
                                                  fixture_corpus_pdf):
     query = "def zzz_not_in_corpus"
     _r, doc_id, _s = engine.search(query, k=1)[0]
-    exp = engine.explain(query, doc_id)
+    exp = service.explain_payload(query, doc_id)
     by_term = {t["term"]: t for t in exp["terms"]}
     assert by_term["zzz"]["df"] == 0
     assert by_term["zzz"]["contribution"] == 0.0
@@ -49,21 +54,18 @@ def test_explain_absent_term_and_absent_from_doc(engine,
     from engine.tokenizer import tokenize
     absent = next(int(r.doc_id) for r in fixture_corpus_pdf.itertuples()
                   if "41" not in tokenize(r.content))
-    exp2 = engine.explain("41", absent)
+    exp2 = service.explain_payload("41", absent)
     assert exp2["score"] == 0.0
     assert exp2["terms"][0]["tf"] == 0
     assert exp2["terms"][0]["df"] > 0  # corpus stats still shown
 
 
-def test_explain_unknown_doc_raises(engine):
+def test_explain_unknown_doc_raises(service):
     with pytest.raises(ValueError, match="unknown doc_id"):
-        engine.explain("def", -12345)
+        service.explain_payload("def", -12345)
 
 
-def test_explain_endpoint(spark, built_index):
-    from engine.server import SearchService, make_server
-    out, _man = built_index
-    service = SearchService(spark, out)
+def test_explain_endpoint(service):
     srv = make_server(service, port=0)
     threading.Thread(target=srv.serve_forever, daemon=True).start()
     base = f"http://127.0.0.1:{srv.server_address[1]}"
@@ -86,31 +88,29 @@ def test_explain_endpoint(spark, built_index):
 
 @pytest.mark.parametrize("query", ["def return", "static function",
                                    "identifier_41 def zzz_absent"])
-def test_explain_big_bitwise(spark, built_index, engine, query):
+def test_explain_big_bitwise(spark, built_index, service, engine, query):
     """r5: the zero-driver-array explain (query.explain_big_federated
-    over the one index) returns the EXACT dict SearchEngine.explain does
-    — floats bitwise, absent terms included."""
+    over the one index) returns the EXACT dict the driver regime's
+    explain does — floats bitwise, absent terms included."""
     from engine.query import explain_big_federated
     out, _man = built_index
     rows = engine.search(query, k=3, mode="ranked")
     for _r, doc_id, _s in rows:
         assert explain_big_federated(spark, [out], query, doc_id) == \
-            engine.explain(query, doc_id), (query, doc_id)
+            service.explain_payload(query, doc_id), (query, doc_id)
     with pytest.raises(ValueError, match="unknown doc_id"):
         explain_big_federated(spark, [out], query, 12345)
 
 
-def test_explain_big_regime_endpoint(spark, built_index, engine):
+def test_explain_big_regime_endpoint(spark, built_index, service, engine):
     """The big-regime service now serves /explain byte-identically to
     the driver-map service."""
-    from engine.server import SearchService
     out, _man = built_index
     big = SearchService(spark, out, big=True)
-    small = SearchService(spark, out)
     try:
         q = "def return"
         _r, doc_id, _s = engine.search(q, k=1)[0]
         assert big.explain_payload(q, doc_id) == \
-            small.explain_payload(q, doc_id)
+            service.explain_payload(q, doc_id)
     finally:
         big.close()

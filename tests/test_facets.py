@@ -1,10 +1,11 @@
 """Facet aggregations — Elasticsearch-style per-field (value, count)
 histograms over the FULL matching set of a query (not the top-k page),
 with the engine's whole restriction stack (metadata filters, NOT terms,
-logical deletes). Three paths, all asserted equal to a brute-force oracle:
-driver regime (NumPy over cached metadata arrays), big regime (distributed
-candidate frame + per-field groupBy/sort+limit), and federation (members'
-frames union BEFORE counting — exact, no per-member truncation)."""
+logical deletes). One kernel (kernel.Segment.facet_counts), asserted equal
+to a brute-force oracle in both regimes: in-process in the driver regime,
+and per member in one Spark task in the big regime, whose members' full
+histograms sum BEFORE the per-field top-k (exact, no per-member
+truncation)."""
 
 import json
 import threading
@@ -15,7 +16,7 @@ import pytest
 
 from engine.corpus import corpus_to_spark
 from engine.index_build import build_index
-from engine.query import SearchEngine, facet_frame, facet_topn
+from engine.query import SearchEngine, facets_federated
 from engine.server import SearchService, make_server
 from engine.tokenizer import tokenize
 
@@ -54,12 +55,12 @@ def engine(spark, built_index):
 
 
 def test_driver_facets_match_brute_force(engine, fixture_corpus_pdf):
-    got = engine.facet_counts(" ".join(QUERY_TERMS), FIELDS)
+    got = engine.facet_counts(QUERY_TERMS, FIELDS, k_values=10)
     assert got == _brute(fixture_corpus_pdf, QUERY_TERMS, FIELDS)
 
 
 def test_driver_facets_conjunctive(engine, fixture_corpus_pdf):
-    got = engine.facet_counts(" ".join(QUERY_TERMS), FIELDS,
+    got = engine.facet_counts(QUERY_TERMS, FIELDS, k_values=10,
                               mode="conjunctive")
     want = _brute(fixture_corpus_pdf, QUERY_TERMS, FIELDS,
                   mode="conjunctive")
@@ -69,40 +70,39 @@ def test_driver_facets_conjunctive(engine, fixture_corpus_pdf):
 def test_driver_facets_filters_and_not(engine, fixture_corpus_pdf):
     filters = {"lang": "python", "path": "src/"}
     nots = ["import"]
-    got = engine.facet_counts(" ".join(QUERY_TERMS), FIELDS,
+    got = engine.facet_counts(QUERY_TERMS, FIELDS, k_values=10,
                               filters=filters, not_terms=nots)
     assert got == _brute(fixture_corpus_pdf, QUERY_TERMS, FIELDS,
                          filters=filters, nots=nots)
 
 
 def test_driver_facets_k_values_cap(engine, fixture_corpus_pdf):
-    got = engine.facet_counts(" ".join(QUERY_TERMS), ["repo"], k_values=3)
+    got = engine.facet_counts(QUERY_TERMS, ["repo"], k_values=3)
     want = _brute(fixture_corpus_pdf, QUERY_TERMS, ["repo"], k_values=3)
     assert got == want and len(got["repo"]) == 3
-    assert engine.facet_counts(" ".join(QUERY_TERMS), ["repo"],
+    assert engine.facet_counts(QUERY_TERMS, ["repo"],
                                k_values=0) == {"repo": []}
 
 
 def test_driver_facets_absent_term_and_field(engine):
-    assert engine.facet_counts("zzzznotaterm", FIELDS) == \
+    assert engine.facet_counts(["zzzznotaterm"], FIELDS) == \
         {f: [] for f in FIELDS}
-    assert engine.facet_counts("zzzznotaterm def", FIELDS,
+    assert engine.facet_counts(["def", "zzzznotaterm"], FIELDS,
                                mode="conjunctive") == {f: [] for f in FIELDS}
     with pytest.raises(ValueError, match="no 'nope' column"):
-        engine.facet_counts("def", ["nope"])
+        engine.facet_counts(["def"], ["nope"])
 
 
 def test_big_facets_equal_driver(spark, built_index, engine):
     out, _man = built_index
     for mode in ("ranked", "conjunctive"):
-        fr = facet_frame(spark, out, QUERY_TERMS, FIELDS, mode=mode)
-        got = facet_topn([fr], FIELDS)
-        assert got == engine.facet_counts(" ".join(QUERY_TERMS), FIELDS,
+        got = facets_federated(spark, [out], QUERY_TERMS, FIELDS, mode=mode)
+        assert got == engine.facet_counts(QUERY_TERMS, FIELDS, k_values=10,
                                           mode=mode), mode
-    fr = facet_frame(spark, out, QUERY_TERMS, FIELDS,
-                     filters={"lang": "python"}, not_terms=["import"])
-    assert facet_topn([fr], FIELDS) == engine.facet_counts(
-        " ".join(QUERY_TERMS), FIELDS, filters={"lang": "python"},
+    got = facets_federated(spark, [out], QUERY_TERMS, FIELDS,
+                           filters={"lang": "python"}, not_terms=["import"])
+    assert got == engine.facet_counts(
+        QUERY_TERMS, FIELDS, k_values=10, filters={"lang": "python"},
         not_terms=["import"])
 
 
@@ -118,8 +118,7 @@ def test_federated_facets_exact(spark, fixture_corpus_pdf, tmp_path):
         build_index(spark, corpus_to_spark(spark, part.reset_index(
             drop=True)), d, n_salts=4, partitions=4)
         dirs.append(d)
-    frames = [facet_frame(spark, d, QUERY_TERMS, FIELDS) for d in dirs]
-    got = facet_topn(frames, FIELDS, k_values=4)
+    got = facets_federated(spark, dirs, QUERY_TERMS, FIELDS, k_values=4)
     assert got == _brute(fixture_corpus_pdf, QUERY_TERMS, FIELDS,
                          k_values=4)
 

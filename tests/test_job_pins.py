@@ -5,10 +5,11 @@ runs does not. Each case below is warmed once (lazy stage builds, cache
 persists), then run again inside its own job group, and the jobs that
 group ran are counted (``setJobGroup`` + ``statusTracker``). A count may
 go down, never up: ``BIG_JOBS`` holds the counts measured for the big
-serving regime once every BM25/TF-IDF/BM25F top-k and every phrase/NEAR
-match ran as one kernel task per member (one job, plus the 2-job display
-resolve), and a warm driver-regime query runs no Spark job at all — nor
-does a cold phrase/NEAR one.
+serving regime once every BM25/TF-IDF/BM25F top-k, phrase/NEAR match,
+facet histogram and score explanation ran as one kernel task per member
+(one job, plus the 1-job display resolve of a result list), and a warm
+driver-regime query runs no Spark job at all — nor does a cold
+phrase/NEAR one.
 
 Stages that change the plan (positions, the fuzzy deletion table, the
 path index) are ensured up front, so the counts do not depend on which
@@ -25,23 +26,23 @@ _gid = itertools.count()
 
 #: jobs per warm request of ``serve --big`` (SearchService(big=True))
 BIG_JOBS = {
-    "ranked": 3,
-    "conjunctive": 3,
-    "filter": 3,
-    "not": 3,
-    "snippet": 3,
-    "offset": 3,
-    "tfidf": 3,
-    "bm25f": 4,
-    "wildcard": 5,
-    "fuzzy": 6,
-    "phrase": 3,
-    "phrase_slop": 3,
-    "near": 3,
-    "explain": 3,
+    "ranked": 2,
+    "conjunctive": 2,
+    "filter": 2,
+    "not": 2,
+    "snippet": 2,
+    "offset": 2,
+    "tfidf": 2,
+    "bm25f": 3,
+    "wildcard": 4,
+    "fuzzy": 5,
+    "phrase": 2,
+    "phrase_slop": 2,
+    "near": 2,
+    "explain": 1,
     "suggest": 1,
     "didyoumean": 4,
-    "facets": 5,
+    "facets": 1,
 }
 
 SEARCH_CASES = {
@@ -132,13 +133,20 @@ def test_warm_driver_query_runs_no_job(spark, staged):
 
 
 def test_federated_kernel_is_one_job(spark, staged, tmp_path):
-    """search_big_terms_federated and search_positional_federated score
-    or match every member in ONE Spark job (a task per member): over one
-    segment and over two doc-disjoint ones."""
+    """search_big_terms_federated, search_positional_federated and
+    explain_big_federated score, match or explain every member in ONE
+    Spark job (a task per member): over one segment and over two
+    doc-disjoint ones. facets_federated adds its reduce to that job: none
+    over one segment (a single partition needs no exchange), the groupBy
+    and the per-field rank over two."""
     from engine.corpus import corpus_to_spark, make_corpus
     from engine.index_build import build_index
     from engine.positions import search_positional_federated
-    from engine.query import search_big_terms_federated
+    from engine.query import (
+        explain_big_federated,
+        facets_federated,
+        search_big_terms_federated,
+    )
 
     pdf = make_corpus(160, seed=91)
     a, b = str(tmp_path / "a"), str(tmp_path / "b")
@@ -146,7 +154,7 @@ def test_federated_kernel_is_one_job(spark, staged, tmp_path):
                 n_salts=2, partitions=2, with_positions=True)
     build_index(spark, corpus_to_spark(spark, pdf.iloc[90:]), b,
                 n_salts=2, partitions=2, with_positions=True)
-    for dirs in ([staged], [a, b]):
+    for dirs, facet_jobs in (([staged], 1), ([a, b], 3)):
         def run(dirs=dirs):
             assert search_big_terms_federated(spark, dirs, ["def", "return"],
                                               k=5)
@@ -154,5 +162,19 @@ def test_federated_kernel_is_one_job(spark, staged, tmp_path):
         def phrase(dirs=dirs):
             assert search_positional_federated(spark, dirs,
                                                ["def", "return"], k=5)
+
+        # owned by the last member: the other tasks answer nothing
+        doc_id = search_big_terms_federated(spark, dirs[-1:], ["def"],
+                                            k=1)[0][1]
+
+        def explain(dirs=dirs, doc_id=doc_id):
+            assert explain_big_federated(spark, dirs, "def return",
+                                         doc_id)["score"] > 0
+
+        def facets(dirs=dirs):
+            assert facets_federated(spark, dirs, ["def", "return"],
+                                    ["lang"])["lang"]
         assert jobs_of(spark, run) == 1, dirs
         assert jobs_of(spark, phrase) == 1, dirs
+        assert jobs_of(spark, explain) == 1, dirs
+        assert jobs_of(spark, facets) == facet_jobs, dirs

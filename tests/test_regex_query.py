@@ -23,7 +23,7 @@ import pytest
 import regex
 from hypothesis import given, settings, strategies as st
 
-from engine.regex_query import (regex_candidates, regex_search,
+from engine.regex_query import (regex_candidates, regex_search_federated,
                                 required_clauses)
 from engine.tokenizer import tokenize, tokenize_with_offsets
 
@@ -159,7 +159,7 @@ def test_bad_pattern_raises():
     with pytest.raises(re.error):
         required_clauses(r"(unclosed")
     with pytest.raises(re.error):
-        regex_search(None, None, None, r"[bad")
+        regex_search_federated(None, None, None, r"[bad")
 
 
 _ATOMS = ["foo", "bar", "Baz", "get", "Set", "Value", "new", "x", "_",
@@ -215,10 +215,11 @@ def test_regex_search_matches_oracle(spark, built_index, source_df,
                                      fixture_corpus_pdf, pattern):
     idx, _ = built_index
     got = {r["doc_id"] for r in
-           regex_search(spark, idx, source_df, pattern).collect()}
+           regex_search_federated(spark, [idx], source_df,
+                                  pattern).collect()}
     unpruned = {r["doc_id"] for r in
-                regex_search(spark, idx, source_df, pattern,
-                             prune=False).collect()}
+                regex_search_federated(spark, [idx], source_df, pattern,
+                                       prune=False).collect()}
     rx = re.compile(pattern)
     want = {int(d) for d, c in zip(fixture_corpus_pdf["doc_id"],
                                    fixture_corpus_pdf["content"])
@@ -309,10 +310,12 @@ def test_regex_endpoint_answers_nested_quantifiers(regex_served):
         assert isinstance(json.loads(resp.read().decode()), list)
 
 
-def test_regex_verify_timeout_is_a_400(spark, built_index, tmp_path):
+def test_regex_verify_timeout_is_a_400(spark, built_index, tmp_path,
+                                       fixture_corpus_pdf):
     """A pattern whose backtracking outlasts the per-document verify
     budget fails the request with a 400 naming the cause — the document
-    is never silently dropped."""
+    is never silently dropped. The source rows carry served doc ids: /regex
+    verifies the index's docs only."""
     import json
     import threading
     import urllib.error
@@ -323,7 +326,8 @@ def test_regex_verify_timeout_is_a_400(spark, built_index, tmp_path):
     from engine.server import SearchService, make_server
     idx, _ = built_index
     src = str(tmp_path / "src")
-    spark.createDataFrame([(1, "a" * 40 + "b"), (2, "plain text")],
+    slow, plain = (int(d) for d in fixture_corpus_pdf["doc_id"].iloc[:2])
+    spark.createDataFrame([(slow, "a" * 40 + "b"), (plain, "plain text")],
                           "doc_id long, content string").write.parquet(src)
     srv = make_server(SearchService(spark, idx, source_path=src), port=0)
     threading.Thread(target=srv.serve_forever, daemon=True).start()
@@ -342,10 +346,12 @@ def test_empty_and_zero_row_source(spark, built_index, source_df):
     idx, _ = built_index
     # prunable pattern with an empty candidate set: no verify scan needed,
     # still returns a well-formed empty frame
-    out = regex_search(spark, idx, source_df, r"zzz_not_in_corpus\b")
+    out = regex_search_federated(spark, [idx], source_df,
+                                 r"zzz_not_in_corpus\b")
     assert out.count() == 0 and out.columns == ["doc_id"]
     # zero-row source through the mapInPandas verify path
-    out2 = regex_search(spark, idx, source_df.limit(0), r"[a-z]+")
+    out2 = regex_search_federated(spark, [idx], source_df.limit(0),
+                                  r"[a-z]+")
     assert out2.count() == 0
 
 
@@ -354,7 +360,7 @@ def test_empty_and_zero_row_source(spark, built_index, source_df):
 def test_regex_federated_nrt_with_tombstone(spark, tmp_path):
     """VERDICT r4 #2: /regex over the NRT federation — a freshly ingested
     (uncompacted) doc is regex-visible, a tombstoned doc is not, and the
-    result set equals single-index regex_search on a monolithic batch
+    result set equals the single-index search on a monolithic batch
     index of the same docs minus the tombstone. Per-segment candidate
     pruning must actually engage (the pattern has selective required
     terms in every segment)."""
@@ -405,7 +411,7 @@ def test_regex_federated_nrt_with_tombstone(spark, tmp_path):
     fed = FederatedSearchService(spark, work_dir=work, out_dir=out,
                                  partitions=4, source_path=src_pq)
     assert len(fed.index_dirs) == 2
-    assert fed._excl_bcs is not None  # the tombstone actually loaded
+    assert fed._view.excludes is not None  # the tombstone actually loaded
 
     # per-segment pruning engaged: every member derives a candidate frame
     for d in fed.index_dirs:
@@ -425,9 +431,9 @@ def test_regex_federated_nrt_with_tombstone(spark, tmp_path):
     corpus_df = spark.read.parquet(src_pq).select(
         "doc_id", "content")
     pruned = regex_search_federated(spark, fed.index_dirs, corpus_df,
-                                    pattern, excludes=fed._excl_bcs)
+                                    pattern, excludes=fed._view.excludes)
     full = regex_search_federated(spark, fed.index_dirs, corpus_df,
-                                  pattern, excludes=fed._excl_bcs,
+                                  pattern, excludes=fed._view.excludes,
                                   prune=False)
     assert sorted(r["doc_id"] for r in pruned.collect()) == \
         sorted(r["doc_id"] for r in full.collect()) == sorted(got_ids)

@@ -170,27 +170,33 @@ def test_big_service_matches_driver_and_never_materializes(
     big_svc.close()
 
 
-def test_big_service_warm_start(spark, built_index):
-    """VERDICT r3 #8: the big regime persists the index/docs frames at
-    construction so repeated queries reuse cached partitions instead of
-    re-reading parquet; repeats stay byte-identical and close() releases
-    the cache."""
+def _cached_rdds(spark) -> set[int]:
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return {infos[i].id() for i in range(len(infos))}
+
+
+def test_big_service_caches_nothing(spark, built_index):
+    """The big regime builds its member frames once and persists none of
+    them: repeated requests stay byte-identical, and they leave no cached
+    RDD behind."""
+    from engine.query import search_big
     out, _man = built_index
+    before = _cached_rdds(spark)
     svc = SearchService(spark, out, big=True)
     try:
-        member = svc.members[0]  # the federation of one's member record
-        assert member._index_df.storageLevel.useMemory
-        assert member._docs_df.storageLevel.useMemory
-        first = svc.search_payload("def return", k=5)
-        assert first and svc.search_payload("def return", k=5) == first
-        # the persisted index is genuinely cached after the first query
-        jsc = spark.sparkContext._jsc.sc()
-        infos = jsc.getRDDStorageInfo()
-        assert any(infos[i].numCachedPartitions() > 0
-                   for i in range(len(infos)))
+        doc_id = search_big(spark, out, "def return", k=1)[0][1]
+
+        def requests():
+            return [svc.search_payload("def return", k=5),
+                    svc.search_payload("de*", k=5),
+                    svc.facets("def return", ["lang"]),
+                    svc.explain_payload("def return", doc_id)]
+        first = requests()
+        assert all(first)
+        assert requests() == first and requests() == first
+        assert _cached_rdds(spark) <= before
     finally:
         svc.close()
-    assert member._index_df is None
 
 
 def test_phrase_and_wildcard_served(spark, built_index, fixture_corpus_pdf):
