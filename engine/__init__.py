@@ -16,6 +16,10 @@ re-expressed Spark-first per SURVEY.md:
   (reference: searchEngine/src/cis5550/search/Searcher.java:108,113,139-159)
 """
 
+from .compat import install as _install_compat
+
+_install_compat()  # before any task runs engine code on a worker
+
 __version__ = "0.1.0"
 
 K1 = 1.2

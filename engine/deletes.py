@@ -108,12 +108,19 @@ def tombstones_frame(spark: SparkSession, files: list[str]
 
 def _canonical(tomb: DataFrame, aliases: DataFrame | None) -> DataFrame:
     """Tombstoned doc_ids resolved through the alias map to their
-    canonical (chains have length <= 1 in a deduped index)."""
+    canonical (chains have length <= 1 in a deduped index): the
+    canonicals of the tombstoned aliases, plus the tombstoned ids that
+    are no alias. Both joins broadcast their tombstone-sized side (a
+    left outer join from the tombstones could only build the alias
+    side, so a broadcast hint on the tombstones was dropped)."""
     if aliases is None:
         return tomb
-    return (tomb.join(aliases.select("doc_id", "canonical_doc_id"),
-                      "doc_id", "left")
-            .select(F.coalesce("canonical_doc_id", "doc_id").alias("doc_id")))
+    hit = (aliases.select("doc_id", "canonical_doc_id")
+           .join(F.broadcast(tomb), "doc_id"))
+    rest = tomb.join(F.broadcast(hit.select("doc_id")), "doc_id",
+                     "left_anti")
+    return (hit.select(F.col("canonical_doc_id").alias("doc_id"))
+            .unionByName(rest))
 
 
 def _aliases_frame(spark: SparkSession, index_dir: str) -> DataFrame | None:
@@ -130,11 +137,12 @@ def dead_sha_frame(docs_union: DataFrame, aliases: DataFrame | None,
     """The content_sha256 values of every tombstoned doc's content class:
     tombstoned ids resolve through the alias map to their canonical
     (chains have length <= 1 in a deduped index), then to the canonical's
-    sha. Unknown ids simply don't join — idempotent. All sides here are
-    tombstone-sized; the caller broadcasts the result against the doc
-    table."""
+    sha. Unknown ids simply don't join — idempotent. The resolved ids
+    are tombstone-sized and broadcast against the doc table, and so is
+    the result, by the caller."""
     return (docs_union.select("doc_id", "content_sha256")
-            .join(_canonical(tomb, aliases).distinct(), "doc_id")
+            .join(F.broadcast(_canonical(tomb, aliases).distinct()),
+                  "doc_id")
             .select("content_sha256").distinct())
 
 
@@ -174,7 +182,6 @@ def member_exclusions(spark: SparkSession, members: list,
     when nothing is excluded."""
     if tomb is None:
         return None
-    tomb = F.broadcast(tomb)
     sha_parts = []
     id_parts = []
     for s in members:

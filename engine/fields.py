@@ -161,7 +161,8 @@ def search_big_fielded_federated(spark: SparkSession,
                                  path_dfs: list | None = None,
                                  excludes: list | None = None,
                                  filters: dict[str, str] | None = None,
-                                 not_terms: list[str] | None = None
+                                 not_terms: list[str] | None = None,
+                                 display: dict | None = None
                                  ) -> list[tuple[int, int, float]]:
     """BM25F (score = bm25_body + w*bm25_path) over a doc-disjoint
     federation WITHOUT any driver-side doc arrays — the big regime's
@@ -183,7 +184,8 @@ def search_big_fielded_federated(spark: SparkSession,
     The per-member path df stays a Spark aggregate: a token like ``py``
     has O(N) path postings, which must not reach the driver. path_dfs:
     per-member path_index frames (else read, the stage ensured
-    first)."""
+    first). display: filled with the result rows' display fields, read
+    in the same tasks (query._member_topks)."""
     from .query import (
         _check_columns,
         _excl_value,
@@ -225,5 +227,5 @@ def search_big_fielded_federated(spark: SparkSession,
         return rows, seg.counters(terms)
 
     merged, last_fielded_prune_stats = _member_topks(spark, index_dirs,
-                                                     score)
+                                                     score, display)
     return _merge_federated(merged, k)

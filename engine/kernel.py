@@ -150,6 +150,33 @@ def read_docs(index_dir: str, columns: list[str]) -> dict[str, pa.Array]:
     return {c: tbl.column(c) for c in columns}
 
 
+#: the docs-snapshot columns a result row displays from
+DISPLAY = ("repo", "path", "commit", "title", "snippet")
+
+
+def display_of(row: dict) -> tuple[str, str, str]:
+    """(url, title, body) of one docs row: url is repo/path@commit (the
+    doc_id for a stats-only snapshot), body the stored leading snippet."""
+    url = (f'{row["repo"]}/{row.get("path")}@{row.get("commit")}'
+           if row.get("repo") is not None else str(row["doc_id"]))
+    return url, row.get("title") or "", row.get("snippet") or ""
+
+
+def read_display(index_dir: str, doc_ids: list[int]
+                 ) -> dict[int, tuple[str, str, str]]:
+    """doc_id -> display_of for the ``doc_ids`` this segment holds, in one
+    doc_id-filtered read of its docs snapshot (a result page's k rows).
+    The filter prunes no row group of the build's docs layout, so the
+    read decodes the snapshot's display columns whole."""
+    if not doc_ids:
+        return {}
+    dset = _stage(index_dir, "docs")
+    cols = ["doc_id", *(c for c in DISPLAY if c in dset.schema.names)]
+    tbl = dset.to_table(columns=cols,
+                        filter=pc.field("doc_id").isin(list(doc_ids)))
+    return {int(r["doc_id"]): display_of(r) for r in tbl.to_pylist()}
+
+
 def canonical_id(index_dir: str, doc_id: int) -> int:
     """The canonical doc_id of an alias (a duplicate the build dropped
     from docs) in this segment, else ``doc_id`` itself. The manifest

@@ -195,19 +195,20 @@ def more_like_this_federated(spark: SparkSession, index_dirs: list[str],
                              excludes: list | None = None,
                              filters: dict[str, str] | None = None,
                              not_terms: list[str] | None = None,
-                             ensure: bool = True
+                             ensure: bool = True,
+                             display: dict | None = None
                              ) -> list[tuple[int, int, float]]:
     """More-like-this over a federation (the big regime's only MLT; one
     index is the federation of one): federation-weighted interesting-term
     expansion (mlt_terms_federated; ``ensure`` as there), then the shared
     federated ranked tail with k+1 fetch and source-doc drop — equal to
     the driver regime's more_like_this on the merged index (tests assert
-    it)."""
+    it). display: as in query.search_big_terms_federated."""
     from .query import search_big_terms_federated
     doc_id, terms = mlt_terms_federated(spark, index_dirs, doc_id, m=m,
                                         ensure=ensure)
     rows = search_big_terms_federated(spark, index_dirs, terms, k=k + 1,
                                       mode="ranked", rounded=rounded,
                                       excludes=excludes, filters=filters,
-                                      not_terms=not_terms)
+                                      not_terms=not_terms, display=display)
     return _drop_source(rows, doc_id, k)

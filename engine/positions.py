@@ -704,7 +704,8 @@ def search_positional_federated(spark: SparkSession, index_dirs: list[str],
                                 terms: list[str], slop: int | None = None,
                                 k: int = 10, excludes: list | None = None,
                                 filters: dict[str, str] | None = None,
-                                not_terms: list[str] | None = None
+                                not_terms: list[str] | None = None,
+                                display: dict | None = None
                                 ) -> list[tuple[int, int, int]]:
     """PhraseEngine.topk over a federation of doc-disjoint segments in ONE
     Spark job, a task per member (query._member_topks): no doc array and
@@ -712,7 +713,9 @@ def search_positional_federated(spark: SparkSession, index_dirs: list[str],
     doc-local, so the members' top-ks merge exactly by (n_occ DESC,
     doc_id ASC) — ordinals ascend with doc_id within and across segments —
     and restriction inside each member commutes with the merge.
-    excludes: per-member dead-ordinal arrays or Broadcasts."""
+    excludes: per-member dead-ordinal arrays or Broadcasts; display: filled
+    with the result rows' display fields, read in the same tasks
+    (query._member_topks)."""
     if (not terms or k <= 0 or not index_dirs
             or (slop is not None and slop < 1)):
         return []
@@ -723,5 +726,5 @@ def search_positional_federated(spark: SparkSession, index_dirs: list[str],
             terms, slop, k, filters, not_terms,
             _excl_value(excludes[i]) if excludes else None), (0, 0, [])
 
-    per, _counters = _member_topks(spark, index_dirs, score)
+    per, _counters = _member_topks(spark, index_dirs, score, display)
     return [(r, d, int(n)) for r, d, n in _merge_federated(per, k)]

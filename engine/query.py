@@ -13,9 +13,14 @@ regimes:
 - big (zero driver arrays): each doc-disjoint federation member runs the
   same kernel inside one Spark task under the federation's weights, all
   members in one job (member_frame): top-k and phrase matches collect
-  the k×S rows (_member_topks), /explain the owning member's breakdown
+  the k×S rows together with their display fields, read in the same
+  task (_member_topks) for members of up to TASK_DISPLAY_MAX_DOCS docs,
+  so a ranked request over such members is one job from query to
+  rendered page; /explain the owning member's breakdown
   (explain_big_federated), /facets the members' histograms reduced by
-  one groupBy and a per-field rank (facets_federated).
+  one groupBy and a per-field rank (facets_federated). The worker that
+  runs a task is reused across requests; engine.compat keeps CPython
+  3.11 from re-reading pyspark.zip's directory at each of its tasks.
 
 Scoring: BM25 (k1=1.2, b=0.75) per BASELINE.json north_rule, conjunctive
 (AND) and ranked (OR) modes, tie-break score DESC then doc_id ASC, bitwise
@@ -44,6 +49,7 @@ from .kernel import (
     docs_columns,
     missing_column,
     read_dictionary,
+    read_display,
 )
 from .tokenizer import query_terms
 
@@ -317,25 +323,54 @@ def member_frame(spark: SparkSession, n: int, rows, schema: pa.Schema):
                                               from_arrow_schema(schema))
 
 
+#: the largest member (docs) whose scoring task reads its result rows'
+#: display fields. kernel.read_display decodes the display columns of
+#: the whole docs stage (one row group per docs file, so a doc_id filter
+#: prunes nothing), and its cost outgrows that of the resolve job it
+#: saves, which prunes by page index. Median ranked search_payload,
+#: in-task read vs resolve job (local[4] on 4 vCPUs, 5 alternating
+#: pairs per size): 558 vs 865 ms at 200k docs, 1007 vs 1237 ms at
+#: 500k, 2348 vs 2117 ms at 1M.
+TASK_DISPLAY_MAX_DOCS = 500_000
+
 _TOPK = pa.schema([("doc_ids", pa.list_(pa.int64())),
                    ("scores", pa.list_(pa.float64())),
+                   ("display", pa.list_(pa.list_(pa.string()))),
                    ("total", pa.int64()), ("skipped", pa.int64()),
                    ("pruned", pa.list_(pa.string()))])
 
 
-def _member_topks(spark: SparkSession, index_dirs: list[str], score
+def _member_topks(spark: SparkSession, index_dirs: list[str], score,
+                  display: dict | None = None
                   ) -> tuple[list[tuple[int, float]], dict[str, int]]:
     """Run ``score(i)`` for every federation member i in one member_frame
     job. score(i) -> (rows, kernel.Segment.counters): only a member's k
     (doc_id, score) rows and counters reach the driver. Returns the k×S
-    rows for _merge_federated and the summed counters."""
+    rows for _merge_federated and the summed counters.
+
+    display: when given, filled with doc_id -> (url, title, body) of
+    the rows of each member of at most TASK_DISPLAY_MAX_DOCS docs, read
+    by its task from its own docs snapshot (kernel.read_display), so a
+    result page over such members needs no second job to resolve its
+    display fields. A larger member's rows are left for the caller's
+    resolve job."""
+    from .index_build import load_stats_totals
+    shows = [display is not None
+             and load_stats_totals(d)[0] <= TASK_DISPLAY_MAX_DOCS
+             for d in index_dirs]
+
     def rows(i):
         hits, (total, skipped, pruned) = score(i)
-        return [{"doc_ids": [d for _r, d, _s in hits],
-                 "scores": [s for _r, _d, s in hits],
+        ids = [d for _r, d, _s in hits]
+        shown = read_display(index_dirs[i], ids) if shows[i] else {}
+        return [{"doc_ids": ids, "scores": [s for _r, _d, s in hits],
+                 "display": [shown.get(d) for d in ids],
                  "total": total, "skipped": skipped, "pruned": pruned}]
 
     got = member_frame(spark, len(index_dirs), rows, _TOPK).collect()
+    if display is not None:
+        display.update((d, tuple(t)) for r in got
+                       for d, t in zip(r["doc_ids"], r["display"]) if t)
     total = sum(r["total"] for r in got)
     skipped = sum(r["skipped"] for r in got)
     return ([(d, s) for r in got for d, s in zip(r["doc_ids"], r["scores"])],
@@ -348,7 +383,8 @@ _EXPLAIN = pa.schema([("alias", pa.bool_()), ("payload", pa.string())])
 
 
 def explain_big_federated(spark: SparkSession, index_dirs: list[str],
-                          query: str, doc_id: int) -> dict:
+                          query: str, doc_id: int,
+                          excludes: list | None = None) -> dict:
     """GET /explain over a federation in ONE job: each member's task maps
     ``doc_id`` through its own aliases stage (kernel.canonical_id) and,
     when it owns the doc, answers kernel.Segment.explain under the
@@ -356,14 +392,18 @@ def explain_big_federated(spark: SparkSession, index_dirs: list[str],
     n_docs/avgdl the federation's integer sums, so ``score`` is bitwise
     what the federated ranker scores this doc, and a term only another
     member holds shows the merged index's df/idf. The other members
-    yield nothing."""
+    yield nothing, and so does the owner when the canonical doc is
+    among its dead ordinals ``excludes`` (a logical delete): such a doc
+    is unknown, as it is to every /search mode."""
     terms = query_terms(query)
     w = _federation_weights(index_dirs, terms)
 
     def rows(i):
         canon = canonical_id(index_dirs[i], doc_id)
         seg = Segment(index_dirs[i], w.n_docs, w.avgdl, df=w.df)
-        if seg.ordinal_of(canon) is None:
+        ordinal = seg.ordinal_of(canon)
+        dead = _excl_value(excludes[i]) if excludes else None
+        if ordinal is None or (dead is not None and ordinal in dead):
             return []
         return [{"alias": canon != doc_id,
                  "payload": json.dumps(seg.explain(terms, canon))}]
@@ -437,7 +477,8 @@ def search_big_terms_federated(spark: SparkSession, index_dirs: list[str],
                                prune: bool = True,
                                excludes: list | None = None,
                                filters: dict[str, str] | None = None,
-                               not_terms: list[str] | None = None
+                               not_terms: list[str] | None = None,
+                               display: dict | None = None
                                ) -> list[tuple[int, int, float]]:
     """search_big_federated over an explicit term list (see there) — the
     federated tail every big-regime BM25 query (plain, wildcard, fuzzy,
@@ -451,7 +492,10 @@ def search_big_terms_federated(spark: SparkSession, index_dirs: list[str],
     stats-until-merge). filters/not_terms restrict each segment's
     candidates before θ is taken (metadata filters are doc-local; a NOT
     term's exclusion set is segment-local ordinals) — restriction commutes
-    with the k×S merge because every doc lives in exactly one segment."""
+    with the k×S merge because every doc lives in exactly one segment.
+    display: filled with the result rows' display fields, read in the
+    same tasks (_member_topks; a member past TASK_DISPLAY_MAX_DOCS
+    leaves its rows out)."""
     global last_big_prune_stats
     terms = sorted(set(terms))
     if not terms or k <= 0 or not index_dirs:
@@ -474,7 +518,8 @@ def search_big_terms_federated(spark: SparkSession, index_dirs: list[str],
                         else None)
         return rows, seg.counters(terms)
 
-    merged, last_big_prune_stats = _member_topks(spark, index_dirs, score)
+    merged, last_big_prune_stats = _member_topks(spark, index_dirs, score,
+                                                 display)
     return _merge_federated(merged, k)
 
 
@@ -483,7 +528,8 @@ def search_big_tfidf_federated(spark: SparkSession, index_dirs: list[str],
                                threshold: float = 0.3,
                                excludes: list | None = None,
                                filters: dict[str, str] | None = None,
-                               not_terms: list[str] | None = None
+                               not_terms: list[str] | None = None,
+                               display: dict | None = None
                                ) -> list[tuple[int, int, float]]:
     """The reference's TF-IDF scoring over a doc-disjoint federation —
     same exactness argument as search_big_federated: per-segment scores
@@ -491,7 +537,8 @@ def search_big_tfidf_federated(spark: SparkSession, index_dirs: list[str],
     `score > threshold` filters identically, so the k×S merge is exact
     (logical deletes, being doc-local, filter identically too — as do
     metadata filters and NOT-term exclusions). Each member runs
-    kernel.Segment.tfidf_topk in its own task."""
+    kernel.Segment.tfidf_topk in its own task; display as in
+    search_big_terms_federated."""
     terms = query_terms(query)
     if not terms or k <= 0 or not index_dirs:
         return []
@@ -509,7 +556,7 @@ def search_big_tfidf_federated(spark: SparkSession, index_dirs: list[str],
             exclude=_excl_value(excludes[i]) if excludes else None), \
             (0, 0, [])
 
-    merged, _counters = _member_topks(spark, index_dirs, score)
+    merged, _counters = _member_topks(spark, index_dirs, score, display)
     return _merge_federated(merged, k)
 
 
@@ -532,7 +579,8 @@ def search_big_prefix_federated(spark: SparkSession, index_dirs: list[str],
                                 idx_dfs: list | None = None,
                                 excludes: list | None = None,
                                 filters: dict[str, str] | None = None,
-                                not_terms: list[str] | None = None
+                                not_terms: list[str] | None = None,
+                                display: dict | None = None
                                 ) -> list[tuple[int, int, float]]:
     """Wildcard `prefix*` over a federation: the expansion rule of
     expand_prefix_big over the union dictionary (so it equals the merged
@@ -542,7 +590,8 @@ def search_big_prefix_federated(spark: SparkSession, index_dirs: list[str],
     terms = expand_prefix_big(union_dictionary(idx_dfs), prefix)
     return search_big_terms_federated(spark, index_dirs, terms, k=k,
                                       rounded=rounded, excludes=excludes,
-                                      filters=filters, not_terms=not_terms)
+                                      filters=filters, not_terms=not_terms,
+                                      display=display)
 
 
 def search_big_fuzzy_federated(spark: SparkSession, index_dirs: list[str],
@@ -551,7 +600,8 @@ def search_big_fuzzy_federated(spark: SparkSession, index_dirs: list[str],
                                idx_dfs: list | None = None,
                                excludes: list | None = None,
                                filters: dict[str, str] | None = None,
-                               not_terms: list[str] | None = None
+                               not_terms: list[str] | None = None,
+                               display: dict | None = None
                                ) -> list[tuple[int, int, float]]:
     """Fuzzy `term~` over a federation: ED<=1 expansion on the union
     dictionary (df sums; each member's candidates from its fuzzy stage
@@ -561,7 +611,8 @@ def search_big_fuzzy_federated(spark: SparkSession, index_dirs: list[str],
     terms = expand_fuzzy_federated(idx_dfs, term, index_dirs=index_dirs)
     return search_big_terms_federated(spark, index_dirs, terms, k=k,
                                       rounded=rounded, excludes=excludes,
-                                      filters=filters, not_terms=not_terms)
+                                      filters=filters, not_terms=not_terms,
+                                      display=display)
 
 
 def expand_prefix_big(index_df, prefix: str) -> list[str]:

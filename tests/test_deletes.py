@@ -313,3 +313,61 @@ def test_refresh_never_serves_a_tombstoned_doc(spark, tmp_path,
         assert refresh.result(timeout=300) == fed.index_dirs
     assert during == before
     assert fed.search_payload(q, k=50) == before
+
+
+def test_explain_of_a_tombstoned_doc_is_unknown(spark, tmp_path):
+    """GET /explain on the NRT view answers "unknown doc_id" (a 400) for a
+    logically deleted doc, as every /search mode leaves it out; the same
+    members without their exclusions still explain it."""
+    from engine.server import FederatedSearchService
+    from engine.tokenizer import tokenize
+
+    pdf = make_corpus(80, seed=73)
+    src, work, out = (str(tmp_path / d) for d in ("src", "work", "out"))
+    os.makedirs(src)
+    _ingest_wave(spark, pdf, src, work)
+    compact_incremental(spark, work, out, partitions=4)
+    dead, live = (pdf.iloc[i] for i in (0, 1))
+    delete_docs(work, [int(dead.doc_id)])
+    fed = FederatedSearchService(spark, work_dir=work, out_dir=out,
+                                 partitions=4)
+    q = tokenize(dead.content)[0]
+    try:
+        plain = FederatedSearchService(spark, fed.index_dirs)
+        assert plain.explain_payload(q, int(dead.doc_id))["score"] > 0
+        with pytest.raises(ValueError, match="unknown doc_id"):
+            fed.explain_payload(q, int(dead.doc_id))
+        assert fed.explain_payload(q, int(live.doc_id)) == \
+            plain.explain_payload(q, int(live.doc_id))
+    finally:
+        fed.close()
+
+
+def test_alias_resolution_broadcasts_the_tombstones(spark, tmp_path):
+    """deletes._canonical (member_exclusions' and filter_dead's alias
+    resolution) maps a tombstoned alias to its canonical and keeps any
+    other id, with both joins planned as broadcast hash joins even when
+    Spark would broadcast nothing by size."""
+    from engine.deletes import _aliases_frame, _canonical, tombstones_frame
+    from tests.test_dedup import _with_duplicates
+
+    big, alias_map = _with_duplicates(make_corpus(60, seed=17), 3)
+    idx = str(tmp_path / "idx")
+    build_index(spark, corpus_to_spark(spark, big), idx, n_salts=2,
+                partitions=2)
+    alias, canon = next(iter(alias_map.items()))
+    plain = int(big.iloc[10]["doc_id"])
+    files = [delete_docs(str(tmp_path / "w"), [alias, plain, 12345])]
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        got = _canonical(tombstones_frame(spark, files),
+                         _aliases_frame(spark, idx))
+        assert sorted(r["doc_id"] for r in got.collect()) == \
+            sorted([int(canon), plain, 12345])
+        plan = got._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    assert "BroadcastHashJoin" in plan, plan
+    assert "SortMergeJoin" not in plan, plan

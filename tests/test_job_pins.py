@@ -7,8 +7,8 @@ group ran are counted (``setJobGroup`` + ``statusTracker``). A count may
 go down, never up: ``BIG_JOBS`` holds the counts measured for the big
 serving regime once every BM25/TF-IDF/BM25F top-k, phrase/NEAR match,
 facet histogram and score explanation ran as one kernel task per member
-(one job, plus the 1-job display resolve of a result list), and a warm
-driver-regime query runs no Spark job at all — nor does a cold
+— one job, whose tasks also read the result rows' display fields — and
+a warm driver-regime query runs no Spark job at all — nor does a cold
 phrase/NEAR one.
 
 Stages that change the plan (positions, the fuzzy deletion table, the
@@ -26,19 +26,19 @@ _gid = itertools.count()
 
 #: jobs per warm request of ``serve --big`` (SearchService(big=True))
 BIG_JOBS = {
-    "ranked": 2,
-    "conjunctive": 2,
-    "filter": 2,
-    "not": 2,
-    "snippet": 2,
-    "offset": 2,
-    "tfidf": 2,
-    "bm25f": 3,
-    "wildcard": 4,
-    "fuzzy": 5,
-    "phrase": 2,
-    "phrase_slop": 2,
-    "near": 2,
+    "ranked": 1,
+    "conjunctive": 1,
+    "filter": 1,
+    "not": 1,
+    "snippet": 1,
+    "offset": 1,
+    "tfidf": 1,
+    "bm25f": 2,
+    "wildcard": 3,
+    "fuzzy": 4,
+    "phrase": 1,
+    "phrase_slop": 1,
+    "near": 1,
     "explain": 1,
     "suggest": 1,
     "didyoumean": 4,
@@ -138,7 +138,9 @@ def test_federated_kernel_is_one_job(spark, staged, tmp_path):
     Spark job (a task per member): over one segment and over two
     doc-disjoint ones. facets_federated adds its reduce to that job: none
     over one segment (a single partition needs no exchange), the groupBy
-    and the per-field rank over two."""
+    and the per-field rank over two. A service's search_payload over two
+    members is that one job too: the scoring tasks return the display
+    fields of their rows."""
     from engine.corpus import corpus_to_spark, make_corpus
     from engine.index_build import build_index
     from engine.positions import search_positional_federated
@@ -147,6 +149,7 @@ def test_federated_kernel_is_one_job(spark, staged, tmp_path):
         facets_federated,
         search_big_terms_federated,
     )
+    from engine.server import FederatedSearchService
 
     pdf = make_corpus(160, seed=91)
     a, b = str(tmp_path / "a"), str(tmp_path / "b")
@@ -178,3 +181,32 @@ def test_federated_kernel_is_one_job(spark, staged, tmp_path):
         assert jobs_of(spark, phrase) == 1, dirs
         assert jobs_of(spark, explain) == 1, dirs
         assert jobs_of(spark, facets) == facet_jobs, dirs
+
+    svc = FederatedSearchService(spark, [a, b])
+    urls = {f"{r.repo}/{r.path}@{r.commit}" for r in pdf.itertuples()}
+    got = []
+
+    def payload():
+        got[:] = svc.search_payload("def return", k=5, snippet=True)
+    payload()  # warm
+    assert jobs_of(spark, payload) == 1
+    assert len(got) == 5 and all(r["url"] in urls for r in got), got
+
+
+def test_large_member_display_resolves_in_one_more_job(spark, built_index,
+                                                       monkeypatch):
+    """A member past query.TASK_DISPLAY_MAX_DOCS leaves its rows' display
+    fields to resolve_many: the same payload, one more job."""
+    from engine import query
+    from engine.server import FederatedSearchService
+
+    svc = FederatedSearchService(spark, [built_index[0]])
+    got = []
+
+    def payload():
+        got.append(svc.search_payload("def return", k=5, snippet=True))
+    payload()  # warm
+    assert jobs_of(spark, payload) == 1
+    monkeypatch.setattr(query, "TASK_DISPLAY_MAX_DOCS", 0)
+    assert jobs_of(spark, payload) == 2
+    assert got[-1] == got[-2] and len(got[-1]) == 5
